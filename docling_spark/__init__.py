@@ -6,8 +6,10 @@ Design (see SURVEY.md):
 - One row per document: ``(doc_id: string, spans: array<struct<kind, text,
   media_ref, offset>>)`` — the authoritative shape from BASELINE.json.
 - Every extraction stage is document-local, so the whole pipeline is a single
-  narrow ``mapInPandas`` stage over the scan: **zero shuffles** end-to-end.
-  Documents are the vectorization axis; Arrow batches carry many docs at once.
+  narrow ``mapInArrow`` stage over the scan: **zero shuffles** end-to-end.
+  ``docmap.map_documents`` runs it and every later span stage (enrichment,
+  sinks, chunkers). Documents are the vectorization axis; Arrow batches carry
+  many docs at once.
 - Cross-document work (dedup, similarity, metrics rollups) uses native
   DataFrame ops so Catalyst/AQE handle pushdown, pruning, and skew.
 """

@@ -1,0 +1,145 @@
+"""One per-document Arrow map for every stage that consumes spans.
+
+`map_documents(df, fn, schema)` runs `fn(doc_id, spans)` once per document
+inside a single narrow `mapInArrow` stage. This module is the only code that
+knows how spans cross the Arrow boundary:
+
+- **Input.** The span struct's children convert to Python lists once per
+  batch (`to_numpy(...).tolist()`: `Array.to_pylist()` builds one Arrow
+  scalar per element and cost more than the stages' own work). `fn` gets a
+  list of `(kind, text, media_ref)` tuples, or `(kind, text, media_ref,
+  flags)` when asked for the optional `fmt` column (array<string> aligned
+  with spans; a shorter list pads with ""). A null `spans` value is an empty
+  document.
+- **Output.** `fn` returns the document's output rows as a list of tuples.
+  The helper builds a batch that matches the Arrow schema of the declared
+  DDL exactly. A span-array column takes, per row, a sequence of tuples
+  whose first three elements are `(kind, text, media_ref)`; it is built
+  from flat child lists plus list offsets, with dense `offset`s assigned.
+- **Passthrough.** Declared fields beyond the width of `fn`'s rows are copied
+  from the input column of the same name for each output row, so a caller's
+  extra columns bind in declared order, whatever the input's column order.
+
+Per-document work stays plain Python over one document (the vectorization
+axis is documents per Arrow batch); only the marshaling is columnar.
+"""
+
+from __future__ import annotations
+
+from typing import Callable, List, Sequence, Tuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
+
+DocFn = Callable[[object, List[tuple]], Sequence[tuple]]
+
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    """Spark DDL → the Arrow schema `mapInArrow` reads for it. The DDL parse
+    needs an active Spark session, so this runs on the driver."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(ddl))
+
+
+def _strings(arr: pa.Array) -> list:
+    return arr.to_numpy(zero_copy_only=False).tolist()
+
+
+def _lists(col: pa.Array) -> Tuple[pa.Array, List[int]]:
+    """list<…> column → (its values in row order, row bounds); a null row is
+    an empty list. Honors a sliced column's offset."""
+    lengths = pc.list_value_length(col).fill_null(0).to_numpy()
+    return col.flatten(), np.concatenate(([0], np.cumsum(lengths))).tolist()
+
+
+def _decode(rb: pa.RecordBatch, with_fmt: bool) -> Tuple[list, List[List[tuple]]]:
+    names = rb.schema.names
+    doc_ids = rb.column(names.index("doc_id")).to_pylist()
+    vals, bounds = _lists(rb.column(names.index("spans")))
+    # StructArray.flatten merges a null struct's validity into its children
+    children = dict(zip((f.name for f in vals.type), vals.flatten()))
+    cols = [_strings(children[n]) for n in SPAN_FIELDS[:3]]
+    if with_fmt and "fmt" in names:
+        fvals, fbounds = _lists(rb.column(names.index("fmt")))
+        flags = _strings(fvals)
+        padded: list = []
+        for i in range(len(doc_ids)):
+            n = bounds[i + 1] - bounds[i]
+            mine = flags[fbounds[i]: min(fbounds[i + 1], fbounds[i] + n)]
+            padded += mine
+            padded += [""] * (n - len(mine))
+        cols.append(padded)
+    spans = list(zip(*cols))
+    return doc_ids, [spans[bounds[i]: bounds[i + 1]] for i in range(len(doc_ids))]
+
+
+def _is_span_list(typ: pa.DataType) -> bool:
+    return (
+        pa.types.is_list(typ)
+        and pa.types.is_struct(typ.value_type)
+        and tuple(f.name for f in typ.value_type) == SPAN_FIELDS
+    )
+
+
+def _span_column(docs: Sequence[Sequence[tuple]], typ: pa.DataType) -> pa.Array:
+    lengths = np.fromiter((len(s) for s in docs), np.int32, len(docs))
+    offsets = np.zeros(len(docs) + 1, np.int32)
+    np.cumsum(lengths, out=offsets[1:])
+    flat = [s for spans in docs for s in spans]
+    values = list(zip(*flat))[:3] if flat else [(), (), ()]
+    dense = np.arange(len(flat), dtype=np.int32) - np.repeat(offsets[:-1], lengths)
+    struct_t = typ.value_type
+    children = [pa.array(v, struct_t[i].type) for i, v in enumerate(values)]
+    children.append(pa.array(dense, struct_t[3].type))
+    struct = pa.StructArray.from_arrays(children, fields=list(struct_t))
+    return pa.ListArray.from_arrays(pa.array(offsets), struct, type=typ)
+
+
+def map_batch(rb: pa.RecordBatch, fn: DocFn, schema: pa.Schema,
+              with_fmt: bool = False) -> pa.RecordBatch:
+    """One Arrow batch of documents → one batch of `schema`: `fn` per
+    document, its rows stacked in document order."""
+    doc_ids, docs = _decode(rb, with_fmt)
+    rows: List[tuple] = []
+    row_doc: List[int] = []
+    for i, (doc_id, spans) in enumerate(zip(doc_ids, docs)):
+        out = fn(doc_id, spans)
+        rows.extend(out)
+        row_doc.extend([i] * len(out))
+
+    width = len(rows[0]) if rows else len(schema)
+    columns = list(zip(*rows)) if rows else [()] * width
+    names = rb.schema.names
+    # one output row per document needs no take
+    take = None if row_doc == list(range(rb.num_rows)) else pa.array(row_doc, pa.int32())
+    arrays = []
+    for j, field in enumerate(schema):
+        if j < width:
+            typ = field.type
+            arrays.append(_span_column(columns[j], typ) if _is_span_list(typ)
+                          else pa.array(columns[j], typ))
+            continue
+        if field.name not in names:
+            raise ValueError(f"schema declares {field.name!r} but the input batch has {names}")
+        src = rb.column(names.index(field.name))
+        arrays.append(src if take is None else src.take(take))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def map_documents(df, fn: DocFn, schema: str, with_fmt: bool = False):
+    """documents(doc_id, spans[, fmt][, extra…]) → `schema` rows: `fn(doc_id,
+    spans)` once per document in one narrow `mapInArrow` stage (no shuffle).
+    `with_fmt=True` hands `fn` 4-tuples carrying the `fmt` flags when the
+    input has that column."""
+    out_schema = arrow_schema(schema)
+
+    def gen(batches):
+        for rb in batches:
+            yield map_batch(rb, fn, out_schema, with_fmt)
+
+    return df.mapInArrow(gen, schema=schema)

@@ -23,7 +23,7 @@ deterministic synth corpora; a .py literal ships inside the same --py-files
 zip as the code, so executors need no filesystem side-channel).
 
 Scale shape: the encoder is driver/worker-local Python used inside the
-chunkers' existing zero-shuffle mapInPandas stages; the per-pretoken
+chunkers' existing zero-shuffle stages; the per-pretoken
 lru_cache makes counting amortized O(chars) per document.
 """
 

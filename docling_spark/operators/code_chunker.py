@@ -874,7 +874,7 @@ def chunk_code_document(doc_id: str, language: str, code: str,
 def code_chunk_sink(df, id_col: str = "doc_id", lang_col: str = "language",
                     code_col: str = "code", max_tokens: int = 5000):
     """(doc_id, language, code) → code-chunk table. Zero-shuffle
-    mapInPandas, like every sink."""
+    mapInPandas (its input is source code, not spans)."""
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["doc_id", "chunk_id", "part_name", "chunk_type", "start_line",

@@ -21,6 +21,8 @@ from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from docling_spark.docmap import map_documents
+
 # cell = (row, col, row_span, col_span, text, is_header)
 Cell = Tuple[int, int, int, int, str, bool]
 
@@ -151,23 +153,8 @@ def triplets_from_spans(doc_id: str, spans) -> List[tuple]:
 
 def triplets_sink(df: DataFrame) -> DataFrame:
     """C8 sink: normalized documents → (doc_id, table_id, triplets), one row
-    per reconstructed table. Document-local → same zero-shuffle mapInPandas
-    shape as the other sinks."""
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            rows: List[tuple] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                span_tuples = [
-                    (s["kind"], s["text"], s["media_ref"])
-                    for s in (list(spans) if spans is not None else [])
-                ]
-                rows.extend(triplets_from_spans(doc_id, span_tuples))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "table_id", "triplets"]
-            )
-
-    return df.mapInPandas(
-        gen, schema="doc_id string, table_id int, triplets string"
+    per reconstructed table. Document-local → the same zero-shuffle
+    mapInArrow shape as the other sinks."""
+    return map_documents(
+        df, triplets_from_spans, "doc_id string, table_id int, triplets string"
     )

@@ -18,7 +18,7 @@ Semantics mirror the reference's single-pass reconstruction
 - unit texts accumulate and join with the reference's punctuation rules (A2).
 
 This function is document-local by construction — the Spark plan applies it
-inside mapInPandas batches with zero cross-row communication.
+inside mapInArrow batches with zero cross-row communication.
 """
 
 from __future__ import annotations

@@ -18,20 +18,19 @@ Reference semantics (re-expressed, not ported):
 Items here are the per-unit chunks emitted by the hierarchical/law chunker
 (serialize.chunk_document), whose multi-line content plays the role of the
 reference's doc_items (one line = one serialized item). All stages are
-per-document-local → the Spark form is the same zero-shuffle mapInPandas
-shape as every other stage.
+per-document-local → the Spark form is the same zero-shuffle mapInArrow
+stage (`docmap.map_documents`) as every other span stage.
 """
 
 from __future__ import annotations
 
 import os as _os
 import re
-from typing import Iterable, Iterator, List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple
 
-import pandas as pd
-
+from docling_spark.docmap import map_documents
 from docling_spark.functions.bpe import bpe_count as _bpe_count
-from docling_spark.operators.serialize import chunk_document, _iter_spans
+from docling_spark.operators.serialize import chunk_document
 
 HYBRID_CHUNK_DDL = (
     "doc_id string, chunk_no int, chunk_id string, content string, "
@@ -174,11 +173,11 @@ def hybrid_chunk_document(
     base = chunk_document(doc_id, spans, level=level)
 
     # K2/K3: explode oversize units. Each piece carries its CONTENT token
-    # count and its headings' count — counts are additive across the \n
-    # delimiter (pretokens never span whitespace), so the K4 merge below
-    # ADDS stored counts instead of recounting the growing merged string
-    # (which was O(len²) in counter calls — the DuckDB oracle threads the
-    # same stored count through its merge fold)
+    # count and its headings' count — the BPE and regex counts are additive
+    # across the \n delimiter (pretokens never span whitespace), so the K4
+    # merge below ADDS stored counts instead of recounting the growing
+    # merged string (which was O(len²) in counter calls — the DuckDB oracle
+    # threads the same stored count through its merge fold)
     pre: List[tuple] = []  # (chunk_id, content, headings, n_units, ct, hlen)
     for _doc, chunk_id, _lvl, content, headings, _clen in base:
         headings = list(headings)
@@ -193,15 +192,20 @@ def hybrid_chunk_document(
                 pre.append((f"{chunk_id}/s{i}", piece, list(eff_headings), 1,
                             count_tokens(piece), eff_hlen))
 
-    # K4: merge adjacent chunks with identical headings while under budget
+    # K4: merge adjacent chunks with identical headings while under budget.
+    # An HF tokenizer's counts are not additive across the delimiter, so on
+    # that path the merged text is recounted.
+    recount = _hf_tokenizer() is not None
     merged: List[tuple] = []
     for chunk_id, content, headings, n_units, ct, hlen in pre:
         if merged:
             m_id, m_content, m_headings, m_units, m_ct, m_hlen = merged[-1]
-            if m_headings == headings and m_ct + ct + hlen <= max_tokens:
-                merged[-1] = (m_id, m_content + _DELIM + content, m_headings,
-                              m_units + n_units, m_ct + ct, m_hlen)
-                continue
+            if m_headings == headings:
+                m_text = m_content + _DELIM + content
+                m_ct_new = count_tokens(m_text) if recount else m_ct + ct
+                if m_ct_new + hlen <= max_tokens:
+                    merged[-1] = (m_id, m_text, m_headings, m_units + n_units, m_ct_new, m_hlen)
+                    continue
         merged.append((chunk_id, content, headings, n_units, ct, hlen))
 
     return [
@@ -213,26 +217,9 @@ def hybrid_chunk_document(
 
 def hybrid_chunk_sink(df, max_tokens: int = 64, level: str = "odsek"):
     """normalized documents → hybrid chunk table, one row per chunk.
-    Same zero-shuffle mapInPandas shape as the extraction stages."""
+    Same zero-shuffle mapInArrow shape as the extraction stages."""
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                rows.extend(
-                    hybrid_chunk_document(
-                        doc_id,
-                        [(s["kind"], s["text"], s["media_ref"]) for s in _iter_spans(spans)],
-                        max_tokens=max_tokens,
-                        level=level,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "chunk_no", "chunk_id", "content",
-                    "headings", "n_tokens", "n_source_units",
-                ],
-            )
+    def rows(doc_id, spans):
+        return hybrid_chunk_document(doc_id, spans, max_tokens=max_tokens, level=level)
 
-    return df.mapInPandas(gen, schema=HYBRID_CHUNK_DDL)
+    return map_documents(df, rows, HYBRID_CHUNK_DDL)

@@ -2,9 +2,9 @@
 §2.8 C7-C10, §2.9 K1/K5).
 
 Markdown rendering and law-level chunking over the *normalized* span table.
-Both are per-document-local → same zero-shuffle mapInPandas shape as the
-extraction pipeline; the chunk table then explodes to one row per chunk
-(narrow generate, still no exchange).
+Both are per-document-local → the same zero-shuffle mapInArrow stage
+(`docmap.map_documents`) as the extraction pipeline; the chunk sinks emit
+one row per chunk from that stage, still with no exchange.
 
 Reference semantics mirrored (original implementation):
 - markdown walk with #/##/### headings, bold markers, pipe tables
@@ -22,9 +22,11 @@ from typing import Iterable, Iterator, List, Optional, Tuple
 
 import pandas as pd
 
+from docling_spark.docmap import map_documents
 from docling_spark.schema import CHUNK_DDL
 
 Span = Tuple[str, str, Optional[str]]
+
 
 # ---------------------------------------------------------------------------
 # Inline formatting (optional 4th span element, flags ⊆ "BIUS"):
@@ -303,32 +305,6 @@ def render_markdown(spans: List[Span],
     return "\n".join(out).strip() + "\n"
 
 
-
-
-def _iter_spans(spans):
-    # Arrow hands array<struct> to pandas as a numpy array of dicts (or None)
-    return [] if spans is None else list(spans)
-
-def _spans_with_optional_fmt(pdf: pd.DataFrame):
-    """Yield per-doc span tuple lists, zipping an `fmt` column (array<string>
-    index-aligned with spans — the optional formatting channel; the
-    normalized `spans` struct itself stays the BASELINE 4-field shape) when
-    the frame carries one."""
-    has_fmt = "fmt" in pdf.columns
-    for i, spans in enumerate(pdf["spans"]):
-        ss = _iter_spans(spans)
-        if has_fmt:
-            raw_fmt = pdf["fmt"].iloc[i]
-            fmts = [] if raw_fmt is None else list(raw_fmt)
-            fmts += [""] * (len(ss) - len(fmts))
-            yield [
-                (s["kind"], s["text"], s["media_ref"], fmts[j])
-                for j, s in enumerate(ss)
-            ]
-        else:
-            yield [(s["kind"], s["text"], s["media_ref"]) for s in ss]
-
-
 def markdown_sink(df, page_break_placeholder: "str | None" = None):
     """normalized documents → (doc_id, markdown). An optional `fmt` column
     (array<string> aligned with spans, flags ⊆ "BIUS") switches the spans it
@@ -336,13 +312,10 @@ def markdown_sink(df, page_break_placeholder: "str | None" = None):
     renders 'page_break' spans as that block (reference
     MarkdownParams.page_break_placeholder); None (default) drops them."""
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            md = [render_markdown(ss, page_break_placeholder)
-                  for ss in _spans_with_optional_fmt(pdf)]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "markdown": md})
+    def rows(doc_id, spans):
+        return [(doc_id, render_markdown(spans, page_break_placeholder))]
 
-    return df.mapInPandas(gen, schema="doc_id string, markdown string")
+    return map_documents(df, rows, "doc_id string, markdown string", with_fmt=True)
 
 
 # ---------------------------------------------------------------------------
@@ -514,15 +487,13 @@ def render_html(spans: List[Span]) -> str:
 
 
 def html_sink(df):
-    """normalized documents → (doc_id, html). Same zero-shuffle mapInPandas
+    """normalized documents → (doc_id, html). Same zero-shuffle mapInArrow
     shape as markdown_sink; honors the same optional `fmt` column."""
+    return map_documents(df, _html_rows, "doc_id string, html string", with_fmt=True)
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rendered = [render_html(ss) for ss in _spans_with_optional_fmt(pdf)]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "html": rendered})
 
-    return df.mapInPandas(gen, schema="doc_id string, html string")
+def _html_rows(doc_id, spans):
+    return [(doc_id, render_html(spans))]
 
 
 # ---------------------------------------------------------------------------
@@ -706,15 +677,13 @@ def render_latex(spans: List[Span]) -> str:
 
 
 def latex_sink(df):
-    """normalized documents → (doc_id, latex). Zero-shuffle mapInPandas;
+    """normalized documents → (doc_id, latex). Zero-shuffle mapInArrow;
     honors the same optional `fmt` column as markdown_sink/html_sink."""
+    return map_documents(df, _latex_rows, "doc_id string, latex string", with_fmt=True)
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rendered = [render_latex(ss) for ss in _spans_with_optional_fmt(pdf)]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "latex": rendered})
 
-    return df.mapInPandas(gen, schema="doc_id string, latex string")
+def _latex_rows(doc_id, spans):
+    return [(doc_id, render_latex(spans))]
 
 
 # ---------------------------------------------------------------------------
@@ -807,19 +776,12 @@ def render_doctags(spans: List[Span]) -> str:
 
 
 def doctags_sink(df):
-    """normalized documents → (doc_id, doctags). Zero-shuffle mapInPandas."""
+    """normalized documents → (doc_id, doctags). Zero-shuffle mapInArrow."""
+    return map_documents(df, _doctags_rows, "doc_id string, doctags string")
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rendered = [
-                render_doctags(
-                    [(s["kind"], s["text"], s["media_ref"]) for s in _iter_spans(spans)]
-                )
-                for spans in pdf["spans"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "doctags": rendered})
 
-    return df.mapInPandas(gen, schema="doc_id string, doctags string")
+def _doctags_rows(doc_id, spans):
+    return [(doc_id, render_doctags(spans))]
 
 
 # ---------------------------------------------------------------------------
@@ -947,50 +909,23 @@ def export_chunks(chunks: List[tuple], fmt: str) -> str:
 def chunk_export_sink(df, fmt: str, level: str = "odsek"):
     """normalized documents → (doc_id, payload) in the chosen export format
     ('json' | 'md' | 'rag'). Document-local: chunking + formatting fuse into
-    the same zero-shuffle mapInPandas stage (the reference writes one file
+    the same zero-shuffle mapInArrow stage (the reference writes one file
     per law; the Spark-native form is one payload row per doc, written by
     the caller's sink of choice)."""
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                export_chunks(
-                    chunk_document(
-                        doc_id,
-                        [(s["kind"], s["text"], s["media_ref"]) for s in _iter_spans(spans)],
-                        level,
-                    ),
-                    fmt,
-                )
-                for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    def rows(doc_id, spans):
+        return [(doc_id, export_chunks(chunk_document(doc_id, spans, level), fmt))]
 
-    return df.mapInPandas(gen, schema="doc_id string, payload string")
+    return map_documents(df, rows, "doc_id string, payload string")
 
 
 def chunk_sink(df, level: str = "odsek"):
     """normalized documents → chunk table (CHUNK_DDL), one row per chunk."""
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                rows.extend(
-                    chunk_document(
-                        doc_id,
-                        [(s["kind"], s["text"], s["media_ref"]) for s in _iter_spans(spans)],
-                        level,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "chunk_id", "level", "content", "headings", "content_length",
-                ],
-            )
+    def rows(doc_id, spans):
+        return chunk_document(doc_id, spans, level)
 
-    return df.mapInPandas(gen, schema=CHUNK_DDL)
+    return map_documents(df, rows, CHUNK_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -1222,7 +1157,8 @@ def render_azure(payload: str, indent: "int | None" = None) -> str:
 
 def azure_sink(df, json_col: str = "payload", indent: "int | None" = None):
     """(doc_id, payload docling-JSON) → (doc_id, azure). Zero-shuffle
-    mapInPandas, like every other sink; per-doc payload parse + accumulator
+    mapInPandas (its input is a JSON payload column, not spans, so it does
+    not go through `docmap.map_documents`); per-doc payload parse + accumulator
     fold is the serializer itself (the reference's is the same per-document
     fold over pydantic objects)."""
 

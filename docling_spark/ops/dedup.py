@@ -229,11 +229,15 @@ def hamming_pairs(sig: DataFrame, id_col: str, value_col,
 
     `value_col` may be a LIST of long columns for fingerprints wider than
     one BIGINT (the 128-bit simhash passes ["simhash_lo", "simhash_hi"];
-    global bit j lives in column j // 64). Blocks must not straddle column
+    global bit j lives in column j // 64); a single column may hold fewer
+    than 64 bits (`simhash(bits=32)`). Blocks must not straddle column
     boundaries — at k=3 that means bits divisible by 4 longs-aligned
     widths (64→16-bit, 128→32-bit blocks both are)."""
     value_cols = [value_col] if isinstance(value_col, str) else list(value_col)
-    assert bits == 64 * len(value_cols), "bits must match 64 × fingerprint longs"
+    if len(value_cols) == 1:
+        assert 0 < bits <= 64, "a one-long fingerprint has at most 64 bits"
+    else:
+        assert bits == 64 * len(value_cols), "bits must match 64 × fingerprint longs"
     n_blocks = max_hamming + 1
     width = bits // n_blocks
     blocks = []

@@ -4,10 +4,10 @@ Spark plan
 ----------
 Every stage (sniff → HTML/PDF normalize → hierarchy state machine) is
 document-local, so the whole pipeline compiles to **one narrow mapInArrow
-stage over the scan: zero shuffles** (per the input_hint contract:
-vectorized pandas/Arrow UDFs only — Arrow-native marshaling is the faster
-half of that contract; the mapInPandas form is kept equivalence-tested).
-At 100 TB that means:
+stage over the scan: zero shuffles**. `docling_spark.docmap.map_documents`
+runs that stage, and every later span stage (enrich, the sinks, the
+chunkers) runs on the same helper, so spans cross the Arrow boundary one
+way only. At 100 TB that means:
 
 - parallelism = input splits (`spark.sql.files.maxPartitionBytes`), no
   exchange, no skewed reducer;
@@ -19,16 +19,15 @@ At 100 TB that means:
 
 The per-document logic is pure Python over one doc's spans (the reference's
 own design: single-pass O(n), sequential_parser.py:5-15); the vectorization
-axis is documents-per-Arrow-batch, per the input_hint contract (vectorized
-pandas/Arrow UDFs, no per-row Python UDFs in the plan).
+axis is documents-per-Arrow-batch, with columnar marshaling and no per-row
+Python UDFs in the plan.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
-import pandas as pd
-
+from docling_spark.docmap import map_documents
 from docling_spark.operators import sniff
 from docling_spark.operators.hierarchy import reconstruct
 from docling_spark.operators.html_extract import extract_html_spans
@@ -91,23 +90,6 @@ def extract_document_safe(raw_spans) -> List[Span]:
         return [("error", f"{type(exc).__name__}: {exc}"[:500], None)]
 
 
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out_spans = []
-    for raw in pdf["spans"]:
-        normalized = extract_document_safe(raw)
-        out_spans.append(
-            [
-                {"kind": k, "text": t, "media_ref": r, "offset": i}
-                for i, (k, t, r) in enumerate(normalized)
-            ]
-        )
-    result = pd.DataFrame({"doc_id": pdf["doc_id"].values, "spans": out_spans})
-    for extra in pdf.columns:
-        if extra not in ("doc_id", "spans"):
-            result[extra] = pdf[extra].values
-    return result
-
-
 def extract_html_formatted(df):
     """HTML documents → the flat formatted span stream:
     (doc_id, spans, fmt) where `spans` keeps the BASELINE 4-field shape and
@@ -120,151 +102,40 @@ def extract_html_formatted(df):
     Flat stream by design: the hierarchy state machine merges spans, which
     collapses per-item formatting (docling has the same per-TextItem
     granularity — document.py:1617-1639). Same narrow zero-shuffle
-    mapInPandas shape as `extract`. Non-HTML span kinds pass through with
+    mapInArrow shape as `extract`. Non-HTML span kinds pass through with
     empty flags."""
-    schema = DOC_DDL + ", fmt array<string>"
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_spans, out_fmt = [], []
-            for raw in pdf["spans"]:
-                flat: List[tuple] = []
-                for kind, text, ref in _as_tuples(raw):
-                    if kind == "html_bytes":
-                        flat.extend(extract_html_spans(text, with_formatting=True))
-                    else:
-                        flat.append((kind, text, ref, ""))
-                out_spans.append(
-                    [
-                        {"kind": k, "text": t, "media_ref": r, "offset": i}
-                        for i, (k, t, r, _f) in enumerate(flat)
-                    ]
-                )
-                out_fmt.append([f for (_k, _t, _r, f) in flat])
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "spans": out_spans, "fmt": out_fmt}
-            )
-
-    return df.mapInPandas(gen, schema=schema)
+    return map_documents(df, _formatted_rows, DOC_DDL + ", fmt array<string>")
 
 
-def extract_pandas(df, extra_cols: str = ""):
-    """mapInPandas form of the extraction stage (kept for the arrow≡pandas
-    equivalence test; `extract` below is the production path)."""
-    schema = DOC_DDL + extra_cols
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _extract_batch(pdf)
-
-    return df.mapInPandas(gen, schema=schema)
+def _formatted_rows(doc_id, spans):
+    flat: List[tuple] = []
+    for kind, text, ref in _as_tuples(spans):
+        if kind == "html_bytes":
+            flat.extend(extract_html_spans(text, with_formatting=True))
+        else:
+            flat.append((kind, text, ref, ""))
+    return [(doc_id, flat, [f for (_k, _t, _r, f) in flat])]
 
 
-def _extract_record_batch(rb, declared_extra=None):
-    """One Arrow RecordBatch of documents → one normalized RecordBatch.
-
-    Bulk columnar marshaling: the span struct's child arrays convert to
-    Python lists in three vectorized calls (no per-row dict materialization
-    — the pandas path builds a dict per span, which at ~130 output spans/doc
-    dominated worker CPU), per-doc slices are zipped into the tuples the
-    state machine consumes, and the output is assembled as flat arrays +
-    list offsets."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    names = rb.schema.names
-    la = rb.column(names.index("spans"))
-    lengths = pc.list_value_length(la).to_pylist()
-    vals = la.flatten()  # logical concatenation in row order
-    kinds = vals.field("kind").to_pylist()
-    texts = vals.field("text").to_pylist()
-    refs = vals.field("media_ref").to_pylist()
-
-    out_k: List[str] = []
-    out_t: List[str] = []
-    out_r: List[Optional[str]] = []
-    out_o: List[int] = []
-    offsets = [0]
-    lo = 0
-    for length in lengths:
-        length = length or 0
-        hi = lo + length
-        normalized = extract_document_safe(list(zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi])))
-        lo = hi
-        for j, (k, t, r) in enumerate(normalized):
-            out_k.append(k)
-            out_t.append(t)
-            out_r.append(r)
-            out_o.append(j)
-        offsets.append(len(out_k))
-
-    struct = pa.StructArray.from_arrays(
-        [
-            pa.array(out_k, pa.string()),
-            pa.array(out_t, pa.string()),
-            pa.array(out_r, pa.string()),
-            pa.array(out_o, pa.int32()),
-        ],
-        ["kind", "text", "media_ref", "offset"],
-    )
-    out_spans = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
-    # emit in declared-schema order: doc_id, spans, then passthrough columns
-    # ordered by the DECLARED extra-col names (mapInArrow binds positionally;
-    # emitting in input-batch order would silently mislabel a caller whose
-    # column order differs from its extra_cols string)
-    arrays = [rb.column(names.index("doc_id")), out_spans]
-    out_names = ["doc_id", "spans"]
-    extra_names = (
-        declared_extra
-        if declared_extra is not None
-        else [n for n in names if n not in ("doc_id", "spans")]
-    )
-    for name in extra_names:
-        if name not in names:
-            raise ValueError(
-                f"extra_cols declares {name!r} but the input batch has {names}"
-            )
-        arrays.append(rb.column(names.index(name)))
-        out_names.append(name)
-    return pa.RecordBatch.from_arrays(arrays, out_names)
+def _extract_rows(doc_id, spans):
+    return [(doc_id, extract_document_safe(spans))]
 
 
 def extract(df, extra_cols: str = ""):
     """documents(doc_id, spans[, extra]) → normalized documents, same shape.
 
-    One narrow mapInArrow stage; `extra_cols` (e.g. ", bucket int") are
-    passed through untouched so the checkpointed runner can keep its lineage
-    column without a join. Arrow-native marshaling — see
-    _extract_record_batch."""
-    schema = DOC_DDL + extra_cols
-    # Parse declared names with a real DDL parse — naive ','-splitting
-    # mis-tokenizes parameterized types like ", price decimal(10,2)".
-    if extra_cols.strip():
-        from pyspark.sql.types import _parse_datatype_string
-
-        extra_struct = _parse_datatype_string(
-            f"struct<{extra_cols.strip().lstrip(',')}>"
-        )
-        declared_extra = [f.name for f in extra_struct.fields]
-    else:
-        declared_extra = []
-
-    def gen(batches):
-        for rb in batches:
-            if rb.num_rows:
-                yield _extract_record_batch(rb, declared_extra)
-
-    return df.mapInArrow(gen, schema=schema)
+    One narrow mapInArrow stage (`docmap.map_documents`); the columns
+    declared by `extra_cols` (e.g. ", bucket int") are passed through
+    untouched, bound by their declared names, so the checkpointed runner
+    keeps its lineage column without a join."""
+    return map_documents(df, _extract_rows, DOC_DDL + extra_cols)
 
 
 def extract_full(df):
     """The full flagship path: extract (sniff → HTML/PDF normalize →
     hierarchy state machine) followed by J4 paragraph enrichment
     (operators.enrich — re-extracts embedded pismeno runs into synthetic
-    odseks). Still one narrow zero-shuffle chain: mapInArrow → mapInPandas.
+    odseks). Still one narrow zero-shuffle chain: mapInArrow → mapInArrow.
     Annex integration (J5) composes on top via
     sources.readers.integrate_annexes(extract_full(df), manifest) — it
     returns an audit table, not the span shape, so it stays a separate

@@ -4,7 +4,7 @@ The reference is a batch CLI (no streaming — SURVEY.md §2.10), and the
 north_rule's resumability is met by batch checkpointing (checkpoint.py). This
 module additionally re-expresses the same pipeline as a stream for
 continuous-ingest deployments: `readStream` over the documents directory →
-the identical mapInPandas extraction → `writeStream` with
+the identical mapInArrow extraction → `writeStream` with
 `Trigger.AvailableNow` (drain-everything-then-stop) or continuous
 micro-batches. Spark's streaming checkpoint gives exactly-once file output,
 replacing the bucket ledger in this mode.

@@ -1,0 +1,100 @@
+"""The per-document Arrow map (docling_spark.docmap): how spans cross the
+Arrow boundary in and out of every span stage, checked one batch at a time."""
+
+import pyarrow as pa
+import pytest
+
+from docling_spark.docmap import arrow_schema, map_batch
+from docling_spark.schema import DOC_DDL
+
+SPAN_T = pa.list_(pa.struct([("kind", pa.string()), ("text", pa.string()),
+                             ("media_ref", pa.string()), ("offset", pa.int32())]))
+
+
+def _spans(*triples):
+    return [{"kind": k, "text": t, "media_ref": r, "offset": 99} for k, t, r in triples]
+
+
+def _out_spans(*triples):
+    return [{"kind": k, "text": t, "media_ref": r, "offset": i}
+            for i, (k, t, r) in enumerate(triples)]
+
+
+def _batch(doc_ids, spans, **extra):
+    cols = {"doc_id": pa.array(doc_ids, pa.string()), "spans": pa.array(spans, SPAN_T)}
+    cols.update(extra)
+    return pa.RecordBatch.from_pydict(cols)
+
+
+def _echo(doc_id, spans):
+    return [(doc_id, spans)]
+
+
+def _two_rows(doc_id, spans):
+    return [(doc_id, f"{doc_id}:{len(spans)}"), (doc_id, "tail")]
+
+
+def _flags(doc_id, spans):
+    return [(doc_id, spans, [s[3] for s in spans])]
+
+
+A = ("text", "alpha", "#p1")
+B = ("text", "beta", None)
+C = ("title", "gamma", "#t")
+
+CASES = {
+    "null_spans_row": dict(
+        rb=_batch(["a", "b"], [_spans(A), None]), fn=_echo, ddl=DOC_DDL,
+        seen=[("a", [A]), ("b", [])],
+        out=[{"doc_id": "a", "spans": _out_spans(A)}, {"doc_id": "b", "spans": []}]),
+    "empty_batch": dict(
+        rb=_batch([], []), fn=_echo, ddl=DOC_DDL, seen=[], out=[]),
+    "sliced_batch": dict(
+        rb=_batch(["a", "b", "c", "d"], [_spans(A), _spans(B, C), _spans(C), _spans(A)]).slice(1, 2),
+        fn=_echo, ddl=DOC_DDL,
+        seen=[("b", [B, C]), ("c", [C])],
+        out=[{"doc_id": "b", "spans": _out_spans(B, C)}, {"doc_id": "c", "spans": _out_spans(C)}]),
+    "none_media_ref": dict(
+        rb=_batch(["a"], [_spans(B, B)]), fn=_echo, ddl=DOC_DDL,
+        seen=[("a", [B, B])],
+        out=[{"doc_id": "a", "spans": _out_spans(B, B)}]),
+    "fmt_shorter_than_spans": dict(
+        rb=_batch(["a", "b"], [_spans(A, B, C), _spans(A)],
+                  fmt=pa.array([["B"], None], pa.list_(pa.string()))),
+        fn=_flags, ddl=DOC_DDL + ", fmt array<string>", with_fmt=True,
+        seen=[("a", [A + ("B",), B + ("",), C + ("",)]), ("b", [A + ("",)])],
+        out=[{"doc_id": "a", "spans": _out_spans(A, B, C), "fmt": ["B", "", ""]},
+             {"doc_id": "b", "spans": _out_spans(A), "fmt": [""]}]),
+    "multi_row_sink_with_passthrough": dict(
+        # the input carries `bucket` after an undeclared column; the
+        # declared field binds by name
+        rb=_batch(["a", "b"], [_spans(A, B), []],
+                  other=pa.array(["x", "y"]), bucket=pa.array([7, 3], pa.int32())),
+        fn=_two_rows, ddl="doc_id string, label string, bucket int",
+        seen=[("a", [A, B]), ("b", [])],
+        out=[{"doc_id": "a", "label": "a:2", "bucket": 7},
+             {"doc_id": "a", "label": "tail", "bucket": 7},
+             {"doc_id": "b", "label": "b:0", "bucket": 3},
+             {"doc_id": "b", "label": "tail", "bucket": 3}]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_map_batch(spark, name):
+    case = CASES[name]
+    seen = []
+
+    def fn(doc_id, spans):
+        seen.append((doc_id, list(spans)))
+        return case["fn"](doc_id, spans)
+
+    schema = arrow_schema(case["ddl"])
+    out = map_batch(case["rb"], fn, schema, case.get("with_fmt", False))
+    assert out.schema == schema
+    assert seen == case["seen"]
+    assert out.to_pylist() == case["out"]
+
+
+def test_map_batch_undeclared_passthrough_raises(spark):
+    with pytest.raises(ValueError, match="bucket"):
+        map_batch(_batch(["a"], [_spans(A)]), _echo, arrow_schema(DOC_DDL + ", bucket int"))

@@ -77,6 +77,31 @@ def test_k3_single_giant_word_emitted_alone():
     assert "yyyyy" in total
 
 
+def test_k4_merge_recounts_under_hf_tokenizer(monkeypatch):
+    # an HF tokenizer need not be additive across the merge delimiter: this
+    # stub counts each word as 1 token and each "\n" as 3, so summing the
+    # parts' stored counts under-counts every merged chunk by 3 per join
+    import docling_spark.operators.hybrid_chunker as hc
+
+    class _Encoding:
+        def __init__(self, n):
+            self.ids = [0] * n
+
+    class _NewlineHeavy:
+        def encode(self, text):
+            return _Encoding(len(text.split()) + 3 * text.count("\n"))
+
+    tok = _NewlineHeavy()
+    monkeypatch.setattr(hc, "_hf_tokenizer", lambda: tok)
+    chunks = hybrid_chunk_document("d1", _SPANS, max_tokens=64)
+    assert any(c[6] >= 2 for c in chunks), "expected a K4 merge"
+    for _doc, _no, _cid, content, headings, n_tokens, _nu in chunks:
+        expected = len(tok.encode(content).ids) + sum(
+            len(tok.encode(h).ids) for h in headings)
+        assert n_tokens == expected, (content, n_tokens, expected)
+        assert n_tokens <= 64
+
+
 def test_deterministic():
     a = hybrid_chunk_document("d1", _SPANS, max_tokens=32)
     b = hybrid_chunk_document("d1", _SPANS, max_tokens=32)

@@ -287,13 +287,22 @@ def test_repetition_stats(spark):
 
 
 def test_simhash_neardup_pairs(docs):
-    from docling_spark.ops.dedup import simhash_neardup_pairs
+    from itertools import combinations
 
-    got = {(r["id_a"], r["id_b"]): r["hamming"]
-           for r in simhash_neardup_pairs(docs, max_hamming=3).collect()}
-    assert got[(1, 2)] == 0          # exact dups: identical fingerprint
-    assert all(h <= 3 for h in got.values())
-    assert (1, 5) not in got         # unrelated docs stay apart
+    from docling_spark.ops.dedup import simhash, simhash_neardup_pairs
+
+    ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")
+    for bits in (64, 32):
+        got = {(r["id_a"], r["id_b"]): r["hamming"]
+               for r in simhash_neardup_pairs(docs, bits=bits, max_hamming=3).collect()}
+        assert got[(1, 2)] == 0          # exact dups: identical fingerprint
+        assert all(h <= 3 for h in got.values())
+        assert (1, 5) not in got         # unrelated docs stay apart
+        # the pigeonhole search finds exactly the brute-force pairs
+        sh = {r["doc_id"]: r["simhash"] for r in simhash(docs, bits=bits).collect()}
+        brute = {(a, b): ham(sh[a], sh[b]) for a, b in combinations(sorted(sh), 2)
+                 if ham(sh[a], sh[b]) <= 3}
+        assert got == brute, bits
 
 
 def test_ann_ivf_kmeans(emb):

@@ -222,3 +222,24 @@ def test_semdedup_reuse_plan_recomputes_no_assignment(spark):
     assert "BroadcastNestedLoopJoin" not in plan  # flat-assign fingerprint
     # the assignment sits behind exactly the checkpoint scans
     assert "ExistingRDD" in plan
+
+
+def test_span_stages_are_arrow_maps(spark):
+    """enrich → markdown_sink and enrich → hybrid_chunk_sink each compile to
+    narrow MapInArrow stages (docmap.map_documents): no MapInPandas, no
+    exchange."""
+    from docling_spark.operators.enrich import enrich
+    from docling_spark.operators.hybrid_chunker import hybrid_chunk_sink
+    from docling_spark.operators.serialize import markdown_sink
+    from docling_spark.schema import DOC_DDL
+
+    docs = spark.createDataFrame(
+        [("d1", [("paragraph", "§ 1", "#paragraf-1", 0), ("text", "body", "#paragraf-1", 1)])],
+        DOC_DDL,
+    )
+    enriched = enrich(docs)
+    for out in (markdown_sink(enriched), hybrid_chunk_sink(enriched)):
+        plan = _plan(out)
+        assert plan.count("MapInArrow") == 2, plan
+        assert "MapInPandas" not in plan
+        assert "Exchange" not in plan

@@ -1,4 +1,4 @@
-"""Spark integration: the mapInPandas pipeline must (a) produce exactly the
+"""Spark integration: the mapInArrow pipeline must (a) produce exactly the
 same spans as the pure-Python path (mirrors the reference's
 verify_results_identical equivalence harness,
 /root/reference/archive_scripts/test_traversal_approaches.py:943-975),
@@ -134,26 +134,12 @@ def test_window_form_reproduces_unit_assignment(spark, corpus_path):
     assert mismatches == 0
 
 
-def test_arrow_and_pandas_extract_forms_identical(spark, corpus_path):
-    """The production mapInArrow stage and the mapInPandas form must produce
-    byte-identical normalized tables (same marshaling contract, different
-    transport)."""
-    from pyspark.sql import functions as F
-
-    from docling_spark.pipeline import extract, extract_pandas
-
-    docs = spark.read.parquet(corpus_path)
-    a = extract(docs).select("doc_id", F.to_json("spans").alias("j"))
-    b = extract_pandas(docs).select("doc_id", F.to_json("spans").alias("jb"))
-    assert a.count() == b.count() == 60
-    assert a.join(b, "doc_id").filter("j != jb").count() == 0
-
-
 def test_error_isolation_one_poisoned_doc(spark, monkeypatch):
     """A document whose extraction raises must emit one `error` span while
     every other document in the batch extracts normally."""
     import docling_spark.pipeline as P
-    from docling_spark.pipeline import _extract_record_batch
+    from docling_spark.docmap import arrow_schema, map_batch
+    from docling_spark.schema import DOC_DDL
 
     import pyarrow as pa
 
@@ -186,7 +172,7 @@ def test_error_isolation_one_poisoned_doc(spark, monkeypatch):
         ],
         ["doc_id", "spans"],
     )
-    out = _extract_record_batch(rb).to_pylist()
+    out = map_batch(rb, P._extract_rows, arrow_schema(DOC_DDL)).to_pylist()
     by_id = {r["doc_id"]: r["spans"] for r in out}
     assert by_id["bad"][0]["kind"] == "error"
     assert "ValueError" in by_id["bad"][0]["text"]
