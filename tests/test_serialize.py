@@ -1,8 +1,19 @@
 """Tests for markdown sink (S7/C7) and law-level chunking (K5)."""
 
+import glob
+import json
+import os
 import random
 
-from docling_spark.operators.serialize import chunk_document, render_markdown
+import pytest
+
+from docling_spark.operators.serialize import (
+    chunk_document,
+    render_doctags,
+    render_html,
+    render_latex,
+    render_markdown,
+)
 from docling_spark.pipeline import extract_document
 from docling_spark.synth import synth_corpus
 
@@ -23,6 +34,46 @@ _SPANS = [
     ("footnote", "1)", "#poznamky.poznamka-1"),
     ("text", "Poznámka text.", "#poznamky.poznamka-1"),
 ]
+
+
+_GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
+_RENDERERS = {
+    ".md": render_markdown,
+    ".html": render_html,
+    ".tex": render_latex,
+    ".dt": render_doctags,
+}
+
+
+def _golden_spans(doc_id):
+    with open(os.path.join(_GOLDEN_DIR, f"{doc_id}.json")) as f:
+        return [tuple(s) for s in json.load(f)]
+
+
+@pytest.mark.parametrize("suffix", sorted(_RENDERERS), ids=lambda s: s[1:])
+def test_render_goldens(suffix):
+    """Committed renderer fixtures over the golden span docs, one per format.
+    Regenerate after a REVIEWED change with:
+        python -c "from tests.test_serialize import regen_goldens; regen_goldens()"
+    """
+    fixtures = sorted(glob.glob(os.path.join(_GOLDEN_DIR, f"*{suffix}")))
+    assert fixtures, f"no committed {suffix} goldens"
+    for path in fixtures:
+        doc_id = os.path.splitext(os.path.basename(path))[0]
+        with open(path) as f:
+            golden = f.read()
+        got = _RENDERERS[suffix](_golden_spans(doc_id))
+        assert got == golden, f"{suffix} mismatch for {doc_id}"
+
+
+def regen_goldens():
+    for jpath in sorted(glob.glob(os.path.join(_GOLDEN_DIR, "*.json"))):
+        doc_id = os.path.splitext(os.path.basename(jpath))[0]
+        spans = _golden_spans(doc_id)
+        for suffix, render in _RENDERERS.items():
+            with open(os.path.join(_GOLDEN_DIR, f"{doc_id}{suffix}"), "w") as f:
+                f.write(render(spans))
+
 
 
 def test_render_markdown():
@@ -105,29 +156,6 @@ def test_render_html():
     assert "<figcaption>Tabuľka 1</figcaption>" in h
 
 
-def test_html_goldens():
-    """Committed HTML fixtures over the same golden docs as the span-sequence
-    suite. Regenerate after a REVIEWED change with:
-        python -c "from tests.test_serialize import regen_html; regen_html()"
-    """
-    import glob
-    import json
-    import os
-
-    from docling_spark.operators.serialize import render_html
-
-    gdir = os.path.join(os.path.dirname(__file__), "golden")
-    fixtures = sorted(glob.glob(os.path.join(gdir, "*.html")))
-    assert fixtures, "no committed .html goldens"
-    for path in fixtures:
-        doc_id = os.path.splitext(os.path.basename(path))[0]
-        with open(os.path.join(gdir, f"{doc_id}.json")) as f:
-            spans = [tuple(s) for s in json.load(f)]
-        with open(path) as f:
-            golden = f.read()
-        assert render_html(spans) == golden, f"html mismatch for {doc_id}"
-
-
 def test_html_sink_spark(spark, corpus_path):
     from docling_spark.operators.serialize import html_sink
     from docling_spark.pipeline import extract
@@ -137,22 +165,6 @@ def test_html_sink_spark(spark, corpus_path):
     assert out.count() == 60
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def regen_html():
-    import glob
-    import json
-    import os
-
-    from docling_spark.operators.serialize import render_html
-
-    gdir = os.path.join(os.path.dirname(__file__), "golden")
-    for jpath in sorted(glob.glob(os.path.join(gdir, "*.json"))):
-        doc_id = os.path.splitext(os.path.basename(jpath))[0]
-        with open(jpath) as f:
-            spans = [tuple(s) for s in json.load(f)]
-        with open(os.path.join(gdir, f"{doc_id}.html"), "w") as f:
-            f.write(render_html(spans))
 
 
 def test_export_chunks_formats():
@@ -206,28 +218,6 @@ def test_render_doctags():
     assert "<unordered_list>\n<list_item>bod</list_item>\n</unordered_list>" in d
 
 
-def test_doctags_goldens():
-    """Committed doctags fixtures; regen with
-        python -c "from tests.test_serialize import regen_doctags; regen_doctags()"
-    """
-    import glob
-    import json
-    import os
-
-    from docling_spark.operators.serialize import render_doctags
-
-    gdir = os.path.join(os.path.dirname(__file__), "golden")
-    fixtures = sorted(glob.glob(os.path.join(gdir, "*.dt")))
-    assert fixtures, "no committed .dt goldens"
-    for path in fixtures:
-        doc_id = os.path.splitext(os.path.basename(path))[0]
-        with open(os.path.join(gdir, f"{doc_id}.json")) as f:
-            spans = [tuple(s) for s in json.load(f)]
-        with open(path) as f:
-            golden = f.read()
-        assert render_doctags(spans) == golden, f"doctags mismatch for {doc_id}"
-
-
 def test_doctags_sink_spark(spark, corpus_path):
     from docling_spark.operators.serialize import doctags_sink
     from docling_spark.pipeline import extract
@@ -237,22 +227,6 @@ def test_doctags_sink_spark(spark, corpus_path):
     assert out.count() == 60
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def regen_doctags():
-    import glob
-    import json
-    import os
-
-    from docling_spark.operators.serialize import render_doctags
-
-    gdir = os.path.join(os.path.dirname(__file__), "golden")
-    for jpath in sorted(glob.glob(os.path.join(gdir, "*.json"))):
-        doc_id = os.path.splitext(os.path.basename(jpath))[0]
-        with open(jpath) as f:
-            spans = [tuple(s) for s in json.load(f)]
-        with open(os.path.join(gdir, f"{doc_id}.dt"), "w") as f:
-            f.write(render_doctags(spans))
 
 
 def test_render_latex():
@@ -273,44 +247,6 @@ def test_render_latex():
     assert "A & B \\\\ \\hline" in tex
     assert "\\includegraphics{img://x.png}" in tex
     assert "\\begin{itemize}\n\\item prvý bod\n\\item a\\_b\n\\end{itemize}" in tex
-
-
-def test_latex_goldens():
-    """Committed LaTeX fixtures; regen with
-        python -c "from tests.test_serialize import regen_latex; regen_latex()"
-    """
-    import glob
-    import json
-    import os
-
-    from docling_spark.operators.serialize import render_latex
-
-    gdir = os.path.join(os.path.dirname(__file__), "golden")
-    fixtures = sorted(glob.glob(os.path.join(gdir, "*.tex")))
-    assert fixtures, "no committed .tex goldens"
-    for path in fixtures:
-        doc_id = os.path.splitext(os.path.basename(path))[0]
-        with open(os.path.join(gdir, f"{doc_id}.json")) as f:
-            spans = [tuple(s) for s in json.load(f)]
-        with open(path) as f:
-            golden = f.read()
-        assert render_latex(spans) == golden, f"latex mismatch for {doc_id}"
-
-
-def regen_latex():
-    import glob
-    import json
-    import os
-
-    from docling_spark.operators.serialize import render_latex
-
-    gdir = os.path.join(os.path.dirname(__file__), "golden")
-    for jpath in sorted(glob.glob(os.path.join(gdir, "*.json"))):
-        doc_id = os.path.splitext(os.path.basename(jpath))[0]
-        with open(jpath) as f:
-            spans = [tuple(s) for s in json.load(f)]
-        with open(os.path.join(gdir, f"{doc_id}.tex"), "w") as f:
-            f.write(render_latex(spans))
 
 
 def test_render_html_attribute_injection_escaped():
