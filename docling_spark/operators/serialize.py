@@ -1,8 +1,17 @@
 """Stage 6 — serialization sinks and chunking (SURVEY.md §2.1 S7/S8,
 §2.8 C7-C10, §2.9 K1/K5).
 
-Markdown rendering and law-level chunking over the *normalized* span table.
-Both are per-document-local → the same zero-shuffle mapInArrow stage
+Serializers and chunkers over the *normalized* span table. The markdown,
+HTML, LaTeX and doctags serializers are one block walk, `_render`: it reads
+a document's spans once and cuts them into blocks (a kv/form region, a
+table, a list run, a paragraph, or a single span), and each format is a
+`_Format` data table of escaping, single-span templates, block renderers and
+the document join. Its SQL counterpart is the DuckDB oracles'
+`_duck_sink_base_cte` in `__spark_entry__.py`, the same segmentation plus a
+render step per format. Law-level chunking with its exports, and the
+Azure-layout serializer over docling-JSON payloads, follow.
+
+Every sink is per-document-local → the same zero-shuffle mapInArrow stage
 (`docmap.map_documents`) as the extraction pipeline; the chunk sinks emit
 one row per chunk from that stage, still with no exchange.
 
@@ -18,7 +27,7 @@ Reference semantics mirrored (original implementation):
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator, List, Optional, Tuple
+from typing import Callable, Dict, Iterable, Iterator, List, NamedTuple, Optional, Tuple
 
 import pandas as pd
 
@@ -107,74 +116,146 @@ def _html_post_process(text: str, fmt: str, hyperlink: Optional[str]) -> str:
 # reader threads that identity through the span ref ('#/<arr>/<i>/c<id>' on
 # both the key and its value spans); refs without the '/c' suffix fall back
 # to grouping by key text (still region-wide, the closest approximation
-# identity-less spans allow). A ref whose item prefix changes opens a new
-# region, matching the one-<div>-per-item reference output.
+# identity-less spans allow). A ref whose family or item prefix changes
+# opens a new region, matching the one-<div>-per-item reference output.
 _KV_KEY_KINDS = {"kv": "key-value-region", "form_field": "form-container"}
-_KV_VALUE_OF = {"kv_value": "kv", "form_value": "form_field"}
-
-
-def _kv_item_prefix(ref: Optional[str]) -> Optional[str]:
-    return ref.split("/c", 1)[0] if ref else ref
+_KV_FAMILY = {"kv": "kv", "kv_value": "kv",
+              "form_field": "form_field", "form_value": "form_field"}
 
 
 class _KvRegion:
-    """Accumulates one key-value/form region (= one graph item) during a
-    render, grouping values under keys by cell identity."""
+    """One key-value/form region (= one graph item): values grouped under
+    keys by cell identity, keys in first-seen order."""
 
-    def __init__(self) -> None:
-        self.kind: Optional[str] = None  # 'kv' | 'form_field'
-        self.item: Optional[str] = None  # item ref prefix ('#/<arr>/<i>')
+    def __init__(self, kind: str) -> None:
+        self.kind = kind  # 'kv' | 'form_field'
         # first-seen-ordered: identity -> [key_text, [values]]
         self._groups: dict = {}
         self._last_identity = None
 
-    def items(self) -> List[Tuple[str, List[str]]]:
-        return [(k, vals) for k, vals in self._groups.values()]
+    def items(self):
+        return self._groups.values()
 
-    @property
-    def pairs(self):  # truthiness hook for the flush guards
-        return self._groups
-
-    def _identity(self, kind: str, text: str, ref: Optional[str]):
-        if ref and "/c" in ref:
-            return ref  # item prefix + key cell id: true reference identity
-        return ("txt", text)  # identity-less fallback: group by key text
-
-    def feed(self, kind: str, text: str, ref: Optional[str] = None) -> bool:
-        """Consume a kv-family span; returns False if the span opens a NEW
-        region (different family OR different graph item) and the current
-        one must flush first."""
-        fam = kind if kind in _KV_KEY_KINDS else _KV_VALUE_OF[kind]
-        item = _kv_item_prefix(ref)
-        if self.kind is not None and (self.kind != fam or self.item != item):
-            return False
-        self.kind, self.item = fam, item
+    def feed(self, kind: str, text: str, ref: Optional[str]) -> None:
+        # a '/c' ref is item prefix + key cell id: true reference identity
+        ident = ref if (ref and "/c" in ref) else None
         if kind in _KV_KEY_KINDS:
-            ident = self._identity(kind, text, ref)
+            ident = ident or ("txt", text)  # identity-less: group by key text
             g = self._groups.setdefault(ident, [text, []])
             g[0] = g[0] or text  # key may backfill a value-opened group
             self._last_identity = ident
-        else:  # value span: attach by identity, else to the last key seen
-            ident = (
-                ref if (ref and "/c" in ref) else self._last_identity
-            )
-            if ident is None or ident not in self._groups:
-                ident = ident if ident is not None else ("txt", "")
-                self._groups.setdefault(ident, ["", []])
-                self._last_identity = ident
-            self._groups[ident][1].append(text)
-        return True
+            return
+        # value span: attach by identity, else to the last key seen
+        ident = ident or self._last_identity or ("txt", "")
+        if ident not in self._groups:
+            self._groups[ident] = ["", []]
+            self._last_identity = ident
+        self._groups[ident][1].append(text)
 
 
-def _with_fmt(spans) -> List[Tuple[str, str, Optional[str], str]]:
-    """Normalize 3- or 4-element spans to 4-tuples (fmt defaults '')."""
-    out = []
+# ---------------------------------------------------------------------------
+# The block walk. `_render` reads one document's spans once and cuts them
+# into blocks: a kv/form region, a table (a run of table_cells with the same
+# '#/tables/i' id), a list run, a paragraph (a span plus its 'c'-flagged
+# continuations), or a single span. Only the markup differs between formats,
+# so each format is a `_Format` table of escaping, single-span templates,
+# block renderers and the document join.
+# ---------------------------------------------------------------------------
+
+_BOLD_KINDS = ("odsek", "pismeno", "subitem", "footnote")
+
+
+class _Format(NamedTuple):
+    esc: Callable  # text -> display text (unformatted spans)
+    post: Optional[Callable]  # (text, flags, hyperlink) -> display; None: flags ignored
+    strip_cells: bool
+    single: Dict[str, Callable]  # kind -> (disp, text, ref) -> entry, None = nothing
+    para: Callable  # [disp] -> entry
+    list: Callable  # [disp] -> entry
+    table: Callable  # rows of cells -> entry
+    kv: Optional[Callable]  # _KvRegion -> entry; None: kv spans are paragraph text
+    join: Callable  # entries -> document
+
+
+_PARA, _LIST = object(), object()  # open-block keys; a table keys on its id
+
+
+def _render(spans, fmt: _Format) -> str:
+    """One document's spans → one format's string.
+
+    Spans are (kind, text, ref) or (kind, text, ref, flags). Any 4-tuple
+    switches the document to FORMATTED mode (formats with a `post`): every
+    span renders through `post` (docling-core escaping and wrappers, the ref
+    as hyperlink), and fragments flagged 'c' (continuation) rejoin their
+    paragraph with single-space joins, as the reference's inline-group
+    serializer does (`" ".join(...)`, markdown.py:673). 3-tuple documents
+    keep the legacy rendering through `esc`."""
+    formatted = fmt.post is not None and any(len(s) > 3 for s in spans)
+    esc, post, single = fmt.esc, fmt.post, fmt.single
+    kv_family = _KV_FAMILY if fmt.kv is not None else {}
+    out: List[str] = []
+    # the open block: its renderer, the key a span must match to extend it,
+    # and its contents (parts, items, rows or a _KvRegion)
+    blk = key = acc = None
+    f = ""
     for s in spans:
-        if len(s) >= 4:
-            out.append((s[0], s[1], s[2], s[3] or ""))
+        kind, text, ref = s[0], s[1], s[2]
+        if formatted:
+            f = (s[3] or "") if len(s) > 3 else ""
+        if kind == "table_cell":
+            # ref shape '#/tables/i/rRcC', row-major arrival order; the
+            # structural ref is never a hyperlink
+            ref = ref or ""
+            tid = ref.split("/r", 1)[0]
+            if key != tid:
+                if blk is not None:
+                    out.append(blk(acc))
+                blk, key, acc = fmt.table, tid, []
+            head = ref.rsplit("/r", 1)[-1].split("c")[0]
+            r = int(head) if head.isdigit() else 0
+            while len(acc) <= r:
+                acc.append([])
+            if fmt.strip_cells:
+                text = (text or "").strip()
+            acc[r].append(post(text, f, None) if formatted else esc(text))
+        elif kind in kv_family:
+            k = (kv_family[kind], ref.split("/c", 1)[0] if ref else ref)
+            if key != k:
+                if blk is not None:
+                    out.append(blk(acc))
+                blk, key, acc = fmt.kv, k, _KvRegion(k[0])
+            acc.feed(kind, text, ref)
         else:
-            out.append((s[0], s[1], s[2], ""))
-    return out
+            d = post(text, f, ref) if formatted else esc(text)
+            if kind == "list_item":
+                if key is not _LIST:
+                    if blk is not None:
+                        out.append(blk(acc))
+                    blk, key, acc = fmt.list, _LIST, []
+                acc.append(d)
+            elif kind in single:
+                if blk is not None:
+                    out.append(blk(acc))
+                    blk = key = None
+                e = single[kind](d, text, ref)
+                if e is not None:
+                    out.append(e)
+            elif key is _PARA and "c" in f:
+                acc.append(d)
+            else:
+                if blk is not None:
+                    out.append(blk(acc))
+                blk, key, acc = fmt.para, _PARA, [d]
+    if blk is not None:
+        out.append(blk(acc))
+    return fmt.join(out)
+
+
+# ---------------------------------------------------------------------------
+# Markdown (the reference application layer's own sink,
+# sequential_parser.py:5038-5186, format_table_as_markdown 4958-5018). An
+# entry ending in "\n" is a block followed by a blank line.
+# ---------------------------------------------------------------------------
 
 _HEADING_LEVELS = {
     "title": "#",
@@ -186,123 +267,53 @@ _HEADING_LEVELS = {
 }
 
 
+def _md_table(rows: List[List[str]]) -> str:
+    header, *body = rows
+    lines = ["| " + " | ".join(header) + " |",
+             "| " + " | ".join("---" for _ in header) + " |"]
+    lines += ["| " + " | ".join(row) + " |" for row in body]
+    return "\n".join(lines) + "\n"
+
+
+def _md_kv(region: _KvRegion) -> str:
+    # '**key**: v1, v2' definition lines (the reference's own markdown
+    # serializer is a TODO stub emitting '<!-- missing-key-value-item -->',
+    # markdown.py:553-573 — we render the content instead)
+    return "\n".join(f"**{k}**: {', '.join(vals)}" for k, vals in region.items()) + "\n"
+
+
+_MARKDOWN = _Format(
+    esc=str,
+    post=_md_post_process,
+    strip_cells=False,
+    single={
+        **{k: (lambda d, t, r, h=h: f"{h} {d}\n") for k, h in _HEADING_LEVELS.items()},
+        **dict.fromkeys(_BOLD_KINDS, lambda d, t, r: f"**{d}**"),
+        "media": lambda d, t, r: f"![{t}]({r})\n",
+        "page_break": lambda d, t, r: None,
+        "caption": lambda d, t, r: f"*{d}*\n",
+    },
+    para=lambda parts: " ".join(parts) + "\n",
+    list=lambda items: "\n".join(f"- {x}" for x in items),
+    table=_md_table,
+    kv=_md_kv,
+    join=lambda out: "\n".join(out).strip() + "\n",
+)
+
+
 def render_markdown(spans: List[Span],
                     page_break_placeholder: "str | None" = None) -> str:
-    """One document's normalized spans → markdown string.
+    """One document's normalized spans → markdown string (modes: `_render`).
 
     `page_break_placeholder` mirrors MarkdownParams.page_break_placeholder
     (reference markdown.py:89,795-810): 'page_break' spans (emitted by
     normalize_pdf_spans(emit_page_breaks=True)) render as the placeholder
-    block when set and are dropped when None (the reference default).
-
-    Two modes, switched by the span arity:
-    - 3-tuples (kind, text, ref): the legacy byte-exact rendering mirroring
-      the reference application layer's own sink (sequential_parser.py:
-      5038-5186) — no escaping, one block per span.
-    - any 4-tuple present → FORMATTED mode: every span renders under
-      docling-core's serializer rules (_md_post_process: underscore +
-      html escaping, **B** */I/* ~~S~~ wrappers, [text](url) hyperlinks),
-      and fragments flagged 'c' (continuation) rejoin into one flowing
-      paragraph with single-space joins — exactly how the reference's own
-      inline-group serializer assembles parts (`" ".join(...)`,
-      markdown.py:673) — the stream `extract_html_formatted` produces."""
-    formatted = any(len(s) >= 4 for s in spans)
-    out: List[str] = []
-    table_rows: List[List[str]] = []
-    table_idx: Optional[str] = None
-    pending: List[str] = []  # inline fragments of the current paragraph
-    kv = _KvRegion()
-
-    def flush_para() -> None:
-        if pending:
-            out.append(" ".join(pending))
-            out.append("")
-            pending.clear()
-
-    def flush_kv() -> None:
-        # '**key**: v1, v2' definition lines (the reference's own markdown
-        # serializer is a TODO stub emitting '<!-- missing-key-value-item
-        # -->', markdown.py:553-573 — we render the content instead)
-        nonlocal kv
-        if kv.pairs:
-            for k, vals in kv.items():
-                out.append(f"**{k}**: {', '.join(vals)}")
-            out.append("")
-        kv = _KvRegion()
-
-    def flush_table() -> None:
-        nonlocal table_rows, table_idx
-        if not table_rows:
-            return
-        header, *body = table_rows
-        out.append("| " + " | ".join(header) + " |")
-        out.append("| " + " | ".join("---" for _ in header) + " |")
-        for row in body:
-            out.append("| " + " | ".join(row) + " |")
-        out.append("")
-        table_rows = []
-        table_idx = None
-
-    for kind, text, ref, fmt in _with_fmt(spans):
-        if kind in _KV_KEY_KINDS or kind in _KV_VALUE_OF:
-            flush_para()
-            flush_table()
-            if not kv.feed(kind, text, ref):
-                flush_kv()
-                kv.feed(kind, text, ref)
-            continue
-        flush_kv()
-        if kind == "table_cell":
-            # ref shape '#/tables/i/rRcC' — row-major arrival order;
-            # the structural ref is never a hyperlink
-            flush_para()
-            disp = _md_post_process(text, fmt, None) if formatted else text
-            tid = (ref or "").split("/r")[0]
-            if table_idx is not None and tid != table_idx:
-                flush_table()
-            table_idx = tid
-            row_tag = (ref or "").rsplit("/r", 1)[-1]
-            head = row_tag.split("c")[0]
-            r = int(head) if head.isdigit() else 0
-            while len(table_rows) <= r:
-                table_rows.append([])
-            table_rows[r].append(disp)
-            continue
-        flush_table()
-        disp = _md_post_process(text, fmt, ref) if formatted else text
-        if kind in _HEADING_LEVELS:
-            flush_para()
-            out.append(f"{_HEADING_LEVELS[kind]} {disp}")
-            out.append("")
-        elif kind in ("odsek", "pismeno", "subitem", "footnote"):
-            flush_para()
-            out.append(f"**{disp}**")
-        elif kind == "media":
-            flush_para()
-            out.append(f"![{text}]({ref})")
-            out.append("")
-        elif kind == "page_break":
-            flush_para()
-            if page_break_placeholder is not None:
-                out.append(page_break_placeholder)
-                out.append("")
-        elif kind == "list_item":
-            flush_para()
-            out.append(f"- {disp}")
-        elif kind == "caption":
-            flush_para()
-            out.append(f"*{disp}*")
-            out.append("")
-        else:
-            if "c" not in fmt:
-                flush_para()
-            pending.append(disp)
-            if not formatted:
-                flush_para()
-    flush_table()
-    flush_para()
-    flush_kv()
-    return "\n".join(out).strip() + "\n"
+    block when set and are dropped when None (the reference default)."""
+    fmt = _MARKDOWN
+    if page_break_placeholder is not None:
+        page_break = {"page_break": lambda d, t, r: page_break_placeholder + "\n"}
+        fmt = fmt._replace(single={**fmt.single, **page_break})
+    return _render(spans, fmt)
 
 
 def markdown_sink(df, page_break_placeholder: "str | None" = None):
@@ -319,7 +330,7 @@ def markdown_sink(df, page_break_placeholder: "str | None" = None):
 
 
 # ---------------------------------------------------------------------------
-# HTML sink (the reference's serializer matrix ships an HTML serializer:
+# HTML (the reference's serializer matrix ships an HTML serializer:
 # docling_code/docling-core-main/docling_core/transforms/serializer/html.py
 # — headings h1-h6 via escaped text :135-180, tables as
 # <table><tbody><tr><th|td> with th for header cells :344-415, pictures as
@@ -353,137 +364,59 @@ def _esc_attr(text: str) -> str:
     return _html.escape(text or "", quote=True).replace("\n", "<br>")
 
 
+def _html_table(rows: List[List[str]]) -> str:
+    # cells arrive stripped + escaped like html.py:387
+    body = []
+    for r, row in enumerate(rows):
+        tag = "th" if r == 0 else "td"
+        body.append("<tr>" + "".join(f"<{tag}>{c}</{tag}>" for c in row) + "</tr>")
+    return "<table><tbody>" + "".join(body) + "</tbody></table>"
+
+
+def _html_kv(region: _KvRegion) -> str:
+    # flat <dl> inside a classed <div> — the reference's no-hierarchy graph
+    # rendering (html.py:585-598; wrapper classes 654-726); html.escape with
+    # default quote=True exactly as the reference does
+    import html as _h
+
+    cls = _KV_KEY_KINDS[region.kind]
+    lines = [f'<div class="{cls}">', f'<dl class="{cls}">']
+    for k, vals in region.items():
+        lines.append(f"<dt>{_h.escape(k)}</dt>")
+        lines += [f"<dd>{_h.escape(v)}</dd>" for v in vals]
+    return "\n".join(lines + ["</dl>", "</div>"])
+
+
+_HTML = _Format(
+    esc=_esc,
+    post=_html_post_process,
+    strip_cells=True,
+    single={
+        **{k: (lambda d, t, r, g=g: f"<{g}>{d}</{g}>")
+           for k, g in {**_HTML_HEADING_TAG, "caption": "figcaption"}.items()},
+        **dict.fromkeys(_BOLD_KINDS, lambda d, t, r: f"<p><b>{d}</b></p>"),
+        "media": lambda d, t, r: (
+            f'<figure><img src="{_esc_attr(r)}" alt="{_esc_attr(t)}" /></figure>'
+        ),
+        "page_break": lambda d, t, r: None,
+        # picture annotation text (classification class / description /
+        # molecule SMILES — reader maps per common.py:136-151) rendered as a
+        # caption under the preceding figure
+        "picture_annotation": lambda d, t, r: (
+            f'<figcaption class="annotation">{d}</figcaption>'
+        ),
+    },
+    para=lambda parts: f"<p>{' '.join(parts)}</p>",
+    list=lambda items: "\n".join(["<ul>", *(f"<li>{x}</li>" for x in items), "</ul>"]),
+    table=_html_table,
+    kv=_html_kv,
+    join=lambda out: "\n".join(out) + ("\n" if out else ""),
+)
+
+
 def render_html(spans: List[Span]) -> str:
-    """One document's normalized spans → HTML string (body fragment).
-
-    Mode switch mirrors render_markdown: 3-tuples = legacy byte-exact;
-    any 4-tuple = formatted mode (docling-core wrapper/escaping rules,
-    'c'-flagged fragments rejoin into one <p>)."""
-    formatted = any(len(s) >= 4 for s in spans)
-    out: List[str] = []
-    table_rows: List[List[str]] = []
-    table_idx: Optional[str] = None
-    in_list = False
-    pending: List[str] = []  # inline fragments of the current paragraph
-    kv = _KvRegion()
-
-    def flush_para() -> None:
-        if pending:
-            out.append(f"<p>{' '.join(pending)}</p>")
-            pending.clear()
-
-    def flush_kv() -> None:
-        # flat <dl> inside a classed <div> — the reference's no-hierarchy
-        # graph rendering (html.py:585-598; wrapper classes 654-726);
-        # html.escape with default quote=True exactly as the reference does
-        nonlocal kv
-        if kv.pairs:
-            import html as _h
-
-            cls = _KV_KEY_KINDS[kv.kind or "kv"]
-            out.append(f'<div class="{cls}">')
-            out.append(f'<dl class="{cls}">')
-            for k, vals in kv.items():
-                out.append(f"<dt>{_h.escape(k)}</dt>")
-                for v in vals:
-                    out.append(f"<dd>{_h.escape(v)}</dd>")
-            out.append("</dl>")
-            out.append("</div>")
-        kv = _KvRegion()
-
-    def flush_list() -> None:
-        nonlocal in_list
-        if in_list:
-            out.append("</ul>")
-            in_list = False
-
-    def flush_table() -> None:
-        nonlocal table_rows, table_idx
-        if not table_rows:
-            return
-        body = []
-        for r, row in enumerate(table_rows):
-            tag = "th" if r == 0 else "td"
-            body.append(
-                "<tr>" + "".join(f"<{tag}>{c}</{tag}>" for c in row) + "</tr>"
-            )
-        out.append("<table><tbody>" + "".join(body) + "</tbody></table>")
-        table_rows = []
-        table_idx = None
-
-    for kind, text, ref, fmt in _with_fmt(spans):
-        if kind in _KV_KEY_KINDS or kind in _KV_VALUE_OF:
-            flush_para()
-            flush_list()
-            flush_table()
-            if not kv.feed(kind, text, ref):
-                flush_kv()
-                kv.feed(kind, text, ref)
-            continue
-        flush_kv()
-        if kind == "table_cell":
-            flush_para()
-            flush_list()
-            tid = (ref or "").split("/r")[0]
-            if table_idx is not None and tid != table_idx:
-                flush_table()
-            table_idx = tid
-            row_tag = (ref or "").rsplit("/r", 1)[-1]
-            head = row_tag.split("c")[0]
-            r = int(head) if head.isdigit() else 0
-            while len(table_rows) <= r:
-                table_rows.append([])
-            # cell text stripped + escaped like html.py:387; structural ref
-            # is never a hyperlink
-            cell = (text or "").strip()
-            table_rows[r].append(
-                _html_post_process(cell, fmt, None) if formatted else _esc(cell)
-            )
-            continue
-        flush_table()
-        disp = _html_post_process(text, fmt, ref) if formatted else _esc(text)
-        if kind == "list_item":
-            flush_para()
-            if not in_list:
-                out.append("<ul>")
-                in_list = True
-            out.append(f"<li>{disp}</li>")
-            continue
-        flush_list()
-        if kind in _HTML_HEADING_TAG:
-            flush_para()
-            tag = _HTML_HEADING_TAG[kind]
-            out.append(f"<{tag}>{disp}</{tag}>")
-        elif kind in ("odsek", "pismeno", "subitem", "footnote"):
-            flush_para()
-            out.append(f"<p><b>{disp}</b></p>")
-        elif kind == "media":
-            flush_para()
-            out.append(
-                f'<figure><img src="{_esc_attr(ref)}" alt="{_esc_attr(text)}" /></figure>'
-            )
-        elif kind == "caption":
-            flush_para()
-            out.append(f"<figcaption>{disp}</figcaption>")
-        elif kind == "page_break":
-            flush_para()
-        elif kind == "picture_annotation":
-            # picture annotation text (classification class / description /
-            # molecule SMILES — reader maps per common.py:136-151) rendered
-            # as a caption under the preceding figure
-            flush_para()
-            out.append(f'<figcaption class="annotation">{disp}</figcaption>')
-        else:
-            if "c" not in fmt:
-                flush_para()
-            pending.append(disp)
-            if not formatted:
-                flush_para()
-    flush_table()
-    flush_list()
-    flush_para()
-    flush_kv()
-    return "\n".join(out) + ("\n" if out else "")
+    """One document's normalized spans → HTML body fragment (modes: `_render`)."""
+    return _render(spans, _HTML)
 
 
 def html_sink(df):
@@ -497,7 +430,7 @@ def _html_rows(doc_id, spans):
 
 
 # ---------------------------------------------------------------------------
-# LaTeX sink (the reference serializer matrix's fourth format:
+# LaTeX (the reference serializer matrix's fourth format:
 # transforms/serializer/latex.py — _escape_latex char map :99-122, title as
 # \title :172, section levels 1-3 → \section/\subsection/\subsubsection
 # :180-195, bold :600-602, itemize lists :515-527 with \item :167, tables
@@ -553,127 +486,55 @@ def _latex_post_process(text: str, fmt: str, hyperlink: Optional[str]) -> str:
     return res
 
 
+def _latex_table(rows: List[List[str]]) -> str:
+    colspec = "|" + "|".join(["l"] * max(len(r) for r in rows)) + "|"
+    lines = [f"\\begin{{tabular}}{{{colspec}}}", "\\hline"]
+    lines += [" & ".join(row) + r" \\ \hline" for row in rows]
+    return "\\begin{table}[h]\n" + "\n".join(lines) + "\n\\end{tabular}\n\\end{table}"
+
+
+def _latex_kv(region: _KvRegion) -> str:
+    # description list — LaTeX's native key-value construct (the reference
+    # LaTeX serializer has no kv branch; semantics follow the HTML sink's
+    # grouped <dl> rendering, html.py:585-598)
+    items = "\n".join(
+        f"\\item[{_latex_escape(k)}] " + ", ".join(_latex_escape(v) for v in vals)
+        for k, vals in region.items()
+    )
+    return "\\begin{description}\n" + items + "\n\\end{description}"
+
+
+def _latex_figure(text, ref) -> str:
+    body = f"\\includegraphics{{{ref}}}\n" if ref else ""
+    return ("\\begin{figure}[h]\n" + body
+            + f"\\caption{{{_latex_escape(text)}}}\n\\end{{figure}}")
+
+
+_LATEX = _Format(
+    esc=_latex_escape,
+    post=_latex_post_process,
+    strip_cells=True,
+    single={
+        **{k: (lambda d, t, r, c=c: f"\\{c}{{{d}}}")
+           for k, c in {**_LATEX_HEADING_CMD, "caption": "caption"}.items()},
+        **dict.fromkeys(_BOLD_KINDS, lambda d, t, r: f"\\textbf{{{d}}}"),
+        "page_break": lambda d, t, r: None,
+        "media": lambda d, t, r: _latex_figure(t, r),
+    },
+    para=" ".join,
+    list=lambda items: (
+        "\\begin{itemize}\n" + "\n".join(f"\\item {x}" for x in items)
+        + "\n\\end{itemize}"
+    ),
+    table=_latex_table,
+    kv=_latex_kv,
+    join=lambda out: "\n\n".join(out) + ("\n" if out else ""),
+)
+
+
 def render_latex(spans: List[Span]) -> str:
-    """One document's normalized spans → LaTeX body fragment.
-
-    Mode switch mirrors render_markdown: any 4-tuple span enables the
-    formatting wrappers and 'c'-continuation paragraph joining (the legacy
-    3-tuple path is byte-exact unchanged)."""
-    formatted = any(len(s) >= 4 for s in spans)
-    out: List[str] = []
-    table_rows: List[List[str]] = []
-    table_idx: Optional[str] = None
-    list_items: List[str] = []
-    pending: List[str] = []
-    kv = _KvRegion()
-
-    def flush_para() -> None:
-        if pending:
-            out.append(" ".join(pending))
-            pending.clear()
-
-    def flush_kv() -> None:
-        # description list — LaTeX's native key-value construct (the
-        # reference LaTeX serializer has no kv branch; semantics follow the
-        # HTML sink's grouped <dl> rendering, html.py:585-598)
-        nonlocal kv
-        if kv.pairs:
-            items = "\n".join(
-                f"\\item[{_latex_escape(k)}] "
-                + ", ".join(_latex_escape(v) for v in vals)
-                for k, vals in kv.items()
-            )
-            out.append("\\begin{description}\n" + items + "\n\\end{description}")
-        kv = _KvRegion()
-
-    def flush_list() -> None:
-        nonlocal list_items
-        if list_items:
-            out.append(
-                "\\begin{itemize}\n"
-                + "\n".join(f"\\item {x}" for x in list_items)
-                + "\n\\end{itemize}"
-            )
-            list_items = []
-
-    def flush_table() -> None:
-        nonlocal table_rows, table_idx
-        if not table_rows:
-            return
-        ncols = max(len(r) for r in table_rows)
-        colspec = "|" + "|".join(["l"] * ncols) + "|"
-        lines = [f"\\begin{{tabular}}{{{colspec}}}", "\\hline"]
-        for row in table_rows:
-            lines.append(" & ".join(row) + r" \\ \hline")
-        lines.append("\\end{tabular}")
-        out.append("\\begin{table}[h]\n" + "\n".join(lines) + "\n\\end{table}")
-        table_rows = []
-        table_idx = None
-
-    for kind, text, ref, fmt in _with_fmt(spans):
-        if kind in _KV_KEY_KINDS or kind in _KV_VALUE_OF:
-            flush_para()
-            flush_list()
-            flush_table()
-            if not kv.feed(kind, text, ref):
-                flush_kv()
-                kv.feed(kind, text, ref)
-            continue
-        flush_kv()
-        if kind == "table_cell":
-            flush_para()
-            flush_list()
-            tid = (ref or "").split("/r")[0]
-            if table_idx is not None and tid != table_idx:
-                flush_table()
-            table_idx = tid
-            row_tag = (ref or "").rsplit("/r", 1)[-1]
-            head = row_tag.split("c")[0]
-            r = int(head) if head.isdigit() else 0
-            while len(table_rows) <= r:
-                table_rows.append([])
-            cell = (text or "").strip()
-            table_rows[r].append(
-                _latex_post_process(cell, fmt, None) if formatted
-                else _latex_escape(cell)
-            )
-            continue
-        flush_table()
-        disp = _latex_post_process(text, fmt, ref) if formatted else _latex_escape(text)
-        if kind == "list_item":
-            flush_para()
-            list_items.append(disp)
-            continue
-        flush_list()
-        if kind in _LATEX_HEADING_CMD:
-            flush_para()
-            out.append(f"\\{_LATEX_HEADING_CMD[kind]}{{{disp}}}")
-        elif kind in ("odsek", "pismeno", "subitem", "footnote"):
-            flush_para()
-            out.append(f"\\textbf{{{disp}}}")
-        elif kind == "page_break":
-            flush_para()
-        elif kind == "media":
-            flush_para()
-            body = f"\\includegraphics{{{ref}}}\n" if ref else ""
-            out.append(
-                "\\begin{figure}[h]\n" + body
-                + f"\\caption{{{_latex_escape(text)}}}\n\\end{{figure}}"
-            )
-        elif kind == "caption":
-            flush_para()
-            out.append(f"\\caption{{{disp}}}")
-        else:
-            if "c" not in fmt:
-                flush_para()
-            pending.append(disp)
-            if not formatted:
-                flush_para()
-    flush_table()
-    flush_list()
-    flush_para()
-    flush_kv()
-    return "\n\n".join(out) + ("\n" if out else "")
+    """One document's normalized spans → LaTeX body fragment (modes: `_render`)."""
+    return _render(spans, _LATEX)
 
 
 def latex_sink(df):
@@ -687,13 +548,15 @@ def _latex_rows(doc_id, spans):
 
 
 # ---------------------------------------------------------------------------
-# doctags sink (the reference serializer matrix's third format:
+# doctags (the reference serializer matrix's third format:
 # transforms/serializer/doctags.py — every item wrapped in its
 # DocumentToken (<title>, <section_header_level_N>, <text>, <footnote>,
 # <caption>, <picture>, <list_item> inside <unordered_list>), tables as
 # OTSL token streams (types/doc/tokens.py:9-25 — <ched> column header,
 # <fcel> full, <ecel> empty, <nl> row end; span-looking cells lcel/ucel/xcel
-# don't occur in our span model), document wrapped in <doctag>.)
+# don't occur in our span model), document wrapped in <doctag>. Text is not
+# escaped, formatting flags are ignored, and there is no kv construct: kv
+# spans stay <text> items in input order.)
 # ---------------------------------------------------------------------------
 
 _DOCTAG_HEADING = {
@@ -706,73 +569,44 @@ _DOCTAG_HEADING = {
 }
 
 
+def _doctags_table(rows: List[List[str]]) -> str:
+    ncols = max(len(r) for r in rows)
+    toks: List[str] = []
+    for r, row in enumerate(rows):
+        cell_tok = "ched" if r == 0 else "fcel"
+        for c in range(ncols):
+            text = row[c] if c < len(row) else ""
+            toks.append(f"<{cell_tok}>{text}" if text else "<ecel>")
+        toks.append("<nl>")
+    return "<otsl>" + "".join(toks) + "</otsl>"
+
+
+_DOCTAGS = _Format(
+    esc=str,
+    post=None,
+    strip_cells=True,
+    single={
+        **{k: (lambda d, t, r, g=g: f"<{g}>{d}</{g}>")
+           for k, g in {**_DOCTAG_HEADING, "caption": "caption",
+                        "footnote": "footnote"}.items()},
+        "page_break": lambda d, t, r: "<page_break>",
+        "media": lambda d, t, r: f"<picture>{t}</picture>",
+    },
+    # text, odsek, pismeno, subitem, error, kv — plain text items
+    para=lambda parts: f"<text>{' '.join(parts)}</text>",
+    list=lambda items: "\n".join(
+        ["<unordered_list>", *(f"<list_item>{x}</list_item>" for x in items),
+         "</unordered_list>"]
+    ),
+    table=_doctags_table,
+    kv=None,
+    join=lambda out: "<doctag>" + "\n".join(out) + "</doctag>\n",
+)
+
+
 def render_doctags(spans: List[Span]) -> str:
     """One document's normalized spans → doctags token stream."""
-    out: List[str] = []
-    table_rows: List[List[str]] = []
-    table_idx: Optional[str] = None
-    in_list = False
-
-    def flush_list() -> None:
-        nonlocal in_list
-        if in_list:
-            out.append("</unordered_list>")
-            in_list = False
-
-    def flush_table() -> None:
-        nonlocal table_rows, table_idx
-        if not table_rows:
-            return
-        ncols = max(len(r) for r in table_rows)
-        toks: List[str] = []
-        for r, row in enumerate(table_rows):
-            cell_tok = "ched" if r == 0 else "fcel"
-            for c in range(ncols):
-                text = row[c] if c < len(row) else ""
-                toks.append(f"<{cell_tok}>{text}" if text else "<ecel>")
-            toks.append("<nl>")
-        out.append("<otsl>" + "".join(toks) + "</otsl>")
-        table_rows = []
-        table_idx = None
-
-    for kind, text, ref in spans:
-        if kind == "table_cell":
-            flush_list()
-            tid = (ref or "").split("/r")[0]
-            if table_idx is not None and tid != table_idx:
-                flush_table()
-            table_idx = tid
-            row_tag = (ref or "").rsplit("/r", 1)[-1]
-            head = row_tag.split("c")[0]
-            r = int(head) if head.isdigit() else 0
-            while len(table_rows) <= r:
-                table_rows.append([])
-            table_rows[r].append((text or "").strip())
-            continue
-        flush_table()
-        if kind == "list_item":
-            if not in_list:
-                out.append("<unordered_list>")
-                in_list = True
-            out.append(f"<list_item>{text}</list_item>")
-            continue
-        flush_list()
-        if kind in _DOCTAG_HEADING:
-            tok = _DOCTAG_HEADING[kind]
-            out.append(f"<{tok}>{text}</{tok}>")
-        elif kind == "page_break":
-            out.append("<page_break>")
-        elif kind == "media":
-            out.append(f"<picture>{text}</picture>")
-        elif kind == "caption":
-            out.append(f"<caption>{text}</caption>")
-        elif kind == "footnote":
-            out.append(f"<footnote>{text}</footnote>")
-        else:  # text, odsek, pismeno, subitem, error — plain text items
-            out.append(f"<text>{text}</text>")
-    flush_table()
-    flush_list()
-    return "<doctag>" + "\n".join(out) + "</doctag>\n"
+    return _render(spans, _DOCTAGS)
 
 
 def doctags_sink(df):
