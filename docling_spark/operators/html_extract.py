@@ -78,26 +78,27 @@ def _node_text(node: _Node) -> str:
     """All text under node, document order, whitespace-collapsed."""
     if not node.children:  # leaf fast path — the common case
         joined = "".join(t for _slot, t in node.text_parts)
-        if "\n" in joined or "\t" in joined or "  " in joined:
-            return _WS_RE.sub(" ", joined).strip()
-        return joined.strip()
-
-    out: List[str] = []
-
-    def walk(n: _Node) -> None:
-        if not n.children:
-            for _slot, t in n.text_parts:
-                out.append(t)
-            return
-        parts = dict_groupby(n.text_parts)
-        for slot in range(len(n.children) + 1):
-            for t in parts.get(slot, ()):
-                out.append(t)
-            if slot < len(n.children):
-                walk(n.children[slot])
-
-    walk(node)
-    joined = "".join(out)
+    else:
+        # iterative pre-order (no recursion limit on nesting depth): a
+        # worklist of text parts and nodes still to expand, next item last
+        out: List[str] = []
+        todo: list = [node]
+        while todo:
+            n = todo.pop()
+            if n.__class__ is str:
+                out.append(n)
+            elif not n.children:
+                out.extend(t for _slot, t in n.text_parts)
+            else:
+                parts = dict_groupby(n.text_parts)
+                seq: list = []
+                for slot, child in enumerate(n.children):
+                    seq += parts.get(slot, ())
+                    seq.append(child)
+                seq += parts.get(len(n.children), ())
+                seq.reverse()
+                todo += seq
+        joined = "".join(out)
     # collapse only when multi-whitespace actually present (hot path)
     if "\n" in joined or "\t" in joined or "  " in joined:
         return _WS_RE.sub(" ", joined).strip()
@@ -237,12 +238,13 @@ def _fast_parse(payload: str) -> Optional[_Node]:
 
 
 def _first_href(node: _Node) -> Optional[str]:
-    if node.tag == "a" and node.attrs.get("href"):
-        return node.attrs["href"]
-    for c in node.children:
-        h = _first_href(c)
-        if h:
-            return h
+    """The first <a href> in document order under node (iterative pre-order)."""
+    todo = [node]
+    while todo:
+        n = todo.pop()
+        if n.tag == "a" and n.attrs.get("href"):
+            return n.attrs["href"]
+        todo += reversed(n.children)
     return None
 
 
@@ -265,19 +267,17 @@ def _collect_fmt(node: _Node) -> Tuple[str, Optional[str]]:
     `Formatting` (document.py:1617-1639): a partially-bold run is emitted
     as a bold span, not split."""
     flags: set = set()
-    href: List[Optional[str]] = [None]
-
-    def rec(n: _Node) -> None:
+    href: Optional[str] = None
+    todo = [node]
+    while todo:  # iterative pre-order: the first <a href> wins
+        n = todo.pop()
         f = _FMT_TAGS.get(n.tag)
         if f:
             flags.add(f)
-        if n.tag == "a" and n.attrs.get("href") and href[0] is None:
-            href[0] = n.attrs["href"]
-        for c in n.children:
-            rec(c)
-
-    rec(node)
-    return "".join(x for x in _FMT_ORDER if x in flags), href[0]
+        if href is None and n.tag == "a" and n.attrs.get("href"):
+            href = n.attrs["href"]
+        todo += reversed(n.children)
+    return "".join(x for x in _FMT_ORDER if x in flags), href
 
 
 def _classes(node: _Node) -> set:
@@ -336,7 +336,10 @@ def _extract_from_root(root: _Node, with_formatting: bool = False) -> List[Span]
             else:
                 spans.append((kind, text, media_ref))
 
-    def walk(node: _Node, furniture: bool, unit_id: Optional[str]) -> None:
+    def walk(node: _Node, furniture: bool, unit_id: Optional[str]):
+        """Emit node's spans; yield (child, furniture, unit_id) for each
+        child to walk at that point — the driver below walks it before
+        resuming, so nesting depth is bounded by memory, not the stack."""
         cls = _classes(node)
         node_id = node.attrs.get("id")
         here_unit = f"#{node_id}" if node_id else unit_id
@@ -404,11 +407,11 @@ def _extract_from_root(root: _Node, with_formatting: bool = False) -> List[Span]
                     if child.tag == "div":
                         flush()
                         in_para[0] = False  # nested block breaks the paragraph
-                        walk(child, here_furniture, here_unit)
+                        yield child, here_furniture, here_unit
                     elif child.tag == "img":
                         flush()
                         in_para[0] = False
-                        walk(child, here_furniture, here_unit)
+                        yield child, here_furniture, here_unit
                     elif child.tag == "a":
                         href = child.attrs.get("href")
                         t = _node_text(child)
@@ -441,7 +444,13 @@ def _extract_from_root(root: _Node, with_formatting: bool = False) -> List[Span]
                 if t2:
                     emit("page_footer" if here_furniture else "text", t2, None)
             if slot < len(node.children):
-                walk(node.children[slot], here_furniture, here_unit)
+                yield node.children[slot], here_furniture, here_unit
 
-    walk(root, False, None)
+    stack = [walk(root, False, None)]
+    while stack:
+        child = next(stack[-1], None)
+        if child is None:
+            stack.pop()
+        else:
+            stack.append(walk(*child))
     return spans

@@ -3,6 +3,8 @@ PDF normalize, hierarchy state machine (pure Python, no Spark)."""
 
 import random
 
+import pytest
+
 from docling_spark.operators.hierarchy import reconstruct
 from docling_spark.operators.html_extract import extract_html_spans
 from docling_spark.operators.pdf_extract import normalize_pdf_spans, _split_merged_row
@@ -63,6 +65,34 @@ def test_html_extract_flat_stream():
     # furniture flagged for the strip stage
     assert "page_footer" in kinds
     assert any("Ministerstvo" in t for k, t in zip(kinds, texts) if k == "page_footer")
+
+
+_DEEP = 20_000
+# (payload, expected spans without formatting) — each nests _DEEP elements
+_DEEP_SHAPES = {
+    # unclosed <p> tags inside a content div: one run of all their text
+    "unclosed_p": ('<div class="text">' + "<p>x " * _DEEP + "</div>",
+                   ("text", " ".join(["x"] * _DEEP), None, "")),
+    # generic containers around a marker div
+    "nested_div": ("<div>" * _DEEP
+                   + '<div class="odsekOznacenie"><a href="#o1">(1)</a></div>'
+                   + "</div>" * _DEEP,
+                   ("text", "(1)", "#o1", "")),
+    # formatting tags around an anchor (hyperlink + flag lookups walk them)
+    "nested_b": ('<div class="text">' + "<b>" * _DEEP + '<a href="#x">x</a></div>',
+                 ("text", "x", "#x", "B")),
+}
+
+
+@pytest.mark.parametrize("with_formatting", [False, True], ids=["plain", "formatted"])
+@pytest.mark.parametrize("prefix", ["", "<!-- c -->"], ids=["fast", "robust"])
+@pytest.mark.parametrize("shape", sorted(_DEEP_SHAPES))
+def test_html_extract_deep_nesting(shape, prefix, with_formatting):
+    # a document nested deeper than Python's recursion limit is extracted,
+    # not lost to a RecursionError
+    payload, (kind, text, ref, fmt) = _DEEP_SHAPES[shape]
+    spans = extract_html_spans(prefix + payload, with_formatting=with_formatting)
+    assert spans == ([(kind, text, ref, fmt)] if with_formatting else [(kind, text, ref)])
 
 
 def test_hierarchy_on_mini_html():
