@@ -658,10 +658,13 @@ def simhash128(docs: DataFrame, id_col: str = "doc_id",
     hashes instead of one), same block equi-join."""
     ext0 = P.simhash_ext_spark("h", fam=0)
     ext1 = P.simhash_ext_spark("h", fam=1)
+    # tokenize + hash once; both limb families extend the same hash array
     d = docs.select(
+        F.col(id_col), F.expr(P.token_hashes_spark(text_col)).alias("_th")
+    ).select(
         F.col(id_col),
-        F.expr(f"transform({P.token_hashes_spark(text_col)}, h -> {ext0})").alias("_eh0"),
-        F.expr(f"transform({P.token_hashes_spark(text_col)}, h -> {ext1})").alias("_eh1"),
+        F.expr(f"transform(_th, h -> {ext0})").alias("_eh0"),
+        F.expr(f"transform(_th, h -> {ext1})").alias("_eh1"),
     )
 
     def fold(eh_col: str) -> F.Column:

@@ -1103,6 +1103,10 @@ def test_simhash128_finds_near_dups(docs):
     assert pairs[(1, 2)] == 0                     # exact dup pair found
     assert 0 < pairs[(1, 3)] <= 15                # near dup, nonzero distance
     assert (1, 5) not in pairs and (2, 5) not in pairs
+    # the tokenize + token hash runs once per document, shared by both
+    # limb families
+    plan = simhash128(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(trim(") == 1
 
 
 def test_simhash128_tighter_than_64(spark):
