@@ -706,18 +706,18 @@ def ann_ivfpq_topk(emb: DataFrame, query_ids, k: int = 10, n_cells: int = 8,
     coarse_metric="l2" codes raw vectors over the SAME L2 cells, the
     controlled flat-vs-residual comparison ann_recall reports."""
     metric = coarse_metric or ("l2" if residual else "dot")
-    # ONE ordered-sample collect feeds both quantizers: the PQ sample
-    # (orderBy id, limit 2048) is by construction a prefix of the coarse
-    # sample (same ordering, limit 10k), so slicing the collected array
-    # is bit-identical to a second collect — and halves the training jobs
+    # ONE ordered-sample collect feeds both quantizers: the coarse sample
+    # (orderBy id, limit 10k) and the PQ sample (limit pq_sample) are
+    # prefixes of the same ordering, so slicing one collect of the larger
+    # is bit-identical to two collects — and halves the training jobs
     # (profiled: per-call training was ~45% of the r4 query wall)
     X = None
     if centroids is None or codebooks is None:
-        X = _ordered_sample_np(emb, 10_000, id_col, vec_col)
+        X = _ordered_sample_np(emb, max(10_000, pq_sample), id_col, vec_col)
     if centroids is not None:
         cent_arr = centroids
     elif metric == "l2":
-        cent_arr = kmeans_lloyd_l2(X, n_cells, coarse_iters, seed)
+        cent_arr = kmeans_lloyd_l2(X[:10_000], n_cells, coarse_iters, seed)
     else:
         cent_arr = _centroids(n_cells, dim, seed)
     if codebooks is None:

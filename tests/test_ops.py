@@ -590,6 +590,35 @@ def test_ann_recall_floor(spark):
     assert recall["ivfpq"] > recall["ivfpq_flat"]
 
 
+def test_ann_ivfpq_pq_sample_above_coarse_sample(spark, monkeypatch):
+    # pq_sample above the coarse quantizer's 10k-row sample trains PQ on
+    # pq_sample rows; the coarse quantizer still sees the first 10k
+    from pyspark.sql import functions as F
+
+    from docling_spark.ops import similarity as S
+
+    seen = {}
+
+    def spy(name):
+        real = getattr(S, name)
+
+        def wrapped(X, *a):
+            seen[name] = len(X)
+            return real(X, *a)
+
+        monkeypatch.setattr(S, name, wrapped)
+
+    spy("kmeans_lloyd_l2")
+    spy("pq_lloyd")
+    emb = spark.range(10_050).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * k) for k in (1, 2, 3, 5)]).alias("embedding"),
+    )
+    S.ann_ivfpq_topk(emb, query_ids=[0], k=2, n_cells=2, m=2, nbits=1, dim=4,
+                     pq_iters=1, pq_sample=10_040, coarse_iters=1)
+    assert seen == {"kmeans_lloyd_l2": 10_000, "pq_lloyd": 10_040}
+
+
 def test_ann_ivfpq_plan_is_cell_equi_join(emb):
     from docling_spark.ops.similarity import ann_ivfpq_topk, train_pq_codebooks
 
