@@ -75,7 +75,6 @@ def regen_goldens():
                 f.write(render(spans))
 
 
-
 def test_render_markdown():
     md = render_markdown(_SPANS)
     assert "# Zákon č. 1/2020 Z. z." in md

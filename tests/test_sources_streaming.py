@@ -183,7 +183,7 @@ def test_write_documents_bucketed_roundtrip(spark, corpus_path, tmp_path):
 
 def test_streaming_serializer_composition(spark, corpus_path, tmp_path):
     """The serializer sinks compose onto the streaming source unchanged
-    (mapInPandas is streaming-safe): readStream → extract → markdown_sink
+    (their mapInArrow stage is streaming-safe): readStream → extract → markdown_sink
     in availableNow mode must equal the batch result row-for-row."""
     from docling_spark.operators.serialize import markdown_sink
     from docling_spark.pipeline import extract
