@@ -359,8 +359,10 @@ def c4_clean(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     lead_cols = [F.col("sent")] + [
         F.lead("sent", i).over(pos_w.orderBy("pos")) for i in range(1, span)
     ]
+    # the window's sentences join on U+001F, the oracle's chr(31)
+    # (__spark_entry__.py:2355): "ab" + "c" must not hash like "a" + "bc"
     spans_df = (
-        sents.withColumn("_w", F.concat_ws("", *lead_cols))
+        sents.withColumn("_w", F.concat_ws("\x1f", *lead_cols))
         .withColumn(
             "_full",
             F.lead("sent", span - 1).over(Window.partitionBy("doc_id").orderBy("pos")).isNotNull(),

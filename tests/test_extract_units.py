@@ -68,7 +68,7 @@ def test_html_extract_flat_stream():
 
 
 _DEEP = 20_000
-# (payload, expected spans without formatting) — each nests _DEEP elements
+# (payload, expected span) — each but the last nests _DEEP elements
 _DEEP_SHAPES = {
     # unclosed <p> tags inside a content div: one run of all their text
     "unclosed_p": ('<div class="text">' + "<p>x " * _DEEP + "</div>",
@@ -81,6 +81,9 @@ _DEEP_SHAPES = {
     # formatting tags around an anchor (hyperlink + flag lookups walk them)
     "nested_b": ('<div class="text">' + "<b>" * _DEEP + '<a href="#x">x</a></div>',
                  ("text", "x", "#x", "B")),
+    # an attribute named like an internal memo key is just an attribute
+    "nul_attr": ('<div class="text" \x00cls="x">hello</div>',
+                 ("text", "hello", None, "")),
 }
 
 
@@ -89,10 +92,36 @@ _DEEP_SHAPES = {
 @pytest.mark.parametrize("shape", sorted(_DEEP_SHAPES))
 def test_html_extract_deep_nesting(shape, prefix, with_formatting):
     # a document nested deeper than Python's recursion limit is extracted,
-    # not lost to a RecursionError
+    # not lost to a RecursionError or another engine limit
     payload, (kind, text, ref, fmt) = _DEEP_SHAPES[shape]
     spans = extract_html_spans(prefix + payload, with_formatting=with_formatting)
     assert spans == ([(kind, text, ref, fmt)] if with_formatting else [(kind, text, ref)])
+
+
+_LINK_DIV = '<div class="text">intro <a href="#a">x</a> tail'
+
+
+@pytest.mark.parametrize("html, expected", [
+    # plain mode: the content div's first <a href> rides every text run
+    (_LINK_DIV + "</div>",
+     [("text", "intro", "#a"), ("text", "x", "#a"), ("text", "tail", "#a")]),
+    # ... unless a child is a div, even a later one
+    (_LINK_DIV + "<div>y</div></div>",
+     [("text", "intro", None), ("text", "x", "#a"), ("text", "tail", None),
+      ("text", "y", None)]),
+    # ... or a marker-class element, even a later one
+    (_LINK_DIV + ' <span class="odsekOznacenie">(2)</span></div>',
+     [("text", "intro", None), ("text", "x", "#a"), ("text", "tail (2)", None)]),
+    # an anchor nested in an inline child still counts, wherever it comes
+    ('<div class="text">intro <b>bold <a href="#late">l</a></b> tail</div>',
+     [("text", "intro bold l tail", "#late")]),
+    # an img splits the run but does not take the link away
+    ('<div class="text">intro <img src="i.png" alt="pic"> tail <a href="#a">x</a></div>',
+     [("text", "intro", "#a"), ("media", "pic", "i.png"), ("text", "tail", "#a"),
+      ("text", "x", "#a")]),
+])
+def test_content_div_hyperlink_rule(html, expected):
+    assert extract_html_spans(html) == expected
 
 
 def test_hierarchy_on_mini_html():

@@ -813,6 +813,9 @@ def test_c4_clean_span_dedup(spark):
         (4, "lorem ipsum dolor sit. more lorem filler text. and yet more filler."),  # policy drop
         (5, "just one short sentence."),                                             # < min_sentences
         (6, "no."),                                                                  # every sentence < min_words
+        # the same words cut at other sentence boundaries: no shared span
+        (7, "one two ab. c three four. five six seven."),
+        (8, "one two a. bc three four. five six seven."),
     ], "doc_id long, text string")
     out = {r["doc_id"]: r for r in c4_clean(docs).collect()}
     assert 4 not in out                       # policy word drops the whole doc
@@ -825,6 +828,8 @@ def test_c4_clean_span_dedup(spark):
     assert "one two three four" in out[1]["clean_text"]
     assert out[3]["n_dropped_dup"] == 0 and out[3]["survived"]
     assert not out[5]["survived"] and out[5]["n_sentences"] == 1
+    for d in (7, 8):
+        assert out[d]["n_dropped_dup"] == 0 and out[d]["survived"]
 
     # word-stream fallback path: identical docs → the later one is excised
     # wholesale and fails the doc gate

@@ -28,7 +28,9 @@ from docling_spark.synth import synth_corpus, synth_html_law, synth_pdf_annex
 def test_fast_parser_equals_stdlib_on_grammar(seed):
     rng = random.Random(seed)
     html = synth_html_law(f"law-{seed}", rng)[0]["text"]
-    assert extract_html_spans(html) == extract_html_spans_robust(html)
+    for with_formatting in (False, True):
+        assert (extract_html_spans(html, with_formatting)
+                == extract_html_spans_robust(html, with_formatting))
 
 
 @settings(max_examples=60, deadline=None)
@@ -181,8 +183,8 @@ def test_hybrid_chunker_budget_invariant_property():
 
 def test_fast_parser_equivalence_fuzzed():
     """Differential fuzz: on arbitrary tag soup (quotes, '>', entities,
-    nesting, truncation), the fast tokenizer must either defer (None) or
-    produce the exact span stream of the stdlib parser."""
+    nesting, truncation), plain and formatted, the fast tokenizer must
+    either defer or produce the exact span stream of the stdlib parser."""
     from hypothesis import given, settings, strategies as st
 
     from docling_spark.operators.html_extract import (
@@ -190,10 +192,14 @@ def test_fast_parser_equivalence_fuzzed():
         extract_html_spans_robust,
     )
 
-    tags = st.sampled_from(["div", "a", "span", "sup", "img", "title", "b"])
-    klass = st.sampled_from(
-        ["text", "odsek", "pismenoOznacenie", "nadpis", "menu", "x y", ""]
-    )
+    tags = st.sampled_from([
+        "div", "a", "span", "sup", "img", "title", "b",
+        "i", "em", "strong", "u", "s", "del", "p", "br",
+    ])
+    klass = st.sampled_from([
+        "text", "odsek", "pismenoOznacenie", "nadpis", "menu", "x y", "",
+        "poznamka", "clanok", "odsekOznacenie", "paragrafNadpis", "footer",
+    ])
     attr_val = st.text(
         alphabet="abc >/'\"&=#-", min_size=0, max_size=12
     )
@@ -205,7 +211,7 @@ def test_fast_parser_equivalence_fuzzed():
     def soup(draw):
         parts = []
         for _ in range(draw(st.integers(0, 12))):
-            kind = draw(st.integers(0, 4))
+            kind = draw(st.integers(0, 5))
             if kind == 0:
                 t = draw(tags)
                 c = draw(klass)
@@ -218,6 +224,9 @@ def test_fast_parser_equivalence_fuzzed():
             elif kind == 3:
                 # attribute value with a quoted '>' — the odd-quote fallback path
                 parts.append(f'<a title="x{draw(st.sampled_from([">", ">>", "a>b"]))}y">')
+            elif kind == 4:
+                # no href: <a> without one, and the other tags
+                parts.append(f'<{draw(tags)} class="{draw(klass)}">')
             else:
                 parts.append(draw(st.sampled_from([
                     "<", ">", "<x", "< div>", "<a b='unterminated>",
@@ -226,10 +235,11 @@ def test_fast_parser_equivalence_fuzzed():
         return "".join(parts)
 
     @settings(max_examples=400, deadline=None)
-    @given(payload=soup())
-    def run(payload):
-        fast = extract_html_spans(payload)       # auto path (fast or fallback)
-        robust = extract_html_spans_robust(payload)
+    @given(payload=soup(), with_formatting=st.booleans())
+    def run(payload, with_formatting):
+        # auto path (fast or fallback) against the stdlib tokenizer
+        fast = extract_html_spans(payload, with_formatting)
+        robust = extract_html_spans_robust(payload, with_formatting)
         assert fast == robust, payload
 
     run()
