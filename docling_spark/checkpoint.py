@@ -6,48 +6,53 @@ cache (/root/reference/annex_processor.py:377-446, process_law.py:104-131):
 
 - documents are hash-bucketed by `pmod(xxhash64(doc_id), n_buckets)` — a
   deterministic, data-independent partitioning that survives restarts;
-- buckets are processed in groups; each completed group appends its output
-  (parquet partitioned by bucket) and a metrics row per bucket
-  (docs, spans_in/out, wall_ms, status='ok');
-- resume = **left anti-join** of the bucket work list against the metrics
-  table's ok buckets: completed ranges are never recomputed.
-
-On Iceberg this maps 1:1 (append-commit per group gives atomicity); plain
-parquet directories stand in for the sandbox.
+- buckets run in groups, one output job per group. The job overwrites the
+  group's `bucket` partitions (dynamic partition overwrite, the shape of
+  Iceberg's `overwritePartitions`), so a group that runs again after a
+  crash replaces its output rather than appending a second copy;
+- Spark `Observation`s count each bucket's docs, spans in/out and error
+  docs inside that job; one small job then appends them as one metrics
+  file per group, one `ok` row per bucket, empty buckets included;
+- resume reads the metrics table through Spark (any Hadoop path or URI)
+  and skips every bucket with an `ok` row for the stage; a missing table
+  means nothing is done. A group whose output was written but whose
+  metrics were not simply runs again.
 """
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pandas as pd
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from docling_spark.pipeline import extract
 from docling_spark.schema import METRICS_DDL
 
 
 def _completed_buckets(spark: SparkSession, metrics_path: str, run_scope: str) -> List[int]:
-    if not os.path.isdir(metrics_path) or not any(
-        f.endswith(".parquet") for f in _walk_files(metrics_path)
-    ):
-        return []
-    m = spark.read.parquet(metrics_path)
-    rows = (
-        m.filter((F.col("status") == "ok") & (F.col("stage") == run_scope))
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    return sorted(r["bucket"] for r in rows)
+    try:
+        m = spark.read.schema(METRICS_DDL).parquet(metrics_path)
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return []
+        raise
+    rows = m.filter((F.col("status") == "ok") & (F.col("stage") == run_scope)).select("bucket")
+    return sorted({r["bucket"] for r in rows.collect()})
 
 
-def _walk_files(root: str):
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            yield os.path.join(dirpath, f)
+def _observe(df: DataFrame, group: List[int], **values: Column) -> Tuple[DataFrame, Observation]:
+    """`df` observed with one `<name>_<bucket>` sum per bucket of `group` per
+    named value, 0 for a bucket without rows."""
+    obs = Observation()
+    df = df.observe(obs, *[
+        F.coalesce(F.sum(F.when(F.col("bucket") == b, v)), F.lit(0)).alias(f"{name}_{b}")
+        for name, v in values.items() for b in group
+    ])
+    return df, obs
 
 
 def run_extract(
@@ -76,53 +81,39 @@ def run_extract(
     todo = [b for b in range(n_buckets) if b not in done]
     groups = [todo[i : i + group_size] for i in range(0, len(todo), group_size)]
 
-    processed_groups = 0
+    processed_groups, crashed = 0, False
     for group in groups:
         t0 = time.time()
-        part = docs.filter(F.col("bucket").isin(group))
-        out = extract(part, extra_cols=", bucket int")
-        out.write.mode("append").partitionBy("bucket").parquet(output_path)
-
+        part, seen_in = _observe(
+            docs.filter(F.col("bucket").isin(group)), group, spans_in=F.size("spans")
+        )
+        out, seen_out = _observe(
+            extract(part, extra_cols=", bucket int"), group,
+            docs=F.lit(1), spans_out=F.size("spans"),
+            error_docs=F.exists("spans", lambda s: s["kind"] == "error").cast("int"),
+        )
+        (out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket").parquet(output_path))
         wall_ms = int((time.time() - t0) * 1000)
-        # lineage metrics per bucket (native agg over the freshly written
-        # group — reads back only this group's partitions)
-        written = spark.read.parquet(output_path).filter(F.col("bucket").isin(group))
-        stats_out = written.groupBy("bucket").agg(
-            F.count("*").alias("docs"), F.sum(F.size("spans")).alias("spans_out")
-        )
-        stats_in = part.groupBy("bucket").agg(
-            F.sum(F.size("spans")).alias("spans_in")
-        )
-        metrics = (
-            stats_out.join(stats_in, "bucket", "left")
-            .select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("bucket"),
-                F.col("docs"),
-                F.col("spans_in"),
-                F.col("spans_out"),
-                F.lit(0).cast("long").alias("tables_assigned"),
-                F.lit(0).cast("long").alias("tables_unassigned"),
-                F.lit(0).cast("long").alias("duplicates"),
-                F.lit("ok").alias("status"),
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-            )
-        )
-        metrics.write.mode("append").parquet(metrics_path)
+
+        n = {**seen_in.get, **seen_out.get}
+        rows = [
+            (run_id, stage, b, n[f"docs_{b}"], n[f"spans_in_{b}"], n[f"spans_out_{b}"],
+             n[f"error_docs_{b}"], "ok", wall_ms)
+            for b in group
+        ]
+        # from pandas, so the rows go over Arrow rather than a Python-worker RDD
+        metrics = spark.createDataFrame(pd.DataFrame(rows), METRICS_DDL)
+        metrics.coalesce(1).write.mode("append").parquet(metrics_path)
 
         processed_groups += 1
         if fail_after_groups is not None and processed_groups >= fail_after_groups:
-            return {
-                "run_id": run_id,
-                "resumed_from": len(done),
-                "groups_run": processed_groups,
-                "completed": False,
-            }
+            crashed = True
+            break
 
     return {
         "run_id": run_id,
         "resumed_from": len(done),
         "groups_run": processed_groups,
-        "completed": True,
+        "completed": not crashed,
     }

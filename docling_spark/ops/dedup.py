@@ -553,7 +553,7 @@ def _dup_components_star(pairs: DataFrame, id_a: str, id_b: str,
 def neardup_curation(docs: DataFrame, pairs: DataFrame,
                      id_col: str = "doc_id", id_a: str = "id_a",
                      id_b: str = "id_b",
-                     algorithm: str = "label_prop") -> DataFrame:
+                     algorithm: str = "auto") -> DataFrame:
     """Near-duplicate removal: given a verified near-dup pair list, keep ONE
     representative (the min id) per duplicate group plus every unpaired doc
     — the keep-first policy of exact dedup extended to fuzzy groups (the
@@ -564,7 +564,9 @@ def neardup_curation(docs: DataFrame, pairs: DataFrame,
     to the corpus), then one left ANTI-join of the corpus against the
     non-representative members — the corpus shuffles once on doc_id, or
     not at all when AQE broadcasts the loser side (dup members are
-    typically ≪ corpus). Returns the curated frame with the input columns
+    typically ≪ corpus). `algorithm` is passed to `dup_components`, whose
+    default "auto" finds components by a driver union-find when the pair
+    list is small. Returns the curated frame with the input columns
     unchanged."""
     comps = dup_components(pairs, id_a=id_a, id_b=id_b, algorithm=algorithm)
     losers = comps.filter(F.col("doc_id") != F.col("component_id")).select(

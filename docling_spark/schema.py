@@ -89,26 +89,13 @@ KV_KINDS = {"kv", "kv_value", "form_field", "form_value"}
 # FIXTURES.md §4
 # ---------------------------------------------------------------------------
 
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("docs", T.LongType(), True),
-        T.StructField("spans_in", T.LongType(), True),
-        T.StructField("spans_out", T.LongType(), True),
-        T.StructField("tables_assigned", T.LongType(), True),
-        T.StructField("tables_unassigned", T.LongType(), True),
-        T.StructField("duplicates", T.LongType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
-    ]
-)
-
+# One row per bucket per completed group (checkpoint.run_extract). `docs`,
+# `spans_in`, `spans_out` and `error_docs` (documents holding an `error`
+# span) are the bucket's own counts; `wall_ms` is the wall time of the
+# bucket's whole group, written on each of the group's rows.
 METRICS_DDL = (
     "run_id string, stage string, bucket int, docs long, spans_in long, "
-    "spans_out long, tables_assigned long, tables_unassigned long, "
-    "duplicates long, status string, wall_ms long"
+    "spans_out long, error_docs long, status string, wall_ms long"
 )
 
 # ---------------------------------------------------------------------------

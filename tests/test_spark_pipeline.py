@@ -6,6 +6,7 @@ verify_results_identical equivalence harness,
 recomputing completed buckets."""
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -50,13 +51,16 @@ def test_output_offsets_dense(spark, corpus_path):
     assert bad == 0
 
 
-def test_checkpoint_resume_no_recompute(spark, corpus_path, tmp_path):
-    out_dir = str(tmp_path / "out")
-    metrics_dir = str(tmp_path / "metrics")
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_checkpoint_resume_no_recompute(spark, corpus_path, tmp_path, as_uri):
+    # resume must also see finished buckets through a URI, not only a path
+    base = tmp_path.as_uri() if as_uri else str(tmp_path)
+    out_dir, metrics_dir = f"{base}/out", f"{base}/metrics"
+    in_path = f"file://{corpus_path}" if as_uri else corpus_path
 
     # first run crashes after 2 of 4 groups
     r1 = run_extract(
-        spark, corpus_path, out_dir, metrics_dir,
+        spark, in_path, out_dir, metrics_dir,
         n_buckets=8, group_size=2, fail_after_groups=2,
     )
     assert not r1["completed"]
@@ -66,14 +70,14 @@ def test_checkpoint_resume_no_recompute(spark, corpus_path, tmp_path):
     assert done_after_crash == 4
 
     # resume: must only run the remaining 2 groups
-    r2 = run_extract(spark, corpus_path, out_dir, metrics_dir, n_buckets=8, group_size=2)
+    r2 = run_extract(spark, in_path, out_dir, metrics_dir, n_buckets=8, group_size=2)
     assert r2["completed"]
     assert r2["resumed_from"] == 4
     assert r2["groups_run"] == 2
 
     # final table complete and identical to a direct run
     final = spark.read.parquet(out_dir)
-    assert final.select("doc_id").distinct().count() == 60
+    assert final.count() == final.select("doc_id").distinct().count() == 60
     direct = extract(spark.read.parquet(corpus_path))
     joined = (
         final.select("doc_id", F.to_json("spans").alias("a"))
@@ -83,10 +87,29 @@ def test_checkpoint_resume_no_recompute(spark, corpus_path, tmp_path):
     )
     assert joined == 0
 
-    # metrics lineage is complete: every bucket has docs + span counts
+    # metrics lineage: one ok row per bucket, holding the bucket's counts
+    # recomputed from the input and the output
     m = spark.read.parquet(metrics_dir).filter("status='ok'")
-    assert m.select("bucket").distinct().count() == 8
-    assert m.filter("docs is null or spans_out is null").count() == 0
+    got = {
+        r["bucket"]: (r["docs"], r["spans_in"], r["spans_out"], r["error_docs"])
+        for r in m.collect()
+    }
+    assert m.count() == len(got) and sorted(got) == list(range(8))
+    spans_in = {
+        r["bucket"]: r["n"]
+        for r in spark.read.parquet(corpus_path)
+        .groupBy(F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("bucket"))
+        .agg(F.sum(F.size("spans")).alias("n")).collect()
+    }
+    want = {
+        r["bucket"]: (r["docs"], spans_in[r["bucket"]], r["spans_out"], r["error_docs"])
+        for r in final.groupBy("bucket").agg(
+            F.count("*").alias("docs"),
+            F.sum(F.size("spans")).alias("spans_out"),
+            F.count_if(F.exists("spans", lambda s: s["kind"] == "error")).alias("error_docs"),
+        ).collect()
+    }
+    assert got == {b: want.get(b, (0, 0, 0, 0)) for b in range(8)}
 
 
 def test_idempotent_rerun_skips_everything(spark, corpus_path, tmp_path):
@@ -95,6 +118,14 @@ def test_idempotent_rerun_skips_everything(spark, corpus_path, tmp_path):
     run_extract(spark, corpus_path, out_dir, metrics_dir, n_buckets=4, group_size=4)
     r = run_extract(spark, corpus_path, out_dir, metrics_dir, n_buckets=4, group_size=4)
     assert r["groups_run"] == 0 and r["resumed_from"] == 4
+
+    # output written but no metrics (a crash between the two writes): the
+    # groups run again and replace their output instead of appending to it
+    shutil.rmtree(metrics_dir)
+    r = run_extract(spark, corpus_path, out_dir, metrics_dir, n_buckets=4, group_size=4)
+    assert r["groups_run"] == 1 and r["resumed_from"] == 0
+    out = spark.read.parquet(out_dir)
+    assert out.count() == out.select("doc_id").distinct().count() == 60
 
 
 def test_window_form_reproduces_unit_assignment(spark, corpus_path):

@@ -6,9 +6,10 @@
         --conf spark.sql.execution.arrow.pyspark.enabled=true \
         tools/submit_job.py <input_parquet_or_iceberg> <output_path> <metrics_path>
 
-Runs the checkpointed, resumable extraction (bucket lineage + metrics,
-anti-join resume) — kill it mid-run and re-submit with the same paths to
-resume without recompute. The driver imports docling_spark from the shipped
+Runs the checkpointed, resumable extraction (bucket lineage + metrics;
+buckets with an `ok` metrics row are skipped on restart) — kill it mid-run
+and re-submit with the same paths, plain or as URIs (`file://`, `hdfs://`,
+`s3a://`), to resume without recompute. The driver imports docling_spark from the shipped
 zip; nothing here assumes a repo checkout on the executors.
 """
 
