@@ -514,8 +514,9 @@ def q_minhash_candidate_ratio(spark, sf_dir):
 
 def q_minhash_dup_groups(spark, sf_dir):
     # the dedup capstone: LSH candidates → exact-Jaccard verify → connected
-    # components → (doc_id, component_id); an iterative min-label propagation
-    # on Spark, a recursive transitive-closure CTE in the oracle
+    # components → (doc_id, component_id); a driver union-find (star
+    # contraction above its pair bound) on Spark, a recursive
+    # transitive-closure CTE in the oracle
     from docling_spark.ops.dedup import dup_components
 
     verified = q_minhash_verified_pairs(spark, sf_dir).filter(

@@ -26,7 +26,6 @@ import uuid
 from typing import List, Optional, Tuple
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from docling_spark.pipeline import extract
@@ -34,12 +33,13 @@ from docling_spark.schema import METRICS_DDL
 
 
 def _completed_buckets(spark: SparkSession, metrics_path: str, run_scope: str) -> List[int]:
-    try:
-        m = spark.read.schema(METRICS_DDL).parquet(metrics_path)
-    except AnalysisException as exc:
-        if exc.getCondition() == "PATH_NOT_FOUND":
-            return []
-        raise
+    # ask the path's Hadoop file system first: a read of a missing path fails
+    # after Spark has already logged its stack traces
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(metrics_path)
+    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
+        return []
+    m = spark.read.schema(METRICS_DDL).parquet(metrics_path)
     rows = m.filter((F.col("status") == "ok") & (F.col("stage") == run_scope)).select("bucket")
     return sorted({r["bucket"] for r in rows.collect()})
 

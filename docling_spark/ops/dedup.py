@@ -8,6 +8,9 @@ All hot paths are JVM-side built-ins (whole-stage codegen) — no Python UDFs:
   so no skew salting needed)
 - simhash: bitwise majority over token hashes
 - n-gram Jaccard: blocked self-join + array_intersect/array_union
+- connected components over a pair list: driver union-find up to
+  `_DRIVER_MAX_PAIRS` pairs (result handed back as an Arrow local relation),
+  large-star/small-star contraction on Spark above it
 
 At 100 TB: exact dedup shuffles only (hash, length) pairs — project before
 grouping. MinHash shuffles signatures (16×8 bytes/doc), not text. Verify-join
@@ -16,6 +19,7 @@ pulls full shingle arrays only for candidate pairs (tiny fraction).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from docling_spark.ops import portable as P
@@ -69,8 +73,7 @@ def minhash_band_pairs(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
                        n_hashes: int = MINHASH_N_HASHES,
                        band_size: int = MINHASH_BAND_SIZE,
-                       shingle_n: int = MINHASH_SHINGLE_N,
-                       materialize: bool = True) -> DataFrame:
+                       shingle_n: int = MINHASH_SHINGLE_N) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) that collide in ≥1 LSH band.
 
     bands of `band_size` rows: docs agreeing on ALL rows of any band become
@@ -79,11 +82,11 @@ def minhash_band_pairs(docs: DataFrame, id_col: str = "doc_id",
     would otherwise cross-match as an empty band key); shingles exist iff
     token count ≥ shingle_n, so the guard is a cheap size predicate.
 
-    `materialize=True` localCheckpoints the banded keys before the
-    self-join: Spark has no subplan reuse, so both join sides would
-    otherwise recompute the shingle/signature pipeline — the standard
-    production shape writes the signature table once and joins it, and the
-    eager checkpoint is the in-query equivalent (~2x on the pair queries)."""
+    The banded keys are localCheckpointed before the self-join: Spark has
+    no subplan reuse, so both join sides would otherwise recompute the
+    shingle/signature pipeline — the standard production shape writes the
+    signature table once and joins it, and the eager checkpoint is the
+    in-query equivalent (~2x on the pair queries)."""
     docs = docs.filter(
         F.size(F.expr(P.tokens_spark(text_col))) >= F.lit(shingle_n)
     )
@@ -97,9 +100,7 @@ def minhash_band_pairs(docs: DataFrame, id_col: str = "doc_id",
         band_cols.append(F.struct(F.lit(b).alias("band_id"), key.alias("band_key")))
     banded = sig.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_id", "band.band_key")
-    if materialize:
-        banded = banded.localCheckpoint()
+    ).select(id_col, "band.band_id", "band.band_key").localCheckpoint()
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -144,8 +145,7 @@ def minhash_candidate_stats(docs: DataFrame, id_col: str = "doc_id",
 
 def simhash_neardup_pairs(docs: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", bits: int = 64,
-                          max_hamming: int = 3,
-                          materialize: bool = True) -> DataFrame:
+                          max_hamming: int = 3) -> DataFrame:
     """(id_a, id_b, hamming) pairs with simhash hamming distance ≤
     `max_hamming`, found WITHOUT an all-pairs compare.
 
@@ -169,9 +169,9 @@ def simhash_neardup_pairs(docs: DataFrame, id_col: str = "doc_id",
     if bits == 128:
         sig = simhash128(docs, id_col, text_col)
         return hamming_pairs(sig, id_col, ["simhash_lo", "simhash_hi"],
-                             128, max_hamming, materialize)
+                             128, max_hamming)
     sig = simhash(docs, id_col, text_col, bits)
-    return hamming_pairs(sig, id_col, "simhash", bits, max_hamming, materialize)
+    return hamming_pairs(sig, id_col, "simhash", bits, max_hamming)
 
 
 def simhash_block_stats(docs: DataFrame, id_col: str = "doc_id",
@@ -196,8 +196,7 @@ def simhash_block_stats(docs: DataFrame, id_col: str = "doc_id",
     else:
         sig = simhash(docs, id_col, text_col, bits)
         vcols = "simhash"
-    cand = hamming_pairs(sig, id_col, vcols, bits, max_hamming,
-                         materialize=True, verify=False)
+    cand = hamming_pairs(sig, id_col, vcols, bits, max_hamming, verify=False)
     n_cand = cand.agg(F.count("*").cast("long").alias("n_block_candidate_pairs"))
     n_ver = (
         cand.filter(F.col("hamming") <= max_hamming)
@@ -219,7 +218,7 @@ def simhash_block_stats(docs: DataFrame, id_col: str = "doc_id",
 
 def hamming_pairs(sig: DataFrame, id_col: str, value_col,
                   bits: int = 64, max_hamming: int = 3,
-                  materialize: bool = True, verify: bool = True) -> DataFrame:
+                  verify: bool = True) -> DataFrame:
     """The pigeonhole hamming search over ANY (id, fingerprint) relation —
     shared by simhash text near-dup and perceptual image-hash near-dup
     (ops.multimodal.image_neardup_pairs). See simhash_neardup_pairs for the
@@ -248,16 +247,14 @@ def hamming_pairs(sig: DataFrame, id_col: str, value_col,
         assert sh + w <= 64, "pigeonhole block straddles a fingerprint long"
         val = F.expr(f"shiftrightunsigned({value_cols[ci]}, {sh}) & {(1 << w) - 1}L")
         blocks.append(F.struct(F.lit(b).alias("block_id"), val.alias("block_val")))
+    # Spark has no subplan reuse: both self-join sides would recompute the
+    # fingerprint sub-plan. Materializing the block keys (8 bytes ×
+    # n_blocks/doc) is the in-query form of the production
+    # write-fingerprints-once shape — same as the minhash band keys.
     keyed = sig.select(
         F.col(id_col), *[F.col(c) for c in value_cols],
         F.explode(F.array(*blocks)).alias("blk"),
-    ).select(id_col, *value_cols, "blk.block_id", "blk.block_val")
-    if materialize:
-        # Spark has no subplan reuse: both self-join sides would recompute
-        # the fingerprint sub-plan. Materializing the block keys (8 bytes ×
-        # n_blocks/doc) is the in-query form of the production
-        # write-fingerprints-once shape — same as the minhash band keys.
-        keyed = keyed.localCheckpoint()
+    ).select(id_col, *value_cols, "blk.block_id", "blk.block_val").localCheckpoint()
     a, b = keyed.alias("a"), keyed.alias("b")
     ham = F.expr(
         " + ".join(f"bit_count(a.{c} ^ b.{c})" for c in value_cols)
@@ -330,110 +327,44 @@ def shared_window_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+# Pair lists at or under this many rows are collected to the driver for
+# union-find: at 2M pairs over 1M ids the driver's Python memory grew by
+# about 450 MB (4-core VM) — the same bounded-collect discipline as the
+# k-means training samples. Above it the star contraction runs on Spark.
+_DRIVER_MAX_PAIRS = 2_000_000
+# Round budget of the star contraction; it needs O(log n) rounds on any shape.
+_MAX_ROUNDS = 50
+
+
 def dup_components(pairs: DataFrame, id_a: str = "id_a",
-                   id_b: str = "id_b", max_iters: int = 50,
-                   algorithm: str = "auto",
-                   on_nonconverged: str = "raise",
-                   switch_after: int = 8,
-                   driver_max_pairs: int = 2_000_000) -> DataFrame:
+                   id_b: str = "id_b") -> DataFrame:
     """Connected components over a duplicate-pair edge list →
     (doc_id, component_id) where component_id = min doc_id in the group.
 
-    `algorithm="auto"` (default) first materializes the pair list and
-    counts it. At or under `driver_max_pairs` (default 2M; at 2M pairs
-    over 1M ids the driver's Python memory grew by about 450 MB, measured
-    on a 4-core VM — the same bounded-collect discipline as the k-means
-    training samples) the components come from a DRIVER union-find over the
-    pairs collected as two Arrow id columns: the pair list is the
-    already-reduced output of the dedup miners, and a multi-round Spark
-    join loop on a few hundred thousand edges pays tens of scheduling
-    round-trips for work a union-find finishes in milliseconds — the
-    label-prop loop on a 524-edge list measured 12 s of pure round
-    overhead. Above the bound (the true 100-TB regime) the distributed
-    path engages: min-label propagation with a round budget of
-    `switch_after`; if no fixpoint by then — the diameter pre-check,
-    observed not guessed — fall back to the O(log n) star contraction
-    for the full `max_iters`.
-
-    `algorithm="label_prop"`: iterative min-label propagation only — each
-    node repeatedly adopts the smallest label among itself and its
-    neighbours until a fixpoint — the standard Spark CC loop (HashToMin
-    family; O(diameter) rounds). Per round: one grouped min over the
-    undirected edge list joined to current labels — all hash shuffles on
-    node id. localCheckpoint truncates the lineage so the loop's plan
-    doesn't grow per iteration.
-
-    `algorithm="star"`: the large-star/small-star contraction (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14) — O(log n)
-    rounds on ANY graph shape, for mega-components / long chains where
-    O(diameter) is too many rounds. Same join primitives.
-
-    Exhausting the budget without a fixpoint would silently return
-    over-split labels; `on_nonconverged` controls that: "raise" (default)
-    or "warn" (log and return the partial labels)."""
-    if algorithm == "star":
-        return _dup_components_star(pairs, id_a, id_b, max_iters, on_nonconverged)
-    if algorithm == "auto":
-        pairs = pairs.localCheckpoint()  # compute the upstream miners once
-        if pairs.count() <= driver_max_pairs:
-            return _dup_components_driver(pairs, id_a, id_b)
-    budget = min(switch_after, max_iters) if algorithm == "auto" else max_iters
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        # eager checkpoint: edges are re-joined every round — without this
-        # the upstream pair-mining pipeline re-executes per iteration
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(budget):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        if algorithm == "auto":
-            # high-diameter graph detected (no fixpoint in `switch_after`
-            # rounds) — restart with the O(log n) contraction
-            return _dup_components_star(
-                pairs, id_a, id_b, max_iters, on_nonconverged
-            )
-        _nonconverged(budget, on_nonconverged)
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("component_id")
-    )
+    The pair list is localCheckpointed once (the upstream miners run once),
+    then at most `_DRIVER_MAX_PAIRS + 1` rows are collected as two Arrow id
+    columns; that row count picks the path, with no separate count job.
+    At or under the bound the components come from a DRIVER union-find: the
+    pair list is the already-reduced output of the dedup miners, and a
+    multi-round Spark join loop on a few hundred thousand edges pays tens
+    of scheduling round-trips for work a union-find finishes in
+    milliseconds. The result goes back to Spark as an Arrow table, a local
+    relation whose size the planner knows, so a join against it broadcasts.
+    Above the bound (the true 100-TB regime) the large-star/small-star
+    contraction runs on Spark (`_dup_components_star`); a graph it cannot
+    contract in `_MAX_ROUNDS` rounds raises rather than return over-split
+    labels."""
+    pairs = pairs.localCheckpoint()  # compute the upstream miners once
+    ids = pairs.select(id_a, id_b).limit(_DRIVER_MAX_PAIRS + 1).toArrow()
+    if ids.num_rows <= _DRIVER_MAX_PAIRS:
+        return _dup_components_driver(pairs.sparkSession, ids)
+    return _dup_components_star(pairs, id_a, id_b)
 
 
-def _dup_components_driver(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
-    """Union-find over a collected (bounded — see dup_components) pair
-    list, read as two Arrow id columns rather than Rows; exact same output
-    contract: component_id = min node id."""
-    ids = pairs.select(id_a, id_b).toArrow()
+def _dup_components_driver(spark, ids) -> DataFrame:
+    """Union-find over the collected two-column Arrow pair table; exact same
+    output contract as the star path: component_id = min node id, typed
+    like the first id column."""
     col_a, col_b = ids.column(0).to_pylist(), ids.column(1).to_pylist()
     parent: dict = {}
 
@@ -450,32 +381,14 @@ def _dup_components_driver(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
         if a != b:
             parent[max(a, b)] = min(a, b)  # min-id root ⇒ min-id component
     nodes = sorted(set(col_a) | set(col_b))
-    out = [(n, find(n)) for n in nodes]
-    from pyspark.sql.types import StructField, StructType
-
-    id_type = pairs.schema[id_a].dataType
-    schema = StructType([StructField("doc_id", id_type),
-                         StructField("component_id", id_type)])
-    return pairs.sparkSession.createDataFrame(out, schema)
+    id_type = ids.schema.field(0).type
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array(nodes, id_type),
+        "component_id": pa.array([find(n) for n in nodes], id_type),
+    }))
 
 
-def _nonconverged(max_iters: int, action: str) -> None:
-    msg = (
-        f"connected components did not reach a fixpoint in {max_iters} "
-        f"iterations — labels would be over-split (a chain-shaped component "
-        f"longer than max_iters hops). Raise max_iters or use "
-        f'algorithm="star" (O(log n) rounds).'
-    )
-    if action == "warn":
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
-    else:
-        raise RuntimeError(msg)
-
-
-def _dup_components_star(pairs: DataFrame, id_a: str, id_b: str,
-                         max_iters: int, on_nonconverged: str) -> DataFrame:
+def _dup_components_star(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     """Alternating large-star/small-star contraction (Kiveris SoCC'14 §3).
 
     Invariants per round: large-star hangs every strictly-larger neighbor
@@ -511,7 +424,7 @@ def _dup_components_star(pairs: DataFrame, id_a: str, id_b: str,
         return (row["n"], row["h"])
 
     prev = _checksum(directed)
-    for _ in range(max_iters):
+    for _ in range(_MAX_ROUNDS):
         sym = directed.union(directed.select(F.col("v").alias("u"), F.col("u").alias("v")))
         # large-star: m(u) = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u
         m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
@@ -538,7 +451,10 @@ def _dup_components_star(pairs: DataFrame, id_a: str, id_b: str,
             break
         prev = cur
     else:
-        _nonconverged(max_iters, on_nonconverged)
+        raise RuntimeError(
+            f"connected components did not reach a fixpoint in {_MAX_ROUNDS} "
+            f"star-contraction rounds — labels would be over-split."
+        )
     # at the fixpoint `directed` is a star forest: node → component min;
     # component minima have no outgoing edge and label themselves
     return nodes.join(
@@ -562,13 +478,14 @@ def neardup_curation(docs: DataFrame, pairs: DataFrame,
 
     Shape at scale: connected components over the pair list (tiny relative
     to the corpus), then one left ANTI-join of the corpus against the
-    non-representative members — the corpus shuffles once on doc_id, or
-    not at all when AQE broadcasts the loser side (dup members are
-    typically ≪ corpus). `algorithm` is passed to `dup_components`, whose
-    default "auto" finds components by a driver union-find when the pair
-    list is small. Returns the curated frame with the input columns
-    unchanged."""
-    comps = dup_components(pairs, id_a=id_a, id_b=id_b, algorithm=algorithm)
+    non-representative members. Under `dup_components`' driver bound the
+    components are a local relation of known size, so the loser side is
+    broadcast and the corpus is not shuffled at all. `algorithm` accepts
+    only "auto" and is kept for existing callers. Returns the curated frame
+    with the input columns unchanged."""
+    if algorithm != "auto":
+        raise ValueError(f'algorithm must be "auto", got {algorithm!r}')
+    comps = dup_components(pairs, id_a=id_a, id_b=id_b)
     losers = comps.filter(F.col("doc_id") != F.col("component_id")).select(
         F.col("doc_id").alias(id_col)
     )

@@ -15,6 +15,7 @@ JVM-side — no Python in the hot path.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -189,9 +190,13 @@ def train_centroids_l2(emb: DataFrame, n_cells: int = 8, dim: int = 64,
 def _centroid_df(spark, cents: np.ndarray) -> DataFrame:
     """Centroids as a tiny broadcastable DataFrame (cell, c) — data, not
     code: inlining them as column-expression literals blows the whole-stage
-    codegen source past 2 MB and costs seconds of JIT compile per query."""
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
-    return spark.createDataFrame(rows, "cell long, c array<double>")
+    codegen source past 2 MB and costs seconds of JIT compile per query.
+    Built from Arrow, so it plans as a local relation, not a Python RDD."""
+    cents = np.asarray(cents, dtype=np.float64)
+    return spark.createDataFrame(pa.table({
+        "cell": pa.array(np.arange(len(cents), dtype=np.int64)),
+        "c": pa.array(list(cents), pa.list_(pa.float64())),
+    }))
 
 
 # fine-codebook size at which top-1 assignment switches to the two-level
@@ -793,8 +798,9 @@ def semdedup(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     population stays bounded, turning all-pairs O(N²) into Σ|cell|².
     The cell self-join is an equi-join (hash shuffle on cell), the
     centroid table is a broadcast literal, components run on the tiny
-    above-threshold pair list (ops.dedup.dup_components, O(log n) star
-    fallback), and the keep rule is one min(struct) per component — no
+    above-threshold pair list (ops.dedup.dup_components: a driver
+    union-find under its pair bound, the O(log n) star contraction above
+    it), and the keep rule is one min(struct) per component — no
     global all-pairs anywhere. Cosines are rounded to 6dp before the
     threshold compare so the decision is bit-identical across engines
     (same discipline as embedding_neardup_pairs).

@@ -420,11 +420,13 @@ def test_multimodal_real_decoders(spark):
     assert parsed is not None and parsed[0] == 1 and parsed[1] == 1
 
 
-def test_dup_components_star_matches_label_prop(spark):
-    # the two CC algorithms must produce identical components on an
-    # arbitrary mixed graph (cliques + chains + isolated pairs)
+def test_dup_components_star_matches_driver(spark, monkeypatch):
+    # the driver union-find and the star contraction (forced by a pair
+    # bound of 0) must produce identical components on an arbitrary mixed
+    # graph (cliques + chains + isolated pairs)
     import random
 
+    from docling_spark.ops import dedup
     from docling_spark.ops.dedup import dup_components
 
     rng = random.Random(7)
@@ -437,43 +439,45 @@ def test_dup_components_star_matches_label_prop(spark):
     rows = [(a, b) for a, b in sorted(edges)]
     rng.shuffle(rows)
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-    lp = {r["doc_id"]: r["component_id"]
-          for r in dup_components(pairs).collect()}
+    drv = {r["doc_id"]: r["component_id"]
+           for r in dup_components(pairs).collect()}
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
     st = {r["doc_id"]: r["component_id"]
-          for r in dup_components(pairs, algorithm="star").collect()}
-    assert lp == st
-    assert lp[305] == 300 and lp[105] == 100 and lp[501] == 500
+          for r in dup_components(pairs).collect()}
+    assert drv == st
+    assert drv[305] == 300 and drv[105] == 100 and drv[501] == 500
 
 
-def test_dup_components_nonconvergence_raises_and_star_converges(spark):
-    # ADVICE regression: a chain longer than max_iters hops used to return
-    # silently over-split labels; now it raises. The star contraction
-    # converges in O(log n) rounds on the same graph.
+def test_dup_components_nonconvergence_raises_and_star_converges(spark, monkeypatch):
+    # regression: a chain longer than the round budget used to
+    # return silently over-split labels; now it raises. The star
+    # contraction converges in O(log n) rounds on the same graph.
     import pytest as _pytest
 
+    from docling_spark.ops import dedup
     from docling_spark.ops.dedup import dup_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "id_a long, id_b long"
     )
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 0)
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 2)
     with _pytest.raises(RuntimeError, match="fixpoint"):
-        dup_components(chain, algorithm="label_prop", max_iters=5).collect()
-    with _pytest.warns(RuntimeWarning, match="fixpoint"):
-        dup_components(chain, algorithm="label_prop", max_iters=5,
-                       on_nonconverged="warn").collect()
+        dup_components(chain).collect()
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 12)
     st = {r["doc_id"]: r["component_id"]
-          for r in dup_components(chain, algorithm="star", max_iters=12).collect()}
+          for r in dup_components(chain).collect()}
     assert set(st.values()) == {0} and len(st) == 61
-    # auto on a small list: driver union-find — exact on any shape,
-    # no round budget involved
+    # a list AT the bound still takes the driver union-find — exact on any
+    # shape, no round budget involved; one pair over it takes the star path
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 2)
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 60)
     au = {r["doc_id"]: r["component_id"]
           for r in dup_components(chain).collect()}
     assert au == st
-    # auto ABOVE the driver bound: distributed path engages and the
-    # star fallback still converges on the chain
-    dist = {r["doc_id"]: r["component_id"]
-            for r in dup_components(chain, driver_max_pairs=10).collect()}
-    assert dist == st
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_PAIRS", 59)
+    with _pytest.raises(RuntimeError, match="fixpoint"):
+        dup_components(chain).collect()
 
 
 def test_neardup_curation_keeps_representative(docs, spark):
@@ -485,6 +489,8 @@ def test_neardup_curation_keeps_representative(docs, spark):
     assert kept == {1, 4, 5}
     # columns unchanged
     assert neardup_curation(docs, pairs).columns == docs.columns
+    with pytest.raises(ValueError, match="auto"):
+        neardup_curation(docs, pairs, algorithm="star")
 
 
 def test_ann_ivfpq(emb):
@@ -1169,14 +1175,12 @@ def test_hamming_pairs_multi_long_block_mapping(spark):
 
     rows = [(1, 5, 0), (2, 5, 1 << 40)]
     sig = spark.createDataFrame(rows, "id long, lo long, hi long")
-    out = hamming_pairs(sig, "id", ["lo", "hi"], bits=128, max_hamming=3,
-                        materialize=False).collect()
+    out = hamming_pairs(sig, "id", ["lo", "hi"], bits=128, max_hamming=3).collect()
     assert len(out) == 1 and out[0]["hamming"] == 1
     far = spark.createDataFrame([(1, 5, 0), (2, 5, (1 << 40) | (1 << 50) |
                                  (1 << 60) | 7 << 33)],
                                 "id long, lo long, hi long")
-    got = hamming_pairs(far, "id", ["lo", "hi"], bits=128, max_hamming=3,
-                        materialize=False).collect()
+    got = hamming_pairs(far, "id", ["lo", "hi"], bits=128, max_hamming=3).collect()
     assert got == []                             # 6 bits apart -> verified out
 
 

@@ -130,6 +130,23 @@ def test_dup_components_plan_has_no_cartesian(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_neardup_curation_broadcasts_losers(spark):
+    # under the driver bound the components come back as a local relation
+    # of known size, so the anti-join broadcasts the few losers instead of
+    # shuffling the whole corpus; a Python-RDD result (ExistingRDD) has no
+    # size estimate and plans as a SortMergeJoin over two Exchanges
+    from docling_spark.ops.dedup import neardup_curation
+
+    docs = spark.range(50).select(
+        F.col("id").alias("doc_id"), F.concat(F.lit("text "), F.col("id")).alias("text")
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], "id_a long, id_b long")
+    plan = _plan(neardup_curation(docs, pairs))
+    assert "BroadcastHashJoin" in plan
+    assert "Exchange hashpartitioning" not in plan
+    assert "ExistingRDD" not in plan
+
+
 def test_aqe_splits_skewed_join(spark):
     """The session's AQE config actually engages on a skewed shuffle join:
     the finalized adaptive plan shows SortMergeJoin(skew=true) with skewed
