@@ -14,4 +14,8 @@ Design (see SURVEY.md):
   DataFrame ops so Catalyst/AQE handle pushdown, pruning, and skew.
 """
 
+from docling_spark import _zipimport
+
+_zipimport.install()  # every Python worker that loads engine code gets it
+
 __version__ = "0.1.0"

@@ -195,6 +195,13 @@ def stream_neardup(
         into one band key) sheds its OLDEST members first, so recent-vs-
         recent comparisons, the ones a streaming dedup is for, survive.
         Pass None to disable.
+    `available_now=True` drains the backlog and stops. It runs with
+    `spark.sql.streaming.noDataMicroBatches.enabled=false` for this query
+    only: with a TTL, Spark otherwise keeps planning no-data micro-batches
+    to time buckets out, and the query never ends. Idle buckets are then
+    evicted only by the data batches, which still time out every bucket
+    past its TTL. A continuous run (`available_now=False`) keeps the
+    session's setting, so its buckets time out between arrivals as well.
     Evicted-entry count is surfaced as a Spark accumulator on the returned
     query object (`q.neardup_evictions.value`), the operator's health
     metric: a climbing value means the corpus is hotter than the cap."""
@@ -294,8 +301,20 @@ def stream_neardup(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
+    if not available_now:
+        q = writer.start()
+    else:
+        # The query copies the session's conf when it starts; put the
+        # caller's own setting back once it has.
+        key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "false")
+        try:
+            q = writer.trigger(availableNow=True).start()
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
     q.neardup_evictions = eviction_acc  # health metric: entries FIFO-shed
     return q

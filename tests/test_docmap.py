@@ -98,3 +98,35 @@ def test_map_batch(spark, name):
 def test_map_batch_undeclared_passthrough_raises(spark):
     with pytest.raises(ValueError, match="bucket"):
         map_batch(_batch(["a"], [_spans(A)]), _echo, arrow_schema(DOC_DDL + ", bucket int"))
+
+
+def test_worker_skips_unchanged_zip_rereads(spark):
+    """In a Python worker that has imported the engine, the per-task
+    `importlib.invalidate_caches()` re-reads no unchanged zip or jar on the
+    worker path (the stock `zipimporter` re-reads one archive per importer)."""
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import docling_spark  # noqa: F401  (installs the stat check)
+
+        for _ in batches:
+            pass
+        reads = []
+        read = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or read(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        importers = sum(isinstance(f, zipimport.zipimporter)
+                        for f in sys.path_importer_cache.values())
+        yield pa.RecordBatch.from_pydict({"reads": [len(reads)], "importers": [importers]})
+
+    row = (spark.range(1).repartition(1)
+           .mapInArrow(probe, "reads long, importers long").collect()[0])
+    if row["importers"] == 0:
+        pytest.skip("the Python worker has no zipimporter (SPARK_HOME unset?)")
+    assert row["reads"] == 0

@@ -582,6 +582,13 @@ def test_read_doctags_spark(spark):
     ]
 
 
+def _assert_data_batches_only(q):
+    """The available-now query ran with no-data micro-batches off: every
+    batch it reported read input."""
+    assert q.recentProgress
+    assert all(p.numInputRows > 0 for p in q.recentProgress)
+
+
 def test_stream_neardup_across_batches(spark, tmp_path):
     """Streaming MinHash near-dup: an arriving document is matched against
     documents ingested in EARLIER micro-batches (band-bucket state), and
@@ -603,13 +610,19 @@ def test_stream_neardup_across_batches(spark, tmp_path):
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     df1 = spark.createDataFrame(rows1, "doc_id long, text string")
     df1.write.parquet(in_dir, mode="overwrite")
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    session_setting = spark.conf.get(key, None)
     q = stream_neardup(spark, in_dir, out_dir, ckpt, est_jaccard_min=0.5)
-    q.awaitTermination(300)
+    assert spark.conf.get(key, None) == session_setting
+    assert q.awaitTermination(300)
+    _assert_data_batches_only(q)
 
     df2 = spark.createDataFrame(rows2, "doc_id long, text string")
     df2.write.parquet(in_dir, mode="append")
     q2 = stream_neardup(spark, in_dir, out_dir, ckpt, est_jaccard_min=0.5)
-    q2.awaitTermination(300)
+    assert q2.awaitTermination(300)
+    _assert_data_batches_only(q2)
+    assert not spark.streams.active
 
     out = spark.read.parquet(out_dir)
     pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
@@ -646,7 +659,8 @@ def test_stream_neardup_bounded_state(spark, tmp_path):
         in_dir, mode="overwrite")
     q = stream_neardup(spark, in_dir, out_dir, ckpt,
                        est_jaccard_min=0.5, max_bucket_size=4)
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
+    _assert_data_batches_only(q)
     assert q.neardup_evictions.value > 0  # hot bucket shed oldest members
     batch1 = [(r["id_a"], r["id_b"])
               for r in spark.read.parquet(out_dir).collect()]
@@ -658,7 +672,9 @@ def test_stream_neardup_bounded_state(spark, tmp_path):
         in_dir, mode="append")
     q2 = stream_neardup(spark, in_dir, out_dir, ckpt,
                         est_jaccard_min=0.5, max_bucket_size=4)
-    q2.awaitTermination(300)
+    assert q2.awaitTermination(300)
+    _assert_data_batches_only(q2)
+    assert not spark.streams.active
 
     pairs = [(r["id_a"], r["id_b"])
              for r in spark.read.parquet(out_dir).collect()]
