@@ -22,6 +22,17 @@ knows how spans cross the Arrow boundary:
 
 Per-document work stays plain Python over one document (the vectorization
 axis is documents per Arrow batch); only the marshaling is columnar.
+
+**Chaining.** `map_documents` is built on `map_batches(df, batch_fn,
+schema)`, which also takes batch-level functions (the numpy MinHash). When
+`df` is the very DataFrame object an earlier `map_batches` returned, the new
+map runs the earlier map's batch functions and its own in one `mapInArrow`
+over the earlier input, so `enrich → markdown_sink → minhash_signature` is
+one Python worker per task, not three. Any other DataFrame ends the chain:
+`select`, `join`, `filter`, `observe` and `localCheckpoint` return new
+objects, and a persisted output (`cache()`/`persist()` return the same
+object) is read from its cache instead of recomputed. Every batch function
+is per row or per document, so chaining does not change the output.
 """
 
 from __future__ import annotations
@@ -35,15 +46,22 @@ import pyarrow.compute as pc
 SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 
 DocFn = Callable[[object, List[tuple]], Sequence[tuple]]
+BatchFn = Callable[[pa.RecordBatch], pa.RecordBatch]
+
+# attribute a `map_batches` output DataFrame carries: (input, batch functions)
+_CHAIN = "_docmap_chain"
 
 
-def arrow_schema(ddl: str) -> pa.Schema:
-    """Spark DDL → the Arrow schema `mapInArrow` reads for it. The DDL parse
-    needs an active Spark session, so this runs on the driver."""
+def arrow_schema(schema) -> pa.Schema:
+    """Spark DDL string or StructType → the Arrow schema `mapInArrow` reads
+    for it. The DDL parse needs an active Spark session, so this runs on the
+    driver."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
-    return to_arrow_schema(_parse_datatype_string(ddl))
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    return to_arrow_schema(schema)
 
 
 def _strings(arr: pa.Array) -> list:
@@ -131,15 +149,39 @@ def map_batch(rb: pa.RecordBatch, fn: DocFn, schema: pa.Schema,
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def map_documents(df, fn: DocFn, schema: str, with_fmt: bool = False):
-    """documents(doc_id, spans[, fmt][, extra…]) → `schema` rows: `fn(doc_id,
-    spans)` once per document in one narrow `mapInArrow` stage (no shuffle).
-    `with_fmt=True` hands `fn` 4-tuples carrying the `fmt` flags when the
-    input has that column."""
-    out_schema = arrow_schema(schema)
+def map_batches(df, batch_fn: BatchFn, schema):
+    """One `mapInArrow` that runs `batch_fn(record_batch) → record_batch of
+    schema` (a DDL string or StructType) over every batch of `df`.
+
+    When `df` is the DataFrame object an earlier `map_batches` returned, and
+    it is not persisted, the new map runs the earlier map's batch functions
+    and then its own in the same `mapInArrow` over the earlier input: one
+    Python worker per task instead of one per map. Every batch function is
+    per row, so the output is the same."""
+    from pyspark import StorageLevel
+
+    chain = df.__dict__.get(_CHAIN)
+    if chain is not None and df.storageLevel == StorageLevel.NONE:
+        src, fns = chain[0], chain[1] + (batch_fn,)
+    else:
+        src, fns = df, (batch_fn,)
 
     def gen(batches):
         for rb in batches:
-            yield map_batch(rb, fn, out_schema, with_fmt)
+            for fn in fns:
+                rb = fn(rb)
+            yield rb
 
-    return df.mapInArrow(gen, schema=schema)
+    out = src.mapInArrow(gen, schema=schema)
+    out.__dict__[_CHAIN] = (src, fns)
+    return out
+
+
+def map_documents(df, fn: DocFn, schema: str, with_fmt: bool = False):
+    """documents(doc_id, spans[, fmt][, extra…]) → `schema` rows: `fn(doc_id,
+    spans)` once per document in one narrow `mapInArrow` stage (no shuffle),
+    chained onto `df`'s map when `df` is one (`map_batches`).
+    `with_fmt=True` hands `fn` 4-tuples carrying the `fmt` flags when the
+    input has that column."""
+    out_schema = arrow_schema(schema)
+    return map_batches(df, lambda rb: map_batch(rb, fn, out_schema, with_fmt), schema)

@@ -301,7 +301,10 @@ _ATTR_RE = re.compile(
     r"([a-zA-Z][a-zA-Z0-9_-]*)\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s\"'>]+))"
 )
 _FAST_UNSAFE_RE = re.compile(r"<!--|<script|<style|<!\[CDATA\[|<\?")
-_TAG_HEAD_RE = re.compile(r"(/?)([a-zA-Z][a-zA-Z0-9]*)")
+# html.parser ends a tag name only at whitespace, '/' or '>': `<a<div …>` is
+# one tag named "a<div". A head that stops anywhere else does not match, and
+# the payload defers.
+_TAG_HEAD_RE = re.compile(r"(/?)([a-zA-Z][a-zA-Z0-9]*)(?=[\t\n\r\f /]|$)")
 
 # machine-generated HTML repeats the same attribute strings (class="odsek",
 # class="pismeno", …) thousands of times per corpus — memoize the parsed

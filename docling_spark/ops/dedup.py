@@ -1,11 +1,16 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All hot paths are JVM-side built-ins (whole-stage codegen) — no Python UDFs:
+Joins, groupings and bitwise work are JVM-side built-ins. The per-element
+hashing of the SQL forms is not compiled: Spark's higher-order functions
+(`transform`, `aggregate`) are `CodegenFallback`, so their lambdas run
+interpreted, once per element. The MinHash signature therefore hashes in
+numpy (`portable.minhash_numpy`) inside one Arrow map; the other ops below
+still hash through those lambdas.
 - exact: hash-groupBy (one shuffle on the hash, AQE-coalesced)
-- minhash LSH: shingle → minhash signature → band → bucket self-join
-  (the classic Broder/LSH construction; the band join is an equi-join so
-  Catalyst uses a shuffled hash join, and bucket keys distribute ~uniformly
-  so no skew salting needed)
+- minhash LSH: shingle → minhash signature (numpy, `docmap.map_batches`) →
+  band → bucket self-join (the classic Broder/LSH construction; the band
+  join is an equi-join so Catalyst uses a shuffled hash join, and bucket
+  keys distribute ~uniformly so no skew salting needed)
 - simhash: bitwise majority over token hashes
 - n-gram Jaccard: blocked self-join + array_intersect/array_union
 - connected components over a pair list: driver union-find up to
@@ -21,7 +26,9 @@ from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from docling_spark.docmap import arrow_schema, map_batches
 from docling_spark.ops import portable as P
 
 # Default LSH geometry, shared with the DuckDB oracles. MinHash runs over
@@ -53,20 +60,30 @@ def minhash_signature(docs: DataFrame, id_col: str = "doc_id",
                       n_hashes: int = MINHASH_N_HASHES,
                       shingle_n: int = MINHASH_SHINGLE_N) -> DataFrame:
     """(doc_id, mh_0..mh_{n-1}) portable minhash signature over word n-gram
-    shingles (shingle_n=1 degenerates to unigram token sets).
+    shingles (shingle_n=1 degenerates to unigram token sets); null `mh_*` for
+    a null text or one with fewer than `shingle_n` tokens. The id column
+    keeps its input type.
 
-    Tokens → shingles → hashes are materialized as successive columns, NOT
-    nested expressions: Spark re-evaluates expressions embedded in lambda
-    bodies per array element (no CSE across lambda scope), which made the
-    nested form O(tokens²) per row — 10× wall on the sf0.1 corpus."""
-    out = (
-        docs.select(F.col(id_col), F.expr(P.tokens_spark(text_col)).alias("_tk"))
-        .withColumn("_sh", F.expr(P.ngrams_from_tokens_spark("_tk", shingle_n)))
-        .withColumn("_th", F.expr(f"transform(_sh, g -> {P.token_hash_spark('g')})"))
-    )
-    for i in range(n_hashes):
-        out = out.withColumn(f"mh_{i}", F.expr(P.minhash_spark("_th", i)).cast("long"))
-    return out.drop("_tk", "_sh", "_th")
+    Computed in numpy (`portable.minhash_numpy`, value-identical to the SQL
+    form) in one `docmap.map_batches` stage, so it runs in the same Python
+    worker as a span map that produced `docs` (`markdown_sink`). The SQL
+    form's lambdas are `CodegenFallback`: Spark runs them interpreted, once
+    per character and per shingle."""
+    out_schema = StructType(
+        [StructField(id_col, docs.schema[id_col].dataType)]
+        + [StructField(f"mh_{i}", LongType()) for i in range(n_hashes)])
+    arrow_out = arrow_schema(out_schema)
+
+    def batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+        names = rb.schema.names
+        mins, has = P.minhash_numpy(rb.column(names.index(text_col)), n_hashes, shingle_n)
+        mh = [pa.array(m, pa.int64(), mask=~has) for m in mins]
+        return pa.RecordBatch.from_arrays([rb.column(names.index(id_col))] + mh,
+                                          schema=arrow_out)
+
+    if set(docs.columns) != {id_col, text_col}:
+        docs = docs.select(id_col, text_col)  # ship only what the map reads
+    return map_batches(docs, batch, out_schema)
 
 
 def minhash_band_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -78,19 +95,17 @@ def minhash_band_pairs(docs: DataFrame, id_col: str = "doc_id",
 
     bands of `band_size` rows: docs agreeing on ALL rows of any band become
     candidates — an equi-self-join on (band_id, band_key). Documents too
-    short to yield a shingle are excluded up front (their null signature
-    would otherwise cross-match as an empty band key); shingles exist iff
-    token count ≥ shingle_n, so the guard is a cheap size predicate.
+    short to yield a shingle (and null texts) get a null signature, which
+    would otherwise cross-match as an empty band key; they are dropped by
+    `mh_0 IS NOT NULL` on the signature, without tokenizing the text again.
 
     The banded keys are localCheckpointed before the self-join: Spark has
     no subplan reuse, so both join sides would otherwise recompute the
     shingle/signature pipeline — the standard production shape writes the
     signature table once and joins it, and the eager checkpoint is the
     in-query equivalent (~2x on the pair queries)."""
-    docs = docs.filter(
-        F.size(F.expr(P.tokens_spark(text_col))) >= F.lit(shingle_n)
-    )
     sig = minhash_signature(docs, id_col, text_col, n_hashes, shingle_n)
+    sig = sig.filter(F.col("mh_0").isNotNull())
     n_bands = n_hashes // band_size
     band_cols = []
     for b in range(n_bands):

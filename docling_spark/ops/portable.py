@@ -6,12 +6,23 @@ bit-for-bit (no engine-specific hash like xxhash64/murmur3 in the compared
 path). Every helper returns BOTH dialect strings; the Spark side is used via
 `F.expr`, the DuckDB side is assembled into `oracle_sql()`.
 
+The shingle MinHash has a third form, `minhash_numpy`: the same integers
+from int64 array operations over one Arrow batch of texts, which
+`ops.dedup.minhash_signature` runs in a Python Arrow map. The SQL forms'
+lambdas run interpreted in Spark (`CodegenFallback`), once per character.
+
 Token hash: polynomial codepoint hash h(t) = fold(31·acc + codepoint) mod P.
 MinHash permutations: (aᵢ·h + bᵢ) mod P — universal hashing per Broder '97
 (public construction).
 """
 
 from __future__ import annotations
+
+from typing import Tuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 MOD = 1_000_000_007
 
@@ -155,6 +166,73 @@ def ngrams_duck(col: str, n: int) -> str:
         f"list_distinct(list_transform(range(1, greatest(len({tokens_duck(col)}) - {n - 1}, 0) + 1), "
         f"i -> array_to_string(list_slice({tokens_duck(col)}, i, i + {n - 1}), ' ')))"
     )
+
+
+# --- numpy form of the shingle MinHash --------------------------------------
+# `tokens_spark` → `ngrams_from_tokens_spark` → `token_hash_spark` →
+# `minhash_spark`, value for value, over one Arrow batch of texts. Spark's
+# `trim` strips ASCII spaces only; its split regex `\s+` is Java's
+# `[ \t\n\x0b\f\r]+` and keeps leading/trailing empty tokens.
+_JAVA_SPACE = "[ \t\n\x0b\f\r]+"
+
+
+def _pow31(n: int) -> np.ndarray:
+    """31^k mod P for k < n, by doubling (every product stays < P² < 2^63)."""
+    out = np.ones(1, np.int64)
+    while len(out) < n:
+        out = np.concatenate((out, out * pow(31, len(out), MOD) % MOD))
+    return out[:n]
+
+
+def minhash_numpy(texts: pa.Array, n_hashes: int, shingle_n: int
+                  ) -> Tuple[np.ndarray, np.ndarray]:
+    """(mins, has): `mins[i, r]` is `minhash_spark(…, i)` of row r's
+    `shingle_n`-word shingles, valid where `has[r]` (false for a null text or
+    fewer than `shingle_n` tokens).
+
+    Each distinct token of the batch is folded once, over its code points:
+    fold(t) = Σ cpₖ·31^(|t|-1-k) mod P. A shingle's fold is composed from its
+    tokens' folds, fold(a‖b) = fold(a)·31^|b| + fold(b) mod P, with the
+    joining space (code point 32) as a one-character part. Duplicate
+    shingles cannot change a minimum, so none are removed."""
+    toks = pc.split_pattern_regex(pc.utf8_trim(texts, characters=" "),
+                                  pattern=_JAVA_SPACE)
+    counts = pc.list_value_length(toks).fill_null(0).to_numpy().astype(np.int64)
+    enc = pc.dictionary_encode(toks.flatten())
+    tid = enc.indices.to_numpy().astype(np.int64)
+    words = enc.dictionary
+    lens = pc.utf8_length(words).to_numpy().astype(np.int64)
+    pows = _pow31(int(lens.max(initial=0)) + 1)
+    # fold of each distinct token: one weighted sum per token over its code points
+    cps = np.frombuffer("".join(words.to_pylist()).encode("utf-32-le"), np.uint32)
+    ends = np.cumsum(lens)
+    from_end = np.repeat(ends - 1, lens) - np.arange(len(cps))
+    terms = cps.astype(np.int64) * pows[from_end] % MOD
+    fold = np.zeros(len(words), np.int64)
+    live = lens > 0
+    if live.any():
+        fold[live] = np.add.reduceat(terms, (ends - lens)[live]) % MOD
+    tok_pow = pows[lens]
+
+    # shingle starts: flat token positions with shingle_n - 1 tokens after
+    # them in the same row
+    n_sh = np.maximum(counts - shingle_n + 1, 0)
+    row_start = np.repeat(np.cumsum(counts) - counts, n_sh)
+    sh_row_start = np.repeat(np.cumsum(n_sh) - n_sh, n_sh)
+    starts = row_start + np.arange(int(n_sh.sum())) - sh_row_start
+    acc = fold[tid[starts]]
+    for j in range(1, shingle_n):
+        t = tid[starts + j]
+        acc = ((acc * 31 + 32) % MOD * tok_pow[t] + fold[t]) % MOD
+    h = acc * _MIX % MOD
+
+    has = n_sh > 0
+    mins = np.zeros((n_hashes, len(counts)), np.int64)
+    if has.any():
+        seg = (np.cumsum(n_sh) - n_sh)[has]
+        for i in range(n_hashes):
+            mins[i, has] = np.minimum.reduceat((MINHASH_A[i] * h + MINHASH_B[i]) % MOD, seg)
+    return mins, has
 
 
 # --- 64-bit extension for simhash ------------------------------------------

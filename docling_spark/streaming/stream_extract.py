@@ -210,24 +210,13 @@ def stream_neardup(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from docling_spark.ops.dedup import (
-        MINHASH_BAND_SIZE, MINHASH_N_HASHES, MINHASH_SHINGLE_N)
-    from docling_spark.ops import portable as P
+        MINHASH_BAND_SIZE, MINHASH_N_HASHES, minhash_signature)
 
     n_hashes, band_size = MINHASH_N_HASHES, MINHASH_BAND_SIZE
     n_bands = n_hashes // band_size
 
     src = spark.readStream.schema("doc_id long, text string").parquet(input_dir)
-    src = src.filter(
-        F.size(F.expr(P.tokens_spark("text"))) >= F.lit(MINHASH_SHINGLE_N)
-    )
-    sig = (
-        src.select(F.col("doc_id"), F.expr(P.tokens_spark("text")).alias("_tk"))
-        .withColumn("_sh", F.expr(P.ngrams_from_tokens_spark("_tk", MINHASH_SHINGLE_N)))
-        .withColumn("_th", F.expr(f"transform(_sh, g -> {P.token_hash_spark('g')})"))
-    )
-    for i in range(n_hashes):
-        sig = sig.withColumn(f"mh_{i}", F.expr(P.minhash_spark("_th", i)).cast("long"))
-    sig = sig.drop("_tk", "_sh", "_th")
+    sig = minhash_signature(src).filter(F.col("mh_0").isNotNull())
     band_cols = []
     for b in range(n_bands):
         key = F.concat_ws(

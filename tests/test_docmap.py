@@ -130,3 +130,29 @@ def test_worker_skips_unchanged_zip_rereads(spark):
     if row["importers"] == 0:
         pytest.skip("the Python worker has no zipimporter (SPARK_HOME unset?)")
     assert row["reads"] == 0
+
+
+def test_chained_maps_equal_separate_maps(spark, corpus_path):
+    """extract → enrich → markdown → MinHash (and → hybrid chunks) run as one
+    chained map; every step localCheckpointed in between runs each map on
+    its own. Both give the same rows in the same order."""
+    from docling_spark.operators.enrich import enrich
+    from docling_spark.operators.hybrid_chunker import hybrid_chunk_sink
+    from docling_spark.operators.serialize import markdown_sink
+    from docling_spark.ops.dedup import minhash_signature
+    from docling_spark.pipeline import extract
+
+    def run(cut):
+        enriched = cut(enrich(cut(extract(spark.read.parquet(corpus_path)))))
+        markdown = cut(markdown_sink(enriched))
+        sig = minhash_signature(markdown, text_col="markdown")
+        maps = sig._jdf.queryExecution().executedPlan().toString().count("MapInArrow")
+        return maps, (markdown.collect(), sig.collect(), hybrid_chunk_sink(enriched).collect())
+
+    maps, chained = run(lambda df: df)
+    assert maps == 1
+    _, separate = run(lambda df: df.localCheckpoint())
+    assert [len(rows) for rows in chained] == [60, 60, len(separate[2])]
+    assert len(separate[2]) > 60  # several chunks per document
+    assert any(r["mh_0"] is not None for r in chained[1])
+    assert chained == separate

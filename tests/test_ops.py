@@ -37,6 +37,60 @@ def test_minhash_identical_docs_same_signature(docs):
     assert agree_near > agree_far        # near dup agrees on more rows
 
 
+def _minhash_sql(df, id_col, n_hashes=16, shingle_n=3):
+    """The Spark SQL signature assembled from `ops.portable`, as
+    `__spark_entry__` builds it."""
+    from docling_spark.ops import portable as P
+
+    out = (
+        df.select(F.col(id_col), F.expr(P.tokens_spark("text")).alias("_tk"))
+        .withColumn("_sh", F.expr(P.ngrams_from_tokens_spark("_tk", shingle_n)))
+        .withColumn("_th", F.expr(f"transform(_sh, g -> {P.token_hash_spark('g')})"))
+    )
+    return out.select(id_col, *[F.expr(P.minhash_spark("_th", i)).cast("long").alias(f"mh_{i}")
+                                for i in range(n_hashes)])
+
+
+def _parity_texts():
+    import random
+
+    rng = random.Random(7)
+    texts = [
+        None, "", " ", "one", "one two", "one two three",
+        "\none two three", "one two three\n", "\tone two three\t",
+        "\x0bone two three\x0b", "\fone two three\f", "\rone two three\r",
+        " \n\t one \r\n\x0b two\f \tthree four \r",
+        "a\xa0b c\xa0d e", "a\u2003b c\u3000d e f",  # not Java \s: no split
+        "pre \U0001F600 post \U0001F600\U0001F600 end",
+        "x" * 5001 + " y z " + "\u017e" * 5003,
+        " ".join(f"w{i % 977}" for i in range(50_000)),
+    ]
+    alphabet = ["a", "b", "\u017e", "\U0001F600", "\xa0", " ", " ", "\n", "\t",
+                "\r", "\x0b", "\f", "xy"]
+    texts += ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 24)))
+              for _ in range(300)]
+    return texts
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_minhash_signature_matches_sql_form(spark, id_type):
+    """The numpy signature equals the portable Spark SQL form value for value,
+    null for null, and keeps the id column's type."""
+    from docling_spark.ops.dedup import minhash_signature
+
+    texts = _parity_texts()
+    ids = list(range(len(texts))) if id_type == "long" else [f"d{i}" for i in range(len(texts))]
+    df = spark.createDataFrame(list(zip(ids, texts)), f"doc_id {id_type}, text string")
+    sig = minhash_signature(df)
+    assert sig.schema["doc_id"].dataType == df.schema["doc_id"].dataType
+    got = {r["doc_id"]: tuple(r)[1:] for r in sig.collect()}
+    want = {r["doc_id"]: tuple(r)[1:] for r in _minhash_sql(df, "doc_id").collect()}
+    assert len(got) == len(texts)
+    assert got == want
+    nulls = {i for i, r in want.items() if r[0] is None}
+    assert ids[0] in nulls and ids[4] in nulls and ids[5] not in nulls
+
+
 def test_minhash_band_pairs_finds_dups(docs):
     from docling_spark.ops.dedup import minhash_band_pairs
 

@@ -241,22 +241,55 @@ def test_semdedup_reuse_plan_recomputes_no_assignment(spark):
     assert "ExistingRDD" in plan
 
 
-def test_span_stages_are_arrow_maps(spark):
-    """enrich → markdown_sink and enrich → hybrid_chunk_sink each compile to
-    narrow MapInArrow stages (docmap.map_documents): no MapInPandas, no
-    exchange."""
-    from docling_spark.operators.enrich import enrich
-    from docling_spark.operators.hybrid_chunker import hybrid_chunk_sink
-    from docling_spark.operators.serialize import markdown_sink
+def _span_docs(spark):
     from docling_spark.schema import DOC_DDL
 
-    docs = spark.createDataFrame(
+    return spark.createDataFrame(
         [("d1", [("paragraph", "§ 1", "#paragraf-1", 0), ("text", "body", "#paragraf-1", 1)])],
         DOC_DDL,
     )
-    enriched = enrich(docs)
-    for out in (markdown_sink(enriched), hybrid_chunk_sink(enriched)):
+
+
+def test_span_stages_are_arrow_maps(spark):
+    """enrich → markdown_sink, enrich → hybrid_chunk_sink and enrich →
+    markdown_sink → minhash_signature each compile to one narrow MapInArrow
+    stage (docmap.map_batches chains each map onto the one before): no
+    MapInPandas, no exchange."""
+    from docling_spark.operators.enrich import enrich
+    from docling_spark.operators.hybrid_chunker import hybrid_chunk_sink
+    from docling_spark.operators.serialize import markdown_sink
+    from docling_spark.ops.dedup import minhash_signature
+
+    enriched = enrich(_span_docs(spark))
+    for out in (markdown_sink(enriched), hybrid_chunk_sink(enriched),
+                minhash_signature(markdown_sink(enriched), text_col="markdown")):
         plan = _plan(out)
-        assert plan.count("MapInArrow") == 2, plan
+        assert plan.count("MapInArrow") == 1, plan
         assert "MapInPandas" not in plan
         assert "Exchange" not in plan
+
+
+def test_map_chain_ends_at_cache_checkpoint_and_join(spark):
+    """A persisted map output, or any new DataFrame built from one, is read
+    as it is: the next map runs separately over it."""
+    from docling_spark.operators.enrich import enrich
+    from docling_spark.operators.serialize import markdown_sink
+
+    cached = enrich(_span_docs(spark)).cache()
+    try:
+        plan = _plan(markdown_sink(cached))
+        assert "InMemoryTableScan" in plan
+        # above the cache scan, only markdown's map; enrich's sits in the cache
+        assert plan.split("InMemoryTableScan")[0].count("MapInArrow") == 1, plan
+    finally:
+        cached.unpersist()
+
+    ckpt = enrich(_span_docs(spark)).localCheckpoint()
+    plan = _plan(markdown_sink(ckpt))
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ExistingRDD" in plan
+
+    enriched = enrich(_span_docs(spark))
+    joined = enriched.join(enriched.select("doc_id"), "doc_id")
+    plan = _plan(markdown_sink(joined))
+    assert plan.count("MapInArrow") == 3, plan  # enrich on each side, then markdown

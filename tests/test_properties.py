@@ -185,7 +185,7 @@ def test_fast_parser_equivalence_fuzzed():
     """Differential fuzz: on arbitrary tag soup (quotes, '>', entities,
     nesting, truncation), plain and formatted, the fast tokenizer must
     either defer or produce the exact span stream of the stdlib parser."""
-    from hypothesis import given, settings, strategies as st
+    from hypothesis import example, given, settings, strategies as st
 
     from docling_spark.operators.html_extract import (
         extract_html_spans,
@@ -236,6 +236,9 @@ def test_fast_parser_equivalence_fuzzed():
 
     @settings(max_examples=400, deadline=None)
     @given(payload=soup(), with_formatting=st.booleans())
+    # html.parser reads `a<div` as one tag name, not as an `<a>` with attrs
+    @example(payload='</div><a<div class="text" href="="></div></div></div>1',
+             with_formatting=False)
     def run(payload, with_formatting):
         # auto path (fast or fallback) against the stdlib tokenizer
         fast = extract_html_spans(payload, with_formatting)
