@@ -38,6 +38,17 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # Tungsten's page size otherwise follows the heap (32 MB at a 4 GB
+        # heap on 4 cores). Every broadcast hash relation takes at least
+        # one page, and the broadcast keeps it until the ContextCleaner
+        # sees the broadcast collected. `neardup_curation` broadcasts its
+        # small set of dropped ids on every call, so over repeated calls
+        # such pages piled up by 70-300 MB, as GC timing let them.
+        .config("spark.buffer.pageSize", "2m")
+        # A fixed young generation. G1's adaptive one resized with GC timing,
+        # and the driver JVM's peak resident size moved by ~900 MB between
+        # identical runs.
+        .config("spark.driver.extraJavaOptions", "-Xmn256m")
         .config("spark.ui.enabled", "false")
         # keep stdout parseable (bench contract: ONE JSON line)
         .config("spark.ui.showConsoleProgress", "false")
