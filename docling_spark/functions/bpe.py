@@ -15,7 +15,7 @@ Classic BPE (Sennrich et al., ACL'16 — arXiv:1508.07909), not a heuristic:
   count adjacent symbol pairs, merge the most frequent (ties broken to the
   lexicographically smallest pair → fully deterministic), repeat.
 - encoding: greedy lowest-merge-rank pair collapsing per pretoken (the
-  GPT-2/HF `bpe()` loop), cached per pretoken.
+  GPT-2/HF `bpe()` loop).
 
 The committed merges live in `bpe_merges.py` as a plain Python list —
 regenerate with `python tools/train_bpe_vocab.py` (trains on the
@@ -23,19 +23,27 @@ deterministic synth corpora; a .py literal ships inside the same --py-files
 zip as the code, so executors need no filesystem side-channel).
 
 Scale shape: the encoder is driver/worker-local Python used inside the
-chunkers' existing zero-shuffle stages; the per-pretoken
-lru_cache makes counting amortized O(chars) per document.
+chunkers' existing zero-shuffle stages. `bpe_count` keeps one plain dict of
+per-pretoken counts (cleared whenever it reaches `_MEMO_MAX` entries, so a
+worker's memory stays bounded), which makes counting a dict lookup per
+pretoken once a document's vocabulary has been seen. The hybrid chunker
+resolves its counter once per document and counts each string once: the
+counts are additive, so a packed or merged text stores the sum of its
+parts' counts (`operators/hybrid_chunker.py`).
 """
 
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 from typing import Dict, Iterable, List, Sequence, Tuple
 
 PRETOKEN_RE = re.compile(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]")
 
 _RANKS: "Dict[Tuple[str, str], int] | None" = None
+
+# pretoken → BPE token count; the only cache of the encoder
+_MEMO: Dict[str, int] = {}
+_MEMO_MAX = 65536
 
 
 def train_bpe(texts: Iterable[str], n_merges: int = 1024) -> List[Tuple[str, str]]:
@@ -87,7 +95,6 @@ def _ranks() -> Dict[Tuple[str, str], int]:
     return _RANKS
 
 
-@lru_cache(maxsize=65536)
 def encode_pretoken(word: str) -> Tuple[str, ...]:
     """Greedy BPE for one pretoken: repeatedly collapse the pair with the
     lowest merge rank (all its occurrences) until no learned pair remains."""
@@ -117,7 +124,16 @@ def encode_pretoken(word: str) -> Tuple[str, ...]:
 
 def bpe_count(text: str) -> int:
     """Σ per-pretoken BPE token counts — the chunkers' budget counter."""
-    return sum(len(encode_pretoken(w)) for w in PRETOKEN_RE.findall(text))
+    memo = _MEMO
+    n = 0
+    for w in PRETOKEN_RE.findall(text):
+        c = memo.get(w)
+        if c is None:
+            if len(memo) >= _MEMO_MAX:
+                memo.clear()
+            c = memo[w] = len(encode_pretoken(w))
+        n += c
+    return n
 
 
 def bpe_count_map(pretokens: Sequence[str]) -> Dict[str, int]:

@@ -11,6 +11,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """24 GB, capped on a smaller host at a quarter of physical memory (the
+    JVM's own default heap cap), so the heap cannot grow past the machine."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(24 * 1024, phys // 4 // 2**20)}m"
+
+
 def get_spark(
     app: str = "docling_spark",
     master: str | None = None,
@@ -37,7 +44,7 @@ def get_spark(
         # document ships in a small batch instead of stalling its whole split
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()))
         # Tungsten's page size otherwise follows the heap (32 MB at a 4 GB
         # heap on 4 cores). Every broadcast hash relation takes at least
         # one page, and the broadcast keeps it until the ContextCleaner

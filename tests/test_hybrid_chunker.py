@@ -1,6 +1,11 @@
 """Hybrid token-aware chunker tests (K2 pack / K3 split / K4 merge)."""
 
+import random
+
+import pytest
+
 from docling_spark.operators.hybrid_chunker import (
+    _DocCounter,
     _split_oversize,
     count_tokens,
     hybrid_chunk_document,
@@ -65,16 +70,29 @@ def test_k2_oversize_unit_splits():
 
 def test_k3_headings_longer_than_budget_dropped():
     big_headings = [" ".join(f"h{i}" for i in range(50))]
-    pieces, eff = _split_oversize("a b c", big_headings, max_tokens=16)
+    pieces, _counts, eff = _split_oversize("a b c", big_headings, 16, _DocCounter())
     assert eff == []            # reference: warn + drop headings
     assert pieces == ["a b c"]
 
 
 def test_k3_single_giant_word_emitted_alone():
-    pieces, _ = _split_oversize("x " + "y" * 5 + " " + "z,z.z;z:z!z?" * 40, ["h"], 8)
+    pieces, _, _ = _split_oversize("x " + "y" * 5 + " " + "z,z.z;z:z!z?" * 40, ["h"], 8,
+                                   _DocCounter())
     assert pieces  # no crash, nothing dropped
     total = " ".join(pieces)
     assert "yyyyy" in total
+
+
+class _Encoding:
+    def __init__(self, n):
+        self.ids = [0] * n
+
+
+class _NewlineHeavy:
+    """HF tokenizer stub: each word is 1 token and each "\n" is 3."""
+
+    def encode(self, text):
+        return _Encoding(len(text.split()) + 3 * text.count("\n"))
 
 
 def test_k4_merge_recounts_under_hf_tokenizer(monkeypatch):
@@ -82,14 +100,6 @@ def test_k4_merge_recounts_under_hf_tokenizer(monkeypatch):
     # stub counts each word as 1 token and each "\n" as 3, so summing the
     # parts' stored counts under-counts every merged chunk by 3 per join
     import docling_spark.operators.hybrid_chunker as hc
-
-    class _Encoding:
-        def __init__(self, n):
-            self.ids = [0] * n
-
-    class _NewlineHeavy:
-        def encode(self, text):
-            return _Encoding(len(text.split()) + 3 * text.count("\n"))
 
     tok = _NewlineHeavy()
     monkeypatch.setattr(hc, "_hf_tokenizer", lambda: tok)
@@ -150,9 +160,9 @@ def test_bpe_vs_regex_boundary_shift(monkeypatch):
 
     rare = " ".join(["zqxvwjk"] * 24)      # not in the synth training vocab
     assert bpe_count(rare) > len(rare.split())
-    pieces_bpe = _split_words(rare, 12)
+    pieces_bpe, _ = _split_words(rare, 12, count_tokens)
     monkeypatch.setenv("DOCLING_TOKEN_COUNTER", "regex")
-    pieces_rgx = _split_words(rare, 12)
+    pieces_rgx, _ = _split_words(rare, 12, count_tokens)
     assert len(pieces_bpe) > len(pieces_rgx)  # boundaries shifted earlier
     # both reassemble the exact text
     assert " ".join(pieces_bpe) == rare and " ".join(pieces_rgx) == rare
@@ -186,3 +196,80 @@ def test_tokenizer_hook_falls_back(monkeypatch):
     assert hc.count_tokens("x1!") == 3  # letters / digits / punct split
     monkeypatch.setattr(hc, "_HF_TRIED", False)
     monkeypatch.setattr(hc, "_HF_TOKENIZER", None)
+
+
+@pytest.fixture(scope="module")
+def law_docs():
+    """~40 synth HTML laws, extracted and enriched as the chunk stage sees
+    them."""
+    from docling_spark.operators.enrich import enrich_document
+    from docling_spark.pipeline import extract_document
+    from docling_spark.synth import synth_html_law
+
+    return [
+        (f"law-{i}", enrich_document(extract_document(synth_html_law(f"law-{i}", random.Random(i)))))
+        for i in range(40)
+    ]
+
+
+@pytest.mark.parametrize("max_tokens", [64, 16])
+@pytest.mark.parametrize("counter", ["bpe", "regex", "hf"])
+def test_n_tokens_is_content_plus_headings(monkeypatch, law_docs, counter, max_tokens):
+    # every stored count (split piece, K4 merge) must equal a fresh count of
+    # the chunk's text and headings, under each counter; 16 tokens forces
+    # the K2 window and K3 word paths
+    import docling_spark.operators.hybrid_chunker as hc
+
+    monkeypatch.delenv("DOCLING_TOKEN_COUNTER", raising=False)
+    if counter == "regex":
+        monkeypatch.setenv("DOCLING_TOKEN_COUNTER", "regex")
+    elif counter == "hf":
+        tok = _NewlineHeavy()
+        monkeypatch.setattr(hc, "_hf_tokenizer", lambda: tok)
+    n_split = 0
+    for doc_id, spans in law_docs:
+        for _doc, _no, cid, content, headings, n_tokens, _nu in hybrid_chunk_document(
+                doc_id, spans, max_tokens=max_tokens):
+            n_split += "/s" in cid
+            assert n_tokens == count_tokens(content) + sum(count_tokens(h) for h in headings), (
+                doc_id, cid, content, headings)
+    if max_tokens == 16:
+        assert n_split, "expected oversize units to split"
+
+
+def test_bpe_count_memo_matches_encoder(monkeypatch):
+    # the memoized sum equals the per-pretoken encoding, also when the memo
+    # is bounded to 4 entries and so is cleared again and again
+    from docling_spark.functions import bpe
+
+    rng = random.Random(11)
+    alphabet = "abcdefghijklmnopqrstuvwxyz ABCXYZ 0123456789 .,;:!?-()/§ čšžýáíéúäôňĽ\n\t"
+    texts = ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 300)))
+             for _ in range(200)]
+    texts += ["1234567890123456789 007 2024/2025 3.14", "Zákon č. 595/2003 Z. z. o dani"]
+
+    def reference(text):
+        return sum(len(bpe.encode_pretoken(w)) for w in bpe.PRETOKEN_RE.findall(text))
+
+    for t in texts:
+        assert bpe.bpe_count(t) == reference(t), t
+    monkeypatch.setattr(bpe, "_MEMO", {})
+    monkeypatch.setattr(bpe, "_MEMO_MAX", 4)
+    for t in texts:
+        assert bpe.bpe_count(t) == reference(t), t
+    assert len(bpe._MEMO) <= 4
+
+
+def test_counter_follows_env_between_documents(monkeypatch):
+    # the counter is resolved per document, never cached for the process
+    from docling_spark.functions.bpe import PRETOKEN_RE
+
+    monkeypatch.delenv("DOCLING_TOKEN_COUNTER", raising=False)
+    bpe_counts = [c[5] for c in hybrid_chunk_document("d1", _SPANS, max_tokens=10_000)]
+    monkeypatch.setenv("DOCLING_TOKEN_COUNTER", "regex")
+    chunks = hybrid_chunk_document("d1", _SPANS, max_tokens=10_000)
+    rgx_counts = [c[5] for c in chunks]
+    assert rgx_counts != bpe_counts
+    assert rgx_counts == [
+        len(PRETOKEN_RE.findall(content)) + sum(len(PRETOKEN_RE.findall(h)) for h in headings)
+        for _d, _no, _cid, content, headings, _n, _nu in chunks]
