@@ -1,4 +1,8 @@
-"""One per-document Arrow map for every stage that consumes spans.
+"""One Arrow map for every per-row Python stage.
+
+This module owns the Arrow boundary for all of the engine's per-row Python
+work: the stages that consume spans and the spans-free ones (media decoders,
+code chunks, Azure layout, DocTags parsing) alike.
 
 `map_documents(df, fn, schema)` runs `fn(doc_id, spans)` once per document
 inside a single narrow `mapInArrow` stage. This module is the only code that
@@ -20,19 +24,26 @@ knows how spans cross the Arrow boundary:
   from the input column of the same name for each output row, so a caller's
   extra columns bind in declared order, whatever the input's column order.
 
+`map_rows(df, fn, cols, schema)` is the same map for stages whose input is
+not spans: `fn(*values)` runs once per input row over the named columns
+(string and binary values convert per batch as above; a null is `None`) and
+returns that row's output tuples, built and passed through by the same
+output builder.
+
 Per-document work stays plain Python over one document (the vectorization
 axis is documents per Arrow batch); only the marshaling is columnar.
 
-**Chaining.** `map_documents` is built on `map_batches(df, batch_fn,
-schema)`, which also takes batch-level functions (the numpy MinHash). When
-`df` is the very DataFrame object an earlier `map_batches` returned, the new
-map runs the earlier map's batch functions and its own in one `mapInArrow`
-over the earlier input, so `enrich → markdown_sink → minhash_signature` is
-one Python worker per task, not three. Any other DataFrame ends the chain:
-`select`, `join`, `filter`, `observe` and `localCheckpoint` return new
-objects, and a persisted output (`cache()`/`persist()` return the same
-object) is read from its cache instead of recomputed. Every batch function
-is per row or per document, so chaining does not change the output.
+**Chaining.** `map_documents` and `map_rows` are built on `map_batches(df,
+batch_fn, schema)`, which also takes batch-level functions (the numpy
+MinHash). When `df` is the very DataFrame object an earlier `map_batches`
+returned, the new map runs the earlier map's batch functions and its own in
+one `mapInArrow` over the earlier input, so `enrich → markdown_sink →
+minhash_signature` is one Python worker per task, not three. Any other
+DataFrame ends the chain: `select`, `join`, `filter`, `observe` and
+`localCheckpoint` return new objects, and a persisted output
+(`cache()`/`persist()` return the same object) is read from its cache
+instead of recomputed. Every batch function is per row or per document, so
+chaining does not change the output.
 """
 
 from __future__ import annotations
@@ -46,6 +57,7 @@ import pyarrow.compute as pc
 SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 
 DocFn = Callable[[object, List[tuple]], Sequence[tuple]]
+RowFn = Callable[..., Sequence[tuple]]
 BatchFn = Callable[[pa.RecordBatch], pa.RecordBatch]
 
 # attribute a `map_batches` output DataFrame carries: (input, batch functions)
@@ -118,23 +130,15 @@ def _span_column(docs: Sequence[Sequence[tuple]], typ: pa.DataType) -> pa.Array:
     return pa.ListArray.from_arrays(pa.array(offsets), struct, type=typ)
 
 
-def map_batch(rb: pa.RecordBatch, fn: DocFn, schema: pa.Schema,
-              with_fmt: bool = False) -> pa.RecordBatch:
-    """One Arrow batch of documents → one batch of `schema`: `fn` per
-    document, its rows stacked in document order."""
-    doc_ids, docs = _decode(rb, with_fmt)
-    rows: List[tuple] = []
-    row_doc: List[int] = []
-    for i, (doc_id, spans) in enumerate(zip(doc_ids, docs)):
-        out = fn(doc_id, spans)
-        rows.extend(out)
-        row_doc.extend([i] * len(out))
-
+def _to_batch(rb: pa.RecordBatch, rows: List[tuple], row_in: List[int],
+              schema: pa.Schema) -> pa.RecordBatch:
+    """Output rows → one batch of `schema`. `row_in[k]` is the input row of
+    output row k; fields beyond the rows' width pass through from it."""
     width = len(rows[0]) if rows else len(schema)
     columns = list(zip(*rows)) if rows else [()] * width
     names = rb.schema.names
-    # one output row per document needs no take
-    take = None if row_doc == list(range(rb.num_rows)) else pa.array(row_doc, pa.int32())
+    # one output row per input row needs no take
+    take = None if row_in == list(range(rb.num_rows)) else pa.array(row_in, pa.int32())
     arrays = []
     for j, field in enumerate(schema):
         if j < width:
@@ -147,6 +151,20 @@ def map_batch(rb: pa.RecordBatch, fn: DocFn, schema: pa.Schema,
         src = rb.column(names.index(field.name))
         arrays.append(src if take is None else src.take(take))
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def map_batch(rb: pa.RecordBatch, fn: DocFn, schema: pa.Schema,
+              with_fmt: bool = False) -> pa.RecordBatch:
+    """One Arrow batch of documents → one batch of `schema`: `fn` per
+    document, its rows stacked in document order."""
+    doc_ids, docs = _decode(rb, with_fmt)
+    rows: List[tuple] = []
+    row_doc: List[int] = []
+    for i, (doc_id, spans) in enumerate(zip(doc_ids, docs)):
+        out = fn(doc_id, spans)
+        rows.extend(out)
+        row_doc.extend([i] * len(out))
+    return _to_batch(rb, rows, row_doc, schema)
 
 
 def map_batches(df, batch_fn: BatchFn, schema):
@@ -185,3 +203,32 @@ def map_documents(df, fn: DocFn, schema: str, with_fmt: bool = False):
     input has that column."""
     out_schema = arrow_schema(schema)
     return map_batches(df, lambda rb: map_batch(rb, fn, out_schema, with_fmt), schema)
+
+
+def _values(col: pa.Array) -> list:
+    if (pa.types.is_string(col.type) or pa.types.is_large_string(col.type)
+            or pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type)):
+        return _strings(col)
+    return col.to_pylist()
+
+
+def map_rows(df, fn: RowFn, cols: Sequence[str], schema: str):
+    """rows → `schema` rows: `fn(*values of cols)` once per input row, its
+    output tuples stacked in input order, in one narrow `mapInArrow` stage
+    (no shuffle), chained onto `df`'s map when `df` is one (`map_batches`).
+    Declared fields beyond the width of `fn`'s tuples pass through from the
+    input row."""
+    out_schema = arrow_schema(schema)
+
+    def batch_fn(rb: pa.RecordBatch) -> pa.RecordBatch:
+        names = rb.schema.names
+        values = [_values(rb.column(names.index(c))) for c in cols]
+        rows: List[tuple] = []
+        row_in: List[int] = []
+        for i, args in enumerate(zip(*values)):
+            out = fn(*args)
+            rows.extend(out)
+            row_in.extend([i] * len(out))
+        return _to_batch(rb, rows, row_in, out_schema)
+
+    return map_batches(df, batch_fn, schema)

@@ -41,20 +41,19 @@ skew the brace tree.
 C falls back to a documented brace-matching top-level function splitter
 (same output schema, no import/variable context).
 
-Spark shape: one zero-shuffle mapInPandas over (doc_id, language, code) —
-identical to the serializer sinks; chunking is a per-document fold, so it
-partitions embarrassingly at 100 TB.
+Spark shape: one zero-shuffle Arrow map (`docmap.map_rows`) over (doc_id,
+language, code), the same map the serializer sinks run in; chunking is a
+per-document fold, so it partitions embarrassingly at 100 TB.
 """
 
 from __future__ import annotations
 
 import ast
 import re
-from typing import Iterable, Iterator, List, Tuple
+from typing import List, Tuple
 
-import pandas as pd
-
-from docling_spark.operators.hybrid_chunker import count_tokens
+from docling_spark.docmap import map_rows
+from docling_spark.operators.hybrid_chunker import _DocCounter
 
 CODE_CHUNK_DDL = (
     "doc_id string, chunk_id int, part_name string, chunk_type string, "
@@ -367,38 +366,27 @@ class _JBlock:
         self.hdr_start = hdr_start  # after prev sibling / last ';' at level
 
 
-def _java_blocks(masked: str, lo: int, hi: int) -> "List[_JBlock]":
-    """Sibling brace blocks in masked[lo:hi], each with nested children and
+def _java_blocks(masked: str) -> "List[_JBlock]":
+    """Top-level brace blocks of `masked`, each with nested children and
     its header start (the position after the previous same-level ';' or
     sibling close — the span a declaration's modifiers/annotations/javadoc
-    occupy)."""
+    occupy). One pass with an explicit stack, so nesting depth is bounded
+    only by memory; an unclosed block closes at the end, a stray '}'
+    outside every block is skipped."""
     out: List[_JBlock] = []
-    cursor = lo
-    i = lo
-    while i < hi:
-        ch = masked[i]
+    end = len(masked)
+    # one frame per open block: (block, its children, its level's cursor)
+    stack: list = [[None, out, 0]]
+    for i, ch in enumerate(masked):
         if ch == ";":
-            cursor = i + 1
-            i += 1
+            stack[-1][2] = i + 1
         elif ch == "{":
-            depth, j = 0, i
-            while j < hi:
-                if masked[j] == "{":
-                    depth += 1
-                elif masked[j] == "}":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
-            kids = _java_blocks(masked, i + 1, j)
-            seg = masked[cursor:i]
-            p = seg.rfind(";")
-            hdr_start = cursor + p + 1 if p != -1 else cursor
-            out.append(_JBlock(i, j, kids, hdr_start))
-            cursor = j + 1
-            i = j + 1
-        else:
-            i += 1
+            blk = _JBlock(i, end, [], stack[-1][2])
+            stack[-1][1].append(blk)
+            stack.append([blk, blk.children, i + 1])
+        elif ch == "}" and len(stack) > 1:
+            stack.pop()[0].close = i
+            stack[-1][2] = i + 1
     return out
 
 
@@ -551,7 +539,7 @@ def _chunk_rows_java(code: str) -> List[tuple]:
         key = code[m.start():m.end()].strip() if simple == "*" else simple
         imports[key] = (m.start(), m.end())
 
-    top = _java_blocks(masked, 0, len(masked))
+    top = _java_blocks(masked)
     rows: List[tuple] = []
     used: List[Tuple[int, int]] = []
     if pkg:
@@ -746,7 +734,7 @@ def _chunk_rows_js(code: str) -> List[tuple]:
         for ident in _js_import_idents(clause):
             imports[ident] = (m.start(), m.end())
 
-    top = _java_blocks(masked, 0, len(masked))
+    top = _java_blocks(masked)
     rows: List[tuple] = []
     used: List[Tuple[int, int]] = []
     used_import_keys: set = set()
@@ -838,7 +826,12 @@ def chunk_code_document(doc_id: str, language: str, code: str,
                         max_tokens: int = 5000) -> List[tuple]:
     """One document → CODE_CHUNK_DDL rows. Oversized chunks split on line
     boundaries under `max_tokens` (the _ChunkSizeProcessor role; reference
-    default max_tokens=5000, :1074)."""
+    default max_tokens=5000, :1074).
+
+    The token counter is resolved once per document (`_DocCounter`) and each
+    string is counted once: a unit's content, then an oversize unit's lines.
+    A split piece's count is the sum of its line counts; only the HF
+    counter, which is not additive across the newline, recounts the piece."""
     lang = (language or "").lower()
     if lang == "python":
         rows = _chunk_rows_python(code)
@@ -848,45 +841,43 @@ def chunk_code_document(doc_id: str, language: str, code: str,
         rows = _chunk_rows_js(code)
     else:
         rows = _chunk_rows_braces(code)
+    counter = _DocCounter()
+    count = counter.count
     out: List[tuple] = []
     cid = 0
     for part, ctype, a, b, sig, doc, content in rows:
-        pieces = [content]
-        if count_tokens(content) > max_tokens:
-            pieces, cur = [], []
+        pieces, counts = [content], [count(content)]
+        if counts[0] > max_tokens:
+            pieces, counts, cur = [], [], []
             cur_tokens = 0
             for ln in content.split("\n"):
-                t = count_tokens(ln)
+                t = count(ln)
                 if cur and cur_tokens + t > max_tokens:
                     pieces.append("\n".join(cur))
+                    counts.append(cur_tokens)
                     cur, cur_tokens = [], 0
                 cur.append(ln)
                 cur_tokens += t
             if cur:
                 pieces.append("\n".join(cur))
-        for piece in pieces:
-            out.append((doc_id, cid, part, ctype, a, b, sig, doc, piece,
-                        count_tokens(piece)))
+                counts.append(cur_tokens)
+            if not counter.additive:
+                counts = [count(p) for p in pieces]
+        for piece, n in zip(pieces, counts):
+            out.append((doc_id, cid, part, ctype, a, b, sig, doc, piece, n))
             cid += 1
     return out
 
 
 def code_chunk_sink(df, id_col: str = "doc_id", lang_col: str = "language",
                     code_col: str = "code", max_tokens: int = 5000):
-    """(doc_id, language, code) → code-chunk table. Zero-shuffle
-    mapInPandas (its input is source code, not spans)."""
+    """(doc_id, language, code) → code-chunk table: `chunk_code_document`
+    per row in one zero-shuffle Arrow map (`docmap.map_rows`)."""
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "chunk_id", "part_name", "chunk_type", "start_line",
-                "end_line", "signature_end_line", "docstring", "content",
-                "n_tokens"]
-        for pdf in batches:
-            rows: List[tuple] = []
-            for doc_id, lang, code in zip(pdf[id_col], pdf[lang_col], pdf[code_col]):
-                rows.extend(chunk_code_document(str(doc_id), lang, code, max_tokens))
-            yield pd.DataFrame(rows, columns=cols)
+    def row(doc_id, lang, code):
+        return chunk_code_document(str(doc_id), lang, code, max_tokens)
 
-    return df.mapInPandas(gen, schema=CODE_CHUNK_DDL)
+    return map_rows(df, row, (id_col, lang_col, code_col), CODE_CHUNK_DDL)
 
 
 # ---------------------------------------------------------------------------

@@ -27,11 +27,9 @@ Reference semantics mirrored (original implementation):
 from __future__ import annotations
 
 import re
-from typing import Callable, Dict, Iterable, Iterator, List, NamedTuple, Optional, Tuple
+from typing import Callable, Dict, List, NamedTuple, Optional, Tuple
 
-import pandas as pd
-
-from docling_spark.docmap import map_documents
+from docling_spark.docmap import map_documents, map_rows
 from docling_spark.schema import CHUNK_DDL
 
 Span = Tuple[str, str, Optional[str]]
@@ -936,12 +934,16 @@ def render_azure(payload: str, indent: "int | None" = None) -> str:
         out_figures.append(fig)
 
     groups = _az_list(d.get("groups"))
-    seen_groups: set = set()
 
     def _visit_children(children: list) -> None:
         # groups (lists, inline containers) emit nothing themselves — their
-        # children flatten into the traversal (azure.py:398-431)
-        for ch in _az_list(children):
+        # children flatten into the traversal (azure.py:398-431), walked
+        # depth-first from a stack of pending children (next one on top), so
+        # group nesting depth is bounded only by memory
+        seen_groups: set = set()
+        work = children[::-1]
+        while work:
+            ch = work.pop()
             ref = str(_az_dict(ch).get("$ref", ""))
             m = re.match(r"^#/(texts|tables|pictures|groups)/(\d+)$", ref)
             if not m:
@@ -955,7 +957,7 @@ def render_azure(payload: str, indent: "int | None" = None) -> str:
                 _visit_picture(pictures[idx])
             elif kind == "groups" and idx < len(groups) and idx not in seen_groups:
                 seen_groups.add(idx)  # cycle guard on malformed payloads
-                _visit_children(_az_list(_az_dict(groups[idx]).get("children")))
+                work.extend(_az_list(_az_dict(groups[idx]).get("children"))[::-1])
 
     children = _az_dict(d.get("body")).get("children")
     children = children if isinstance(children, list) else None
@@ -990,15 +992,13 @@ def render_azure(payload: str, indent: "int | None" = None) -> str:
 
 
 def azure_sink(df, json_col: str = "payload", indent: "int | None" = None):
-    """(doc_id, payload docling-JSON) → (doc_id, azure). Zero-shuffle
-    mapInPandas (its input is a JSON payload column, not spans, so it does
-    not go through `docmap.map_documents`); per-doc payload parse + accumulator
+    """(doc_id, payload docling-JSON) → (doc_id, azure): `render_azure` per
+    row in one zero-shuffle Arrow map (`docmap.map_rows`; its input is a
+    JSON payload column, not spans). The per-doc payload parse + accumulator
     fold is the serializer itself (the reference's is the same per-document
     fold over pydantic objects)."""
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rendered = [render_azure(p, indent) for p in pdf[json_col]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "azure": rendered})
+    def row(doc_id, payload):
+        return [(doc_id, render_azure(payload, indent))]
 
-    return df.mapInPandas(gen, schema="doc_id string, azure string")
+    return map_rows(df, row, ("doc_id", json_col), "doc_id string, azure string")

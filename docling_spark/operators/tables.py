@@ -23,7 +23,7 @@ left anti-join / exploded count.
 from __future__ import annotations
 
 import re
-from typing import List, Optional, Sequence, Tuple
+from typing import Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
@@ -78,26 +78,6 @@ def assign_table_context(normalized: DataFrame) -> DataFrame:
             F.min("offset").alias("table_offset"),
         )
     )
-
-
-def assign_table_context_perdoc(spans: Sequence[Tuple[str, str, Optional[str]]]) -> List[tuple]:
-    """J1 per-doc form (running state, the reference's shape) — used by the
-    equivalence test mirroring verify_results_identical
-    (archive_scripts/test_traversal_approaches.py:943-975)."""
-    section = subsection = None
-    seen = {}
-    for offset, (kind, text, ref) in enumerate(spans):
-        if kind == "paragraph":
-            section, subsection = text, None
-        elif kind == "odsek":
-            subsection = text
-        elif kind == "table_cell" and ref:
-            m = re.match(r"^(#/tables/\d+)/", ref)
-            if m and m.group(1) not in seen:
-                seen[m.group(1)] = (section, subsection, offset)
-    return [
-        (t, sec, sub, off) for t, (sec, sub, off) in sorted(seen.items(), key=lambda kv: kv[1][2])
-    ]
 
 
 # --- J2: positional range join table → unit ----------------------------------
@@ -167,34 +147,6 @@ def classify_table_cells(first_cells: Sequence[str]) -> str:
     if legal > 0:
         return "legal"
     return "unknown"
-
-
-def classify_tables(normalized: DataFrame) -> DataFrame:
-    """(doc_id, table_ref, table_class) via native collect of first 10 cells
-    per table then a vectorized classifier pass."""
-    spans = explode_spans(normalized)
-    table_ref = F.regexp_extract(F.col("media_ref"), r"^(#/tables/\d+)/", 1)
-    cells = (
-        spans.filter((F.col("kind") == "table_cell") & (table_ref != ""))
-        .groupBy("doc_id", table_ref.alias("table_ref"))
-        .agg(
-            F.slice(
-                F.expr("transform(array_sort(collect_list(struct(offset, text))), s -> s.text)"),
-                1,
-                10,
-            ).alias("first_cells")
-        )
-    )
-
-    import pandas as pd
-
-    @F.pandas_udf("string")
-    def _cls(col: pd.Series) -> pd.Series:
-        return col.map(lambda cs: classify_table_cells(cs if cs is not None else []))
-
-    return cells.select(
-        "doc_id", "table_ref", _cls(F.col("first_cells")).alias("table_class")
-    )
 
 
 # --- J3: fuzzy text-rendered-table → real-table match ------------------------

@@ -1,6 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + typed
 metadata, with decode / feature-extract / resize / frame-sample as
-Arrow-batched mapInPandas stages.
+per-row functions, each run in one narrow Arrow map (`docmap.map_rows`).
 
 Decode strategy (no external codecs ship in this container — PIL/ffmpeg/
 torchaudio are absent):
@@ -21,11 +21,12 @@ from __future__ import annotations
 import hashlib
 import io
 import wave
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from docling_spark.docmap import map_rows
 
 MEDIA_META_DDL = (
     "media_id string, media_type string, byte_len long, sha256 string"
@@ -177,21 +178,11 @@ def media_metadata(df: DataFrame, id_col: str = "media_id",
                    type_col: str = "media_type") -> DataFrame:
     """Narrow metadata pass: byte length + content hash per blob."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype(str),
-                    "media_type": pdf[type_col].astype(str),
-                    "byte_len": payloads.map(lambda b: len(b) if b is not None else 0).astype("int64"),
-                    "sha256": payloads.map(
-                        lambda b: hashlib.sha256(b or b"").hexdigest()
-                    ),
-                }
-            )
+    def row(mid, mtype, payload):
+        b = payload or b""
+        return [(str(mid), str(mtype), len(b), hashlib.sha256(b).hexdigest())]
 
-    return df.mapInPandas(gen, schema=MEDIA_META_DDL)
+    return map_rows(df, row, (id_col, type_col, payload_col), MEDIA_META_DDL)
 
 
 def image_features(df: DataFrame, id_col: str = "media_id",
@@ -199,38 +190,24 @@ def image_features(df: DataFrame, id_col: str = "media_id",
                    type_col: str = "media_type") -> DataFrame:
     """Decode + feature-extract (stubbed decode, real plumbing)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mtype, payload in zip(
-                pdf[id_col], pdf[type_col], pdf[payload_col]
-            ):
-                b = bytes(payload) if payload is not None else b""
-                parsed = _parse_netpbm(b)
-                if parsed is not None:  # REAL decode (netpbm)
-                    w, h, _ch, arr = parsed
-                    luma = _luma(arr)
-                    ok = True
-                else:
-                    try:
-                        w, h, luma = _decode_image_stub(b)
-                        ok = True
-                    except NotImplementedError:
-                        w = h = 0
-                        luma = 0.0
-                        ok = False
-                rows.append(
-                    (str(mid), str(mtype), len(b), hashlib.sha256(b).hexdigest(), w, h, luma, ok)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "byte_len", "sha256",
-                    "width", "height", "mean_luma", "decode_ok",
-                ],
-            )
+    def row(mid, mtype, payload):
+        b = payload or b""
+        parsed = _parse_netpbm(b)
+        if parsed is not None:  # REAL decode (netpbm)
+            w, h, _ch, arr = parsed
+            luma = _luma(arr)
+            ok = True
+        else:
+            try:
+                w, h, luma = _decode_image_stub(b)
+                ok = True
+            except NotImplementedError:
+                w = h = 0
+                luma = 0.0
+                ok = False
+        return [(str(mid), str(mtype), len(b), hashlib.sha256(b).hexdigest(), w, h, luma, ok)]
 
-    return df.mapInPandas(gen, schema=IMAGE_FEATURES_DDL)
+    return map_rows(df, row, (id_col, type_col, payload_col), IMAGE_FEATURES_DDL)
 
 
 def frame_sample(df: DataFrame, every_n: int = 10, id_col: str = "media_id",
@@ -238,26 +215,17 @@ def frame_sample(df: DataFrame, every_n: int = 10, id_col: str = "media_id",
     """Video frame sampling plumbing: 1 row per sampled frame. Frame count is
     derived deterministically from the payload (stub for a demuxer)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frames, shas = [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                real = _demux_y4m(b)
-                if real is not None:  # REAL demux (YUV4MPEG2)
-                    for fno in range(0, len(real), every_n):
-                        ids.append(str(mid))
-                        frames.append(fno)
-                        shas.append(hashlib.sha256(real[fno]).hexdigest()[:16])
-                    continue
-                n_frames = 1 + (len(b) % 97)  # stub: a demuxer would count real frames
-                for fno in range(0, n_frames, every_n):
-                    ids.append(str(mid))
-                    frames.append(fno)
-                    shas.append(hashlib.sha256(b + fno.to_bytes(4, "big")).hexdigest()[:16])
-            yield pd.DataFrame({"media_id": ids, "frame_no": frames, "frame_sha": shas})
+    def row(mid, payload):
+        b = payload or b""
+        real = _demux_y4m(b)
+        if real is not None:  # REAL demux (YUV4MPEG2)
+            return [(str(mid), fno, hashlib.sha256(real[fno]).hexdigest()[:16])
+                    for fno in range(0, len(real), every_n)]
+        n_frames = 1 + (len(b) % 97)  # stub: a demuxer would count real frames
+        return [(str(mid), fno, hashlib.sha256(b + fno.to_bytes(4, "big")).hexdigest()[:16])
+                for fno in range(0, n_frames, every_n)]
 
-    return df.mapInPandas(gen, schema=FRAME_SAMPLE_DDL)
+    return map_rows(df, row, (id_col, payload_col), FRAME_SAMPLE_DDL)
 
 
 def _decode_audio_stub(payload: bytes):
@@ -277,42 +245,28 @@ def audio_features(df: DataFrame, id_col: str = "media_id",
                    payload_col: str = "payload",
                    type_col: str = "media_type") -> DataFrame:
     """Audio decode + feature-extract (stubbed decode, real plumbing):
-    duration / sample rate / RMS loudness per blob. Same narrow
-    mapInPandas shape as image_features."""
+    duration / sample rate / RMS loudness per blob. Same narrow Arrow map
+    as image_features."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mtype, payload in zip(
-                pdf[id_col], pdf[type_col], pdf[payload_col]
-            ):
-                b = bytes(payload) if payload is not None else b""
-                wav = _decode_wav(b)
-                if wav is not None:  # REAL decode (RIFF/WAV PCM)
-                    dur, sr, rms = wav
-                    ok = True
-                else:
-                    try:
-                        dur, sr, rms = _decode_audio_stub(b)
-                        ok = True
-                    except NotImplementedError:
-                        dur = 0.0
-                        sr = 0
-                        rms = 0.0
-                        ok = False
-                rows.append(
-                    (str(mid), str(mtype), len(b), hashlib.sha256(b).hexdigest(),
-                     dur, sr, rms, ok)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "byte_len", "sha256",
-                    "duration_s", "sample_rate", "rms", "decode_ok",
-                ],
-            )
+    def row(mid, mtype, payload):
+        b = payload or b""
+        wav = _decode_wav(b)
+        if wav is not None:  # REAL decode (RIFF/WAV PCM)
+            dur, sr, rms = wav
+            ok = True
+        else:
+            try:
+                dur, sr, rms = _decode_audio_stub(b)
+                ok = True
+            except NotImplementedError:
+                dur = 0.0
+                sr = 0
+                rms = 0.0
+                ok = False
+        return [(str(mid), str(mtype), len(b), hashlib.sha256(b).hexdigest(),
+                 dur, sr, rms, ok)]
 
-    return df.mapInPandas(gen, schema=AUDIO_FEATURES_DDL)
+    return map_rows(df, row, (id_col, type_col, payload_col), AUDIO_FEATURES_DDL)
 
 
 def image_resize(df: DataFrame, max_side: int = 64, id_col: str = "media_id",
@@ -324,38 +278,28 @@ def image_resize(df: DataFrame, max_side: int = 64, id_col: str = "media_id",
     PIL decode + `img.thumbnail((max_side, max_side))` + re-encode; the
     schema, batch iteration and narrow plan shape stay identical."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                parsed = _parse_netpbm(b)
-                if parsed is not None:  # REAL nearest-neighbour resize
-                    w, h, _ch, arr = parsed
-                    scale = min(1.0, max_side / max(w, h))
-                    ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
-                    ry = (np.arange(oh) * h // oh).clip(0, h - 1)
-                    rx = (np.arange(ow) * w // ow).clip(0, w - 1)
-                    thumb = _encode_netpbm(np.ascontiguousarray(arr[ry][:, rx]))
-                    rows.append((str(mid), w, h, ow, oh, thumb))
-                    continue
-                try:
-                    w, h, _ = _decode_image_stub(b)
-                except NotImplementedError:
-                    rows.append((str(mid), 0, 0, 0, 0, b""))
-                    continue
-                scale = min(1.0, max_side / max(w, h))
-                ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
-                seed_digest = hashlib.sha256(b + b"resize").digest()
-                thumb = (seed_digest * ((ow * oh) // len(seed_digest) + 1))[: ow * oh]
-                rows.append((str(mid), w, h, ow, oh, thumb))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "out_width",
-                         "out_height", "out_payload"],
-            )
+    def row(mid, payload):
+        b = payload or b""
+        parsed = _parse_netpbm(b)
+        if parsed is not None:  # REAL nearest-neighbour resize
+            w, h, _ch, arr = parsed
+            scale = min(1.0, max_side / max(w, h))
+            ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
+            ry = (np.arange(oh) * h // oh).clip(0, h - 1)
+            rx = (np.arange(ow) * w // ow).clip(0, w - 1)
+            thumb = _encode_netpbm(np.ascontiguousarray(arr[ry][:, rx]))
+            return [(str(mid), w, h, ow, oh, thumb)]
+        try:
+            w, h, _ = _decode_image_stub(b)
+        except NotImplementedError:
+            return [(str(mid), 0, 0, 0, 0, b"")]
+        scale = min(1.0, max_side / max(w, h))
+        ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
+        seed_digest = hashlib.sha256(b + b"resize").digest()
+        thumb = (seed_digest * ((ow * oh) // len(seed_digest) + 1))[: ow * oh]
+        return [(str(mid), w, h, ow, oh, thumb)]
 
-    return df.mapInPandas(gen, schema=RESIZE_DDL)
+    return map_rows(df, row, (id_col, payload_col), RESIZE_DDL)
 
 
 def synth_wav(rng: np.random.RandomState, sr: int = 16000,
@@ -500,20 +444,16 @@ def image_dhash(df: DataFrame, id_col: str = "media_id",
     Real decode for netpbm; deterministic payload-digest fallback
     (decoded=false: exact-duplicate-only signal) for compressed formats."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                parsed = _parse_netpbm(b)
-                if parsed is not None:
-                    _w, _h, _ch, arr = parsed
-                    rows.append((str(mid), _dhash64_from_gray(_gray_f64(arr)), True))
-                else:
-                    rows.append((str(mid), _payload_digest64(b, b"dhash"), False))
-            yield pd.DataFrame(rows, columns=["media_id", "dhash", "decoded"])
+    def row(mid, payload):
+        b = payload or b""
+        parsed = _parse_netpbm(b)
+        if parsed is not None:
+            _w, _h, _ch, arr = parsed
+            return [(str(mid), _dhash64_from_gray(_gray_f64(arr)), True)]
+        return [(str(mid), _payload_digest64(b, b"dhash"), False)]
 
-    return df.mapInPandas(gen, schema="media_id string, dhash long, decoded boolean")
+    return map_rows(df, row, (id_col, payload_col),
+                    "media_id string, dhash long, decoded boolean")
 
 
 def image_neardup_pairs(df: DataFrame, max_hamming: int = 10,
@@ -576,26 +516,17 @@ def audio_fingerprints(df: DataFrame, frame: int = 1024, hop: int = 512,
     decoded=false) otherwise. Duplicate search = exact fp equi-join
     (ops.dedup.shared_window_pairs shape: only 8-byte hashes shuffle)."""
 
-    def clip_fps(samples: np.ndarray, sr: int):
-        return subfingerprints(samples, sr, frame, hop, n_bands, max_frames)
+    def row(mid, payload):
+        b = payload or b""
+        decoded = _decode_wav_samples(b)
+        if decoded is None:
+            return [(str(mid), 0, _payload_digest64(b, b"afp") & 0xFFFF, False)]
+        samples, sr = decoded
+        fps = subfingerprints(samples, sr, frame, hop, n_bands, max_frames)
+        return [(str(mid), t, fp, True) for t, fp in enumerate(fps)]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                decoded = _decode_wav_samples(b)
-                if decoded is not None:
-                    samples, sr = decoded
-                    for t, fp in enumerate(clip_fps(samples, sr)):
-                        rows.append((str(mid), t, fp, True))
-                else:
-                    rows.append((str(mid), 0, _payload_digest64(b, b"afp") & 0xFFFF, False))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_no", "fp", "decoded"])
-
-    return df.mapInPandas(
-        gen, schema="media_id string, frame_no int, fp long, decoded boolean"
-    )
+    return map_rows(df, row, (id_col, payload_col),
+                    "media_id string, frame_no int, fp long, decoded boolean")
 
 
 def _decode_wav_samples(payload: bytes):
@@ -640,26 +571,22 @@ def video_frame_hashes(df: DataFrame, every_n: int = 5,
     Video near-dup = shared frame-hash equi-join, optionally followed by a
     longest-common-run check. Digest fallback for compressed containers."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                frames = _demux_y4m(b)
-                dims = _y4m_dims(b) if frames is not None else None
-                if frames is not None and dims is not None:
-                    w, h = dims
-                    for i in range(0, len(frames), every_n):
-                        y = np.frombuffer(frames[i][: w * h], dtype=np.uint8)
-                        g = y.reshape(h, w).astype(np.float64)
-                        rows.append((str(mid), i, _dhash64_from_gray(g), True))
-                else:
-                    rows.append((str(mid), 0, _payload_digest64(b, b"vfh"), False))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_no", "dhash", "decoded"])
+    def row(mid, payload):
+        b = payload or b""
+        frames = _demux_y4m(b)
+        dims = _y4m_dims(b) if frames is not None else None
+        if frames is None or dims is None:
+            return [(str(mid), 0, _payload_digest64(b, b"vfh"), False)]
+        w, h = dims
+        out = []
+        for i in range(0, len(frames), every_n):
+            y = np.frombuffer(frames[i][: w * h], dtype=np.uint8)
+            g = y.reshape(h, w).astype(np.float64)
+            out.append((str(mid), i, _dhash64_from_gray(g), True))
+        return out
 
-    return df.mapInPandas(
-        gen, schema="media_id string, frame_no int, dhash long, decoded boolean"
-    )
+    return map_rows(df, row, (id_col, payload_col),
+                    "media_id string, frame_no int, dhash long, decoded boolean")
 
 
 def media_shared_fingerprint_pairs(fp_df: DataFrame, id_col: str = "media_id",

@@ -108,30 +108,8 @@ def fingerprint_duck(col: str) -> str:
 # hashes of word n-gram shingles — the minhash feature set (Broder '97
 # shingling: minhash MUST run over the same features the verify join
 # compares, else banding selectivity decouples from true similarity)
-def shingle_hashes_spark(col: str, n: int) -> str:
-    return f"transform({ngrams_spark(col, n)}, g -> {token_hash_spark('g')})"
-
-
 def shingle_hashes_duck(col: str, n: int) -> str:
     return f"list_transform({ngrams_duck(col, n)}, g -> {token_hash_duck('g')})"
-
-
-# character n-gram (shingle) arrays for near-dup Jaccard
-def ngrams_spark(col: str, n: int) -> str:
-    # word n-grams: slide over tokens, join with single space.
-    # NOTE (hot paths): `tokens_spark` appears inside the lambda body, and
-    # Spark does not common-subexpression-eliminate across lambda scopes —
-    # the split() re-evaluates PER SHINGLE, making this O(tokens²) per row.
-    # Fine for oracles/small projections; in operators, project the token
-    # array to a column first and use `ngrams_from_tokens_spark`.
-    # NOTE: Spark's sequence(1, 0) generates DESCENDING [1, 0] — the window
-    # count must be imposed by slice(), not by the sequence stop, or a doc
-    # with fewer than n tokens crashes slice() with index 0
-    return (
-        f"array_distinct(transform(slice(sequence(1, size({tokens_spark(col)})), 1, "
-        f"greatest(size({tokens_spark(col)}) - {n - 1}, 0)), "
-        f"i -> array_join(slice({tokens_spark(col)}, i, {n}), ' ')))"
-    )
 
 
 def ngrams_all_from_tokens_spark(toks_col: str, n: int) -> str:
@@ -152,8 +130,12 @@ def ngrams_all_from_tokens_duck(toks_col: str, n: int) -> str:
 
 
 def ngrams_from_tokens_spark(toks_col: str, n: int) -> str:
-    """Same shingle construction over a pre-materialized token-array COLUMN —
-    the column reference is evaluated once per row, so this is O(tokens)."""
+    """Distinct word n-grams (shingles, for near-dup Jaccard) over a
+    pre-materialized token-array COLUMN: slide over the tokens, join with a
+    single space. The column reference is evaluated once per row, so this is
+    O(tokens). Spark's sequence(1, 0) generates DESCENDING [1, 0], so the
+    window count is imposed by slice(), not by the sequence stop; otherwise a
+    doc with fewer than n tokens crashes slice() with index 0."""
     return (
         f"array_distinct(transform(slice(sequence(1, size({toks_col})), 1, "
         f"greatest(size({toks_col}) - {n - 1}, 0)), "

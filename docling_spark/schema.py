@@ -35,7 +35,7 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-# DDL forms (for mapInArrow / mapInPandas signatures)
+# DDL forms (for mapInArrow signatures)
 SPAN_DDL = "kind string, text string, media_ref string, offset int"
 DOC_DDL = f"doc_id string, spans array<struct<{SPAN_DDL}>>"
 

@@ -16,12 +16,13 @@
 from __future__ import annotations
 
 import re
-from typing import List, Optional
+from typing import List
 
 import yaml
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from docling_spark.schema import DOC_SCHEMA
+from docling_spark.docmap import map_rows
+from docling_spark.schema import DOC_DDL, DOC_SCHEMA
 
 _GRAPH_ITEM_ARRAY = T.ArrayType(
     T.StructType(
@@ -481,20 +482,10 @@ def parse_doctags(payload: str):
 def read_doctags(df: DataFrame, payload_col: str = "doctags",
                  id_col: str = "doc_id") -> DataFrame:
     """(doc_id, doctags string) → (doc_id, spans) in the canonical 4-field
-    shape. Document-local parse → narrow mapInPandas, zero shuffle."""
-    import pandas as pd
+    shape: `parse_doctags` per row in one narrow Arrow map
+    (`docmap.map_rows`), zero shuffle; chained onto `df`'s map when `df` is
+    one (`doctags_sink`'s output)."""
+    def row(doc_id, payload):
+        return [(str(doc_id), parse_doctags(payload))]
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                spans = [
-                    {"kind": k, "text": t, "media_ref": r, "offset": i}
-                    for i, (k, t, r) in enumerate(parse_doctags(payload))
-                ]
-                rows.append((str(mid), spans))
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-    from docling_spark.schema import DOC_DDL
-
-    return df.mapInPandas(gen, schema=DOC_DDL)
+    return map_rows(df, row, (id_col, payload_col), DOC_DDL)

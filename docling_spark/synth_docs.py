@@ -85,44 +85,6 @@ def doc_row(seed: int, idx: int) -> Tuple[int, str, str, str, int]:
     return idx, text, lang, source, len(text)
 
 
-def write_documents_parquet(path: str, n_docs: int, seed: int = 42) -> None:
-    """One parquet file with the testdata `documents` schema. Single
-    process (generation is not the thing under measurement) but chunked so
-    memory stays bounded."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("text", pa.string()),
-            ("lang", pa.string()),
-            ("source", pa.string()),
-            ("n_chars", pa.int32()),
-        ]
-    )
-    writer = pq.ParquetWriter(path, schema)
-    chunk = 10_000
-    try:
-        for lo in range(0, n_docs, chunk):
-            rows = [doc_row(seed, i) for i in range(lo, min(lo + chunk, n_docs))]
-            cols = list(zip(*rows))
-            writer.write_table(
-                pa.table(
-                    {
-                        "doc_id": list(cols[0]),
-                        "text": list(cols[1]),
-                        "lang": list(cols[2]),
-                        "source": list(cols[3]),
-                        "n_chars": list(cols[4]),
-                    },
-                    schema=schema,
-                )
-            )
-    finally:
-        writer.close()
-
-
 def write_embeddings_parquet(path: str, n_vecs: int, dim: int = 64,
                              seed: int = 42, neardup_p: float = 0.02) -> None:
     """Deterministic `embeddings`-table twin (vec_id:long,

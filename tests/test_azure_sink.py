@@ -181,3 +181,39 @@ def test_render_azure_multipage_and_missing_size(core):
     # unregistered page: raw coordinates pass through
     p3 = [p for p in parsed["paragraphs"] if p["content"] == "p3 body"][0]
     assert p3["boundingRegions"][0]["polygon"][1] == 50.0
+
+
+def _group_chain(depth):
+    """body → group 0 → group 1 → … → group depth-1 → text 0, then text 1
+    after the chain at body level."""
+    prov = [{"page_no": 1, "bbox": {"l": 1, "t": 2, "r": 3, "b": 4}}]
+    groups = [{"children": [{"$ref": f"#/groups/{i + 1}"}]} for i in range(depth - 1)]
+    groups.append({"children": [{"$ref": "#/texts/0"}]})
+    return {
+        "texts": [{"text": "inner", "prov": prov}, {"text": "after", "prov": prov}],
+        "groups": groups,
+        "body": {"children": [{"$ref": "#/groups/0"}, {"$ref": "#/texts/1"}]},
+    }
+
+
+def test_render_azure_deep_group_chain():
+    # groups chained deeper than Python's recursion limit render, in
+    # depth-first order, like a shallow chain
+    from docling_spark.operators.serialize import render_azure
+
+    for depth in (1, 20_000):
+        out = json.loads(render_azure(json.dumps(_group_chain(depth))))
+        assert [p["content"] for p in out["paragraphs"]] == ["inner", "after"]
+
+
+def test_azure_sink_spark_matches_render_azure(spark):
+    from docling_spark.operators.serialize import azure_sink, render_azure
+
+    payloads = [("deep", json.dumps(_group_chain(20_000))),
+                ("flat", json.dumps(_group_chain(2))), ("null", None)]
+    # doc_id after the payload: the output still leads with doc_id
+    df = spark.createDataFrame([(p, d) for d, p in payloads], "payload string, doc_id string")
+    out = azure_sink(df)
+    assert out.columns == ["doc_id", "azure"]
+    got = {r["doc_id"]: r["azure"] for r in out.collect()}
+    assert got == {d: render_azure(p) for d, p in payloads}

@@ -3,6 +3,8 @@ pin behind the committed fixture oracle) plus robustness and Spark wiring."""
 
 import ast
 
+import pytest
+
 from docling_spark.operators.code_chunker import (
     chunk_code_document, code_chunk_sink, synth_code_rows)
 
@@ -433,3 +435,45 @@ def test_js_require_destructuring_and_reuse():
     rows = chunk_code_document("d", "javascript", js)
     f = {r[2]: r for r in rows}["f"]
     assert "require('node:path')" in f[8]       # alias use binds the import
+
+
+DEEP = 20_000  # far past Python's recursion limit (1,000)
+
+
+def _deep_java(depth):
+    blocks = "{" * depth + "x++;" + "}" * depth
+    return ("package p;\nimport java.util.List;\n\n"
+            "public class Deep {\n"
+            f"    void nest(List<String> xs) {{ int x = 0; {blocks} }}\n"
+            "    int two() { return 2; }\n"
+            "}\n")
+
+
+@pytest.mark.parametrize("lang", ["java", "javascript"])
+def test_deep_nesting_chunks(lang):
+    # a document nested deeper than Python's recursion limit is chunked, not
+    # lost to a RecursionError; its methods chunk as at any depth
+    if lang == "java":
+        code = _deep_java(DEEP)
+        want = {"Deep.nest", "Deep.two"}
+    else:
+        code = ("import { a } from 'm';\n"
+                f"function nest(x) {{ {'{' * DEEP}a(x);{'}' * DEEP} }}\n"
+                "function two() { return 2; }\n")
+        want = {"nest", "two"}
+    rows = chunk_code_document("d", lang, code)
+    assert {r[2] for r in rows if r[3] == "function"} == want
+    # the same chunks as the shallow form (the deep body also splits under
+    # the token budget, repeating its chunk's metadata)
+    shallow = chunk_code_document("d", lang, code.replace("{" * DEEP, "{").replace("}" * DEEP, "}"))
+    assert {r[2:8] for r in rows} == {r[2:8] for r in shallow}
+
+
+def test_code_chunk_sink_deep_nesting_spark(spark):
+    rows = [("deep", "java", _deep_java(DEEP)), ("flat", "java", _deep_java(1))]
+    df = spark.createDataFrame(rows, "doc_id string, language string, code string")
+    got = [tuple(r) for r in code_chunk_sink(df).orderBy("doc_id", "chunk_id").collect()]
+    expected = sorted(r for doc_id, lang, code in rows
+                      for r in chunk_code_document(doc_id, lang, code))
+    assert got == expected
+    assert {r[2] for r in got if r[0] == "deep"} >= {"Deep.nest", "Deep.two"}

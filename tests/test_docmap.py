@@ -1,10 +1,11 @@
 """The per-document Arrow map (docling_spark.docmap): how spans cross the
-Arrow boundary in and out of every span stage, checked one batch at a time."""
+Arrow boundary in and out of every span stage, checked one batch at a time,
+and the per-row form the spans-free stages run on."""
 
 import pyarrow as pa
 import pytest
 
-from docling_spark.docmap import arrow_schema, map_batch
+from docling_spark.docmap import arrow_schema, map_batch, map_rows
 from docling_spark.schema import DOC_DDL
 
 SPAN_T = pa.list_(pa.struct([("kind", pa.string()), ("text", pa.string()),
@@ -98,6 +99,24 @@ def test_map_batch(spark, name):
 def test_map_batch_undeclared_passthrough_raises(spark):
     with pytest.raises(ValueError, match="bucket"):
         map_batch(_batch(["a"], [_spans(A)]), _echo, arrow_schema(DOC_DDL + ", bucket int"))
+
+
+def test_map_rows(spark):
+    """`map_rows` calls `fn` once per row with the named columns' values (a
+    null as None, binary as bytes), stacks its tuples in row order, and
+    passes a declared field beyond their width through from the row."""
+    df = spark.createDataFrame(
+        [("a", bytearray(b"xy"), 7), (None, None, 3), ("c", bytearray(), 5)],
+        "name string, blob binary, bucket int")
+
+    def fn(name, blob):
+        if name is None:
+            return [("<null>", blob is None)]
+        return [(name, isinstance(blob, bytes))] * len(blob)
+
+    out = map_rows(df, fn, ("name", "blob"), "name string, ok boolean, bucket int")
+    assert [tuple(r) for r in out.collect()] == [
+        ("a", True, 7), ("a", True, 7), ("<null>", True, 3)]
 
 
 def test_worker_skips_unchanged_zip_rereads(spark):

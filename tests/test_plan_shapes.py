@@ -269,6 +269,37 @@ def test_span_stages_are_arrow_maps(spark):
         assert "Exchange" not in plan
 
 
+def test_spans_free_stages_are_arrow_maps(spark):
+    """The per-row stages that take no spans (the media decoders, code
+    chunks, Azure layout, DocTags parsing) each compile to one narrow
+    MapInArrow stage, and read_doctags(doctags_sink(docs)) chains into one:
+    no MapInPandas, no exchange."""
+    from docling_spark.operators.code_chunker import code_chunk_sink
+    from docling_spark.operators.serialize import azure_sink, doctags_sink
+    from docling_spark.ops import multimodal as M
+    from docling_spark.sources.readers import read_doctags
+
+    media = spark.createDataFrame(
+        [("m", "image/png", bytearray(b"x"))],
+        "media_id string, media_type string, payload binary")
+    code = spark.createDataFrame(
+        [("c", "python", "x = 1")], "doc_id string, language string, code string")
+    azure = spark.createDataFrame([("a", "{}")], "doc_id string, payload string")
+    doctags = spark.createDataFrame([("d", "<doctag></doctag>")],
+                                    "doc_id string, doctags string")
+    stages = (M.media_metadata, M.image_features, M.frame_sample,
+              M.audio_features, M.image_resize, M.image_dhash,
+              M.audio_fingerprints, M.video_frame_hashes)
+    outs = [stage(media) for stage in stages] + [
+        code_chunk_sink(code), azure_sink(azure), read_doctags(doctags),
+        read_doctags(doctags_sink(_span_docs(spark)))]
+    for out in outs:
+        plan = _plan(out)
+        assert plan.count("MapInArrow") == 1, plan
+        assert "MapInPandas" not in plan
+        assert "Exchange" not in plan
+
+
 def test_map_chain_ends_at_cache_checkpoint_and_join(spark):
     """A persisted map output, or any new DataFrame built from one, is read
     as it is: the next map runs separately over it."""

@@ -4,7 +4,7 @@
 
 Single-process and Spark-free: rows come straight from
 `chunk_code_document` over the deterministic `synth_code_rows(16, 7)`
-corpus — certifying the distributed mapInPandas plumbing the same way the
+corpus — certifying the distributed Arrow-map plumbing the same way the
 multimodal fixtures do (tools/gen_multimodal_fixtures.py). The chunker's
 SEMANTICS are pinned independently by tests/test_code_chunker.py's
 hand-asserted expectations. Rerun after any semantic change:

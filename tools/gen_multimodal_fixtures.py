@@ -6,7 +6,7 @@ Everything here runs SINGLE-PROCESS and Spark-free:
 
 - the feature trio (image/audio/frame) re-derives each expected row
   directly from the pure decode helpers (`_parse_netpbm`, `_decode_wav`,
-  `_demux_y4m`, the stubs) — certifying the distributed mapInPandas
+  `_demux_y4m`, the stubs) — certifying the distributed Arrow-map
   plumbing the way `_normalized_path` does for the extraction pipeline;
 - the near-dup pairs are computed by BRUTE-FORCE all-pairs comparison,
   NOT the engine's pigeonhole/equi-join blocking — so the fixture also
