@@ -3,10 +3,9 @@ transforms/chunker/code_chunking/_language_code_chunkers.py, tree-sitter
 based, 1,664 LoC; standard_code_chunking_strategy.py routes by
 CodeLanguageLabel).
 
-Tree-sitter does not ship in this container (same class of gap as the HF
-tokenizer for the hybrid chunker), so the PYTHON chunker is rebuilt on the
-stdlib `ast` parser — a full parser, not a heuristic — reproducing the
-reference's chunk-composition rules (_language_code_chunkers.py:477-640):
+Tree-sitter is not a dependency of this engine (same class of gap as the HF
+tokenizer for the hybrid chunker); the reference's chunk-composition rules
+(_language_code_chunkers.py:477-640) run on parsers that need no grammar:
 
 - one chunk per function/method; its content prepends the imports the
   function actually uses (:558-576), the module variables it reads
@@ -21,36 +20,35 @@ reference's chunk-composition rules (_language_code_chunkers.py:477-640):
 - oversized chunks split under a token budget (the `_ChunkSizeProcessor`
   role) with the SAME BPE-ish counter the hybrid chunker budgets with
 
-JAVA gets the same composition treatment on a structural parser
-(comment/string masking + brace tree — no tree-sitter needed for the
-composition rules, _JavaFunctionChunker :1434-1664): per-method chunks
-carry package prefix + used imports (identifier-matched; wildcard imports
-always included) + the ancestor type contexts (signature, fields/
-constants, static initializers, constructor) + the method with its
-javadoc hoisted to metadata; methodless types chunk whole; unused
-imports and stray top-level code orphan into preamble chunks.
+Three row builders produce (part_name, chunk_type, start, end, sig_end,
+docstring, content) rows over one `_Source` per document (its lines and a
+bisect line index) and end in one `_finish` (gaps → preambles, sort):
 
-JAVASCRIPT / TYPESCRIPT get the composition rules on the same structural
-parser (_TypeScriptFunctionChunker :1194-1278): used imports (default /
-named incl. aliases / namespace / require destructuring), arrow-function
-and function-declaration chunks, class context with properties +
-constructor, doc-comment hoisting, side-effect-import and stray-statement
-preambles; template literals are masked wholesale so ${} braces can't
-skew the brace tree.
-
-C falls back to a documented brace-matching top-level function splitter
-(same output schema, no import/variable context).
+- PYTHON on the stdlib `ast` parser — a full parser, not a heuristic.
+- JAVA and JAVASCRIPT / TYPESCRIPT on one brace-tree composer
+  (`_chunk_rows_brace_tree`): comment/string masking + a brace tree, walked
+  with an explicit stack. A per-language `_BraceLang` holds only what
+  differs: the import scanner, the package prefix, the top-level
+  classifier, whether nested types are walked, and the constructor name
+  (_JavaFunctionChunker :1434-1664, _TypeScriptFunctionChunker
+  :1194-1278).
+- C (and any other label) falls back to a documented brace-matching
+  top-level function splitter (same output schema, no import/variable
+  context).
 
 Spark shape: one zero-shuffle Arrow map (`docmap.map_rows`) over (doc_id,
 language, code), the same map the serializer sinks run in; chunking is a
-per-document fold, so it partitions embarrassingly at 100 TB.
+per-document fold, so it partitions embarrassingly at 100 TB. A null `code`
+is an empty file: no chunks.
 """
 
 from __future__ import annotations
 
 import ast
 import re
-from typing import List, Tuple
+from bisect import bisect_right
+from itertools import accumulate
+from typing import Callable, List, NamedTuple, Optional, Tuple
 
 from docling_spark.docmap import map_rows
 from docling_spark.operators.hybrid_chunker import _DocCounter
@@ -64,9 +62,60 @@ CODE_CHUNK_DDL = (
 _COPYRIGHT_WORDS = ("copyright", "license", "licensed under", "all rights reserved")
 
 
-def _seg(lines: List[str], a: int, b: int) -> str:
-    """1-based inclusive line slice."""
-    return "\n".join(lines[a - 1 : b])
+# ---------------------------------------------------------------------------
+# shared by every row builder: the document's line index and the finish
+# ---------------------------------------------------------------------------
+
+
+class _Source:
+    """One document's text, its lines and its line index."""
+
+    __slots__ = ("code", "lines", "_starts")
+
+    def __init__(self, code: str):
+        self.code = code
+        self.lines = code.split("\n")
+        self._starts = list(accumulate((len(ln) + 1 for ln in self.lines[:-1]),
+                                       initial=0))
+
+    def line_of(self, pos: int) -> int:
+        """1-based line of character offset `pos`."""
+        return bisect_right(self._starts, pos)
+
+    def seg(self, a: int, b: int) -> str:
+        """1-based inclusive line slice."""
+        return "\n".join(self.lines[a - 1 : b])
+
+
+def _finish(src: _Source, rows: List[tuple],
+            used: List[Tuple[int, int]]) -> List[tuple]:
+    """Each run of non-blank lines outside every `used` range (1-based,
+    inclusive) becomes a preamble chunk (find_gaps :70-85); rows sort by
+    (start line, part name)."""
+    n = len(src.lines)
+    marks = [0] * (n + 2)
+    for a, b in used:
+        b = min(b, n)  # `ast` also ends lines at a bare '\r'
+        if a <= b:
+            marks[a] += 1
+            marks[b + 1] -= 1
+    depth = gap = 0
+    for i, ln in enumerate(src.lines, 1):
+        depth += marks[i]
+        if not depth and ln.strip():
+            gap = gap or i
+        elif gap:
+            rows.append(("", "preamble", gap, i - 1, gap, "", src.seg(gap, i - 1)))
+            gap = 0
+    if gap:
+        rows.append(("", "preamble", gap, n, gap, "", src.seg(gap, n)))
+    rows.sort(key=lambda r: (r[2], r[0]))
+    return rows
+
+
+# ---------------------------------------------------------------------------
+# Python: the stdlib `ast` parser
+# ---------------------------------------------------------------------------
 
 
 def _py_imports(tree: ast.Module) -> dict:
@@ -109,7 +158,7 @@ def _py_sig_end(node) -> int:
     return (node.body[0].lineno - 1) if node.body else node.end_lineno
 
 
-def _py_strip_docstring(node, lines: List[str]) -> str:
+def _py_strip_docstring(node, src: _Source) -> str:
     """Function/class text with its docstring statement removed (the
     reference strips the docstring from content and carries it in meta)."""
     start = node.lineno
@@ -120,36 +169,35 @@ def _py_strip_docstring(node, lines: List[str]) -> str:
             and isinstance(body[0].value, ast.Constant)
             and isinstance(body[0].value.value, str)):
         ds = body[0]
-        pre = _seg(lines, start, ds.lineno - 1)
-        post = _seg(lines, ds.end_lineno + 1, node.end_lineno)
+        pre = src.seg(start, ds.lineno - 1)
+        post = src.seg(ds.end_lineno + 1, node.end_lineno)
         if len(body) == 1:  # docstring-only body must stay syntactically valid
             indent = " " * (ds.col_offset)
             post = f"{indent}pass" + (("\n" + post) if post else "")
         return pre + ("\n" + post if post else "")
-    return _seg(lines, start, node.end_lineno)
+    return src.seg(start, node.end_lineno)
 
 
-def _py_class_context(cls: ast.ClassDef, lines: List[str]) -> Tuple[str, List[Tuple[int, int]]]:
+def _py_class_context(cls: ast.ClassDef, src: _Source) -> Tuple[str, List[Tuple[int, int]]]:
     """Class signature + class-level fields, no sibling methods and no
     class docstring (additional_context_no_docstring, :581-592)."""
     rngs = [(cls.lineno, cls.body[0].lineno - 1 if cls.body else cls.end_lineno)]
-    parts = [_seg(lines, *rngs[0])]
+    parts = [src.seg(*rngs[0])]
     for node in cls.body:
         if isinstance(node, (ast.Assign, ast.AnnAssign)):
             rngs.append((node.lineno, node.end_lineno))
-            parts.append(_seg(lines, node.lineno, node.end_lineno))
+            parts.append(src.seg(node.lineno, node.end_lineno))
     return "\n".join(parts), rngs
 
 
-def _chunk_rows_python(code: str) -> List[tuple]:
-    """(part_name, chunk_type, start, end, sig_end, docstring, content)."""
-    lines = code.split("\n")
+def _chunk_rows_python(src: _Source) -> List[tuple]:
+    lines = src.lines
     try:
-        tree = ast.parse(code)
+        tree = ast.parse(src.code)
     except (SyntaxError, ValueError, MemoryError, RecursionError):
         # unparseable payloads degrade to one whole-file preamble chunk,
         # never a job failure
-        return [("", "preamble", 1, len(lines), 1, "", code)]
+        return [("", "preamble", 1, len(lines), 1, "", src.code)]
 
     imports = _py_imports(tree)
     module_vars = _py_module_vars(tree)
@@ -172,16 +220,16 @@ def _chunk_rows_python(code: str) -> List[tuple]:
         part = fn.name
         if cls is not None:
             classes_with_methods.add(cls.name)
-            ctx, ctx_rngs = _py_class_context(cls, lines)
+            ctx, ctx_rngs = _py_class_context(cls, src)
             part = f"{cls.name}.{fn.name}"
         imp_lines = sorted({imports[n] for n in sorted(names) if n in imports})
         var_lines = sorted({module_vars[n] for n in sorted(names)
                             if n in module_vars and n not in imports})
-        pieces = [_seg(lines, a, b) for a, b in imp_lines]
-        pieces += [_seg(lines, a, b) for a, b in var_lines]
+        pieces = [src.seg(a, b) for a, b in imp_lines]
+        pieces += [src.seg(a, b) for a, b in var_lines]
         if ctx:
             pieces.append(ctx)
-        body_txt = _py_strip_docstring(fn, lines)
+        body_txt = _py_strip_docstring(fn, src)
         pieces.append(body_txt)
         start = fn.lineno
         if fn.decorator_list:
@@ -198,7 +246,7 @@ def _chunk_rows_python(code: str) -> List[tuple]:
             used.append((node.lineno, node.end_lineno))
             rows.append((node.name, "class", node.lineno, node.end_lineno,
                          _py_sig_end(node), ast.get_docstring(node) or "",
-                         _py_strip_docstring(node, lines)))
+                         _py_strip_docstring(node, src)))
         elif isinstance(node, ast.ClassDef):
             used.append((node.lineno, node.end_lineno))
 
@@ -207,28 +255,13 @@ def _chunk_rows_python(code: str) -> List[tuple]:
         s = ln.strip().lower()
         if s.startswith("#") and any(w in s for w in _COPYRIGHT_WORDS):
             used.append((i, i))
+    # module vars consumed by a function chunk are already in `used`
+    return _finish(src, rows, used)
 
-    # gaps → preamble chunks (find_gaps :70-85); module vars consumed by a
-    # function chunk are already in `used`
-    covered = set()
-    for a, b in used:
-        covered.update(range(a, b + 1))
-    gap: List[int] = []
-    gaps: List[Tuple[int, int]] = []
-    for i in range(1, len(lines) + 1):
-        if i not in covered and lines[i - 1].strip():
-            gap.append(i)
-        elif gap:
-            gaps.append((gap[0], gap[-1]))
-            gap = []
-    if gap:
-        gaps.append((gap[0], gap[-1]))
-    for a, b in gaps:
-        rows.append(("", "preamble", a, b, a, "", _seg(lines, a, b)))
 
-    rows.sort(key=lambda r: (r[2], r[0]))
-    return rows
-
+# ---------------------------------------------------------------------------
+# C and any other label: top-level `name(args) {...}` blocks
+# ---------------------------------------------------------------------------
 
 _BRACE_FN_RE = re.compile(
     r"^[ \t]*(?:[\w$<>\[\],&*:~ ]+?[ \t]+)?([\w$~]+)[ \t]*\([^;{}]*\)[ \t\w,:<>\[\]]*\{",
@@ -243,12 +276,12 @@ _BRACE_KEYWORDS = frozenset({
 })
 
 
-def _chunk_rows_braces(code: str) -> List[tuple]:
-    """C / Java / JS / TS fallback: top-level `name(args) {...}` blocks by
-    brace matching; everything between functions is preamble."""
-    lines = code.split("\n")
+def _chunk_rows_braces(src: _Source) -> List[tuple]:
+    """Top-level `name(args) {...}` blocks by brace matching; everything
+    between functions is preamble."""
+    code = src.code
     rows: List[tuple] = []
-    used: set = set()
+    used: List[Tuple[int, int]] = []
     for m in _BRACE_FN_RE.finditer(code):
         if m.group(1) in _BRACE_KEYWORDS:
             continue  # `if (cond) {` is not a function named "if"
@@ -263,38 +296,26 @@ def _chunk_rows_braces(code: str) -> List[tuple]:
                     break
         if end is None:
             continue
-        start_line = code.count("\n", 0, m.start()) + 1
-        end_line = code.count("\n", 0, end) + 1
-        sig_end = code.count("\n", 0, m.end() - 1) + 1
-        if any(i in used for i in range(start_line, end_line + 1)):
+        start_line, end_line = src.line_of(m.start()), src.line_of(end)
+        if any(a <= end_line and start_line <= b for a, b in used):
             continue  # nested block inside an already-claimed function
-        used.update(range(start_line, end_line + 1))
-        rows.append((m.group(1), "function", start_line, end_line, sig_end,
-                     "", _seg(lines, start_line, end_line)))
-    gap: List[int] = []
-    gaps: List[Tuple[int, int]] = []
-    for i in range(1, len(lines) + 1):
-        if i not in used and lines[i - 1].strip():
-            gap.append(i)
-        elif gap:
-            gaps.append((gap[0], gap[-1]))
-            gap = []
-    if gap:
-        gaps.append((gap[0], gap[-1]))
-    for a, b in gaps:
-        rows.append(("", "preamble", a, b, a, "", _seg(lines, a, b)))
-    rows.sort(key=lambda r: (r[2], r[0]))
-    return rows
+        used.append((start_line, end_line))
+        rows.append((m.group(1), "function", start_line, end_line,
+                     src.line_of(m.end() - 1), "", src.seg(start_line, end_line)))
+    return _finish(src, rows, used)
 
 
 # ---------------------------------------------------------------------------
-# Java: composition-rule chunking on a structural (mask + brace-tree) parser
-# — the reference's _JavaFunctionChunker rules (:1434-1664) without
-# tree-sitter (container-blocked): per-method chunks carry
-# package prefix + used imports + ancestor class context (signature,
-# fields/constants, static initializers, constructor) + the method body
-# with its doc comment HOISTED to metadata; methodless types chunk whole;
-# unused imports and stray top-level code become preamble chunks.
+# Java and JavaScript / TypeScript: one composer on a structural (mask +
+# brace-tree) parser. Per-function chunks carry the package prefix (Java),
+# the imports they use, the contexts of their enclosing types (signature,
+# fields/constants/properties, static initializers, constructor) and the
+# declaration with its doc comment HOISTED to metadata; methodless types
+# chunk whole; unused imports and stray top-level code become preamble
+# chunks. JS/TS has no module variables (as in the reference) and no
+# package. Template literals are masked wholesale so ${} braces can't skew
+# the tree; bare JS regex literals containing braces are the documented
+# residual gap of a non-tree-sitter lexer.
 # ---------------------------------------------------------------------------
 
 _JAVA_TYPE_RE = re.compile(r"\b(class|interface|enum|record)\s+([A-Za-z_$][\w$]*)")
@@ -302,6 +323,7 @@ _JAVA_NAME_PAREN_RE = re.compile(r"([A-Za-z_$][\w$]*)\s*\(")
 _JAVA_IMPORT_RE = re.compile(r"^[ \t]*import\s+(static\s+)?([\w.]+(?:\.\*)?)\s*;",
                              re.M)
 _JAVA_PACKAGE_RE = re.compile(r"^[ \t]*package\s+[\w.]+\s*;", re.M)
+_TYPE_KINDS = frozenset({"class", "interface", "enum", "record"})
 
 
 def _java_mask(code: str) -> Tuple[str, List[Tuple[int, int]]]:
@@ -423,251 +445,20 @@ def _javawords(s: str) -> List[str]:
     return re.findall(r"[A-Za-z_$][\w$]*", s)
 
 
-def _java_doc_comment(code: str, comments: List[Tuple[int, int]],
-                      hdr_start: int, decl_start: int) -> Tuple[str, "Tuple[int, int] | None"]:
-    """The comment that sits in the declaration's header span, closest to
-    the declaration — the reference's prev-named-sibling docs node."""
-    best = None
-    for a, b in comments:
-        if a >= hdr_start and b <= decl_start:
-            best = (a, b)
-    if best is None:
-        return "", None
-    return code[best[0]:best[1]].strip(), best
-
-
-def _java_decl_start(code: str, masked: str, hdr_start: int, open_: int,
-                     doc_span: "Tuple[int, int] | None") -> int:
-    """First code char of the declaration: after the doc comment (which is
-    hoisted), skipping whitespace; annotations stay part of the decl."""
-    lo = doc_span[1] if doc_span else hdr_start
-    seg = masked[lo:open_]
-    off = len(seg) - len(seg.lstrip())
-    return lo + off
-
-
-def _java_fields(code: str, masked: str, body_lo: int, body_hi: int,
-                 members: "List[_JBlock]",
-                 passthrough: "List[_JBlock]" = ()) -> List[str]:
-    """Field/constant statements of a type body: the ';'-terminated
-    segments not claimed by a member block (methods, nested types, static
-    inits). `passthrough` blocks (array initializers, arrow-function
-    property bodies) stay INSIDE their statement: the scan jumps over
-    their braces without splitting on the ';' they contain. Abstract/
-    interface method signatures end with ';' and are picked up here too —
-    they are context, exactly like constants."""
-    claimed = [(b.hdr_start, b.close + 1) for b in members]
-    passspans = [(b.open, b.close + 1) for b in passthrough]
-    fields: List[str] = []
-    cursor = body_lo
-    i = body_lo
-    while i < body_hi:
-        inside = next((c for c in claimed if c[0] <= i < c[1]), None)
-        if inside:
-            i = inside[1]
-            cursor = i
-            continue
-        inpass = next((c for c in passspans if c[0] <= i < c[1]), None)
-        if inpass:
-            i = inpass[1]  # keep cursor: the block is part of the statement
-            continue
-        if masked[i] == ";":
-            seg = code[cursor:i + 1].strip()
-            if seg:
-                fields.append(seg)
-            cursor = i + 1
-        i += 1
-    return fields
-
-
-def _java_type_context(code: str, masked: str, blk: "_JBlock", kind: str,
-                       comments: List[Tuple[int, int]],
-                       ctor_name: "str | None" = None) -> str:
-    """additional_context_no_docstring for one type: signature + " {",
-    fields/constants, static initializers, constructor, "}" —
-    _build_java_class_like_context (:1555-1630). The type's own doc
-    comment stays OUT (this is the no-docstring variant)."""
-    _, doc_span = _java_doc_comment(code, comments, blk.hdr_start, blk.open)
-    decl_start = _java_decl_start(code, masked, blk.hdr_start, blk.open, doc_span)
-    sig = code[decl_start:blk.open].strip()
-    members = blk.children
-    inner_parts: List[str] = []
-    # expr blocks (array initializers, arrow-function properties) are PART
-    # of a field statement — only real members claim spans away from the
-    # field scan; expr blocks pass through un-split
-    claiming, passthrough = [], []
-    for m in members:
-        mk = _java_classify(masked[m.hdr_start:m.open].strip())[0]
-        (passthrough if mk == "expr" else claiming).append(m)
-    inner_parts.extend(_java_fields(code, masked, blk.open + 1, blk.close,
-                                    claiming, passthrough))
-    for m in members:
-        mk, mname = _java_classify(masked[m.hdr_start:m.open].strip())
-        if mk == "static_init":
-            inner_parts.append(code[_java_decl_start(code, masked, m.hdr_start, m.open, None):m.close + 1].strip())
-    # constructor: a method whose name matches the type name (Java) or the
-    # literal `constructor` keyword (JS/TS classes — ctor_name override)
-    tm = _JAVA_TYPE_RE.search(sig)
-    tname = ctor_name if ctor_name is not None else (tm.group(2) if tm else "")
-    for m in members:
-        mk, mname = _java_classify(masked[m.hdr_start:m.open].strip())
-        if mk == "method" and mname == tname:
-            _, dspan = _java_doc_comment(code, comments, m.hdr_start, m.open)
-            inner_parts.append(code[_java_decl_start(code, masked, m.hdr_start, m.open, dspan):m.close + 1].strip())
-    inner = "\n".join(p for p in inner_parts if p.strip())
-    parts = [sig + " {"]
-    if inner:
-        parts.append(inner)
-    return "\n\n".join(parts).rstrip() + "\n}"
-
-
-def _chunk_rows_java(code: str) -> List[tuple]:
-    """(part_name, chunk_type, start, end, sig_end, docstring, content) —
-    the reference's Java composition rules on the structural parser."""
-    masked, comments = _java_mask(code)
-    lines = code.split("\n")
-
-    def line_of(pos: int) -> int:
-        return code.count("\n", 0, pos) + 1
-
-    pkg = _JAVA_PACKAGE_RE.search(masked)
-    prefix = (code[pkg.start():pkg.end()].strip() + "\n") if pkg else ""
-    imports: dict = {}  # simple name (or full text for wildcard) → (start, end)
+def _java_imports(code: str, masked: str) -> Tuple[dict, set]:
+    """(simple name → import statement span, wildcard import texts): a
+    wildcard import joins every chunk's import block but is never matched
+    as used, so its line is never claimed."""
+    keyed: dict = {}
+    wild: set = set()
     for m in _JAVA_IMPORT_RE.finditer(masked):
-        path = m.group(2)
-        simple = path.rsplit(".", 1)[-1]
-        key = code[m.start():m.end()].strip() if simple == "*" else simple
-        imports[key] = (m.start(), m.end())
+        simple = m.group(2).rsplit(".", 1)[-1]
+        if simple == "*":
+            wild.add(code[m.start():m.end()].strip())
+        else:
+            keyed[simple] = (m.start(), m.end())
+    return keyed, wild
 
-    top = _java_blocks(masked)
-    rows: List[tuple] = []
-    used: List[Tuple[int, int]] = []
-    if pkg:
-        used.append((line_of(pkg.start()), line_of(pkg.end() - 1)))
-    used_import_keys: set = set()
-
-    def imports_block(texts_used: set) -> str:
-        wild = {code[a:b].strip() for k, (a, b) in imports.items()
-                if k.startswith("import ")}
-        alltexts = sorted(wild | texts_used)
-        return ("\n".join(alltexts) + "\n") if alltexts else ""
-
-    def used_imports_for(text: str, ctx: str) -> set:
-        out = set()
-        words = set(_javawords(text))
-        for k in imports:
-            if k.startswith("import "):
-                continue
-            if k in words or (ctx and k in ctx):
-                out.add(k)
-        return out
-
-    def emit_function(blk: "_JBlock", ancestors: List[Tuple[str, "_JBlock"]],
-                      name: str) -> None:
-        hdr_masked = masked[blk.hdr_start:blk.open]
-        doc, doc_span = _java_doc_comment(code, comments, blk.hdr_start, blk.open)
-        decl_start = _java_decl_start(code, masked, blk.hdr_start, blk.open, doc_span)
-        body = code[decl_start:blk.close + 1]
-        ctxs = [_java_type_context(code, masked, ab, ak, comments)
-                for ak, ab in ancestors]
-        ctx = "\n".join(ctxs)
-        uimp = used_imports_for(masked[decl_start:blk.close + 1], ctx)
-        used_import_keys.update(uimp)
-        imp_txts = {code[imports[k][0]:imports[k][1]].strip() for k in uimp}
-        content = "".join([
-            prefix,
-            imports_block(imp_txts),
-            (ctx + "\n") if ctx else "",
-            body,
-        ])
-        part = ".".join([_JAVA_TYPE_RE.search(
-            masked[ab.hdr_start:ab.open]).group(2) for _, ab in ancestors] + [name])
-        rows.append((part, "function", line_of(decl_start), line_of(blk.close),
-                     line_of(blk.open), doc, content))
-        lo = doc_span[0] if doc_span else decl_start
-        used.append((line_of(lo), line_of(blk.close)))
-
-    def walk_type(blk: "_JBlock", kind: str, name: str,
-                  ancestors: List[Tuple[str, "_JBlock"]]) -> bool:
-        """Returns True if this type (or a nested one) produced methods —
-        then the whole type span is claimed (reference marks the parent
-        class range used when context is built, :586-592)."""
-        chain = ancestors + [(kind, blk)]
-        had_methods = False
-        for m in blk.children:
-            mk, mname = _java_classify(masked[m.hdr_start:m.open].strip())
-            if mk in ("class", "interface", "enum", "record"):
-                had_methods |= walk_type(m, mk, mname, chain)
-            elif mk == "method":
-                emit_function(m, chain, mname)
-                had_methods = True
-        if had_methods:
-            # claim from the type's javadoc (hoisted into member contexts)
-            # or its first declaration char — NOT from hdr_start, which sits
-            # right after the previous ';' and would swallow that line
-            _, dspan = _java_doc_comment(code, comments, blk.hdr_start, blk.open)
-            lo = dspan[0] if dspan else _java_decl_start(
-                code, masked, blk.hdr_start, blk.open, dspan)
-            used.append((line_of(lo), line_of(blk.close)))
-        return had_methods
-
-    for blk in top:
-        k, name = _java_classify(masked[blk.hdr_start:blk.open].strip())
-        if k in ("class", "interface", "enum", "record"):
-            if walk_type(blk, k, name, []):
-                continue
-            # methodless type chunks whole, doc comment hoisted (:514-523)
-            doc, doc_span = _java_doc_comment(code, comments, blk.hdr_start, blk.open)
-            decl_start = _java_decl_start(code, masked, blk.hdr_start, blk.open, doc_span)
-            body = code[decl_start:blk.close + 1]
-            uimp = used_imports_for(masked[decl_start:blk.close + 1], "")
-            used_import_keys.update(uimp)
-            imp_txts = {code[imports[kk][0]:imports[kk][1]].strip() for kk in uimp}
-            rows.append((name, "class", line_of(decl_start), line_of(blk.close),
-                         line_of(blk.open), doc,
-                         prefix + imports_block(imp_txts) + body))
-            lo = doc_span[0] if doc_span else decl_start
-            used.append((line_of(lo), line_of(blk.close)))
-
-    for k in used_import_keys:
-        a, b = imports[k]
-        used.append((line_of(a), line_of(b - 1)))
-    # copyright comments dropped (:533-540)
-    for a, b in comments:
-        if any(w in code[a:b].lower() for w in _COPYRIGHT_WORDS):
-            used.append((line_of(a), line_of(b - 1)))
-
-    covered = set()
-    for a, b in used:
-        covered.update(range(a, b + 1))
-    gap: List[int] = []
-    gaps: List[Tuple[int, int]] = []
-    for i in range(1, len(lines) + 1):
-        if i not in covered and lines[i - 1].strip():
-            gap.append(i)
-        elif gap:
-            gaps.append((gap[0], gap[-1]))
-            gap = []
-    if gap:
-        gaps.append((gap[0], gap[-1]))
-    for a, b in gaps:
-        rows.append(("", "preamble", a, b, a, "", _seg(lines, a, b)))
-    rows.sort(key=lambda r: (r[2], r[0]))
-    return rows
-
-
-# ---------------------------------------------------------------------------
-# JavaScript / TypeScript: the same composition rules on the same structural
-# parser (_TypeScriptFunctionChunker/_JavaScriptFunctionChunker,
-# :1194-1278): per-function chunks carry the imports they use; class methods
-# carry the class context (signature + fields/properties + constructor);
-# doc comments hoist; methodless classes chunk whole; unclaimed top-level
-# statements and side-effect imports orphan into preambles. No module
-# variables (the reference: TS/JS have none) and no package prefix.
-# Template literals are masked wholesale so ${} braces can't skew the tree;
-# bare regex literals containing braces are the documented residual gap of
-# a non-tree-sitter lexer.
-# ---------------------------------------------------------------------------
 
 _JS_IMPORT_RE = re.compile(
     r"^[ \t]*import\s+(?:([^'\";]+?)\s+from\s+)?['\"][^'\"]*['\"]\s*;?", re.M)
@@ -704,6 +495,15 @@ def _js_import_idents(clause: str) -> List[str]:
     return out
 
 
+def _js_imports(code: str, masked: str) -> Tuple[dict, set]:
+    """(bound identifier → import/require statement span, no wildcards)."""
+    keyed: dict = {}
+    for m in [*_JS_IMPORT_RE.finditer(masked), *_JS_REQUIRE_RE.finditer(masked)]:
+        for ident in _js_import_idents(m.group(1) or ""):
+            keyed[ident] = (m.start(), m.end())
+    return keyed, set()
+
+
 def _js_classify(hdr: str) -> Tuple[str, str]:
     """('class'|'function'|'other', name) for a top-level JS brace block."""
     h = hdr.strip()
@@ -719,107 +519,192 @@ def _js_classify(hdr: str) -> Tuple[str, str]:
     return "other", ""
 
 
-def _chunk_rows_js(code: str) -> List[tuple]:
-    """(part_name, chunk_type, start, end, sig_end, docstring, content) —
-    the reference's TS/JS composition rules on the structural parser."""
-    masked, comments = _java_mask(code)
-    lines = code.split("\n")
+class _BraceLang(NamedTuple):
+    """What differs between the brace-tree languages."""
+    imports: Callable[[str, str], Tuple[dict, set]]  # (code, masked) → (keyed, always-included texts)
+    package: Optional[re.Pattern]  # statement prefixed to every chunk
+    classify: Callable[[str], Tuple[str, str]]  # top-level header → (kind, name)
+    nested: bool  # types nested in types are walked
+    ctor: Optional[str]  # constructor name; None → the type's own name
 
-    def line_of(pos: int) -> int:
-        return code.count("\n", 0, pos) + 1
 
-    imports: dict = {}  # identifier → (start, end) of the import statement
-    for m in list(_JS_IMPORT_RE.finditer(masked)) + list(_JS_REQUIRE_RE.finditer(masked)):
-        clause = m.group(1) or ""
-        for ident in _js_import_idents(clause):
-            imports[ident] = (m.start(), m.end())
+_JAVA = _BraceLang(_java_imports, _JAVA_PACKAGE_RE, _java_classify, True, None)
+_JS = _BraceLang(_js_imports, None, _js_classify, False, "constructor")
 
-    top = _java_blocks(masked)
+
+class _BraceDoc:
+    """A masked brace-language document: where each block's declaration
+    and doc comment sit."""
+
+    def __init__(self, code: str):
+        self.code = code
+        self.masked, self.comments = _java_mask(code)
+        # comments never overlap, so both ends ascend
+        self._starts = [a for a, _ in self.comments]
+        self._ends = [b for _, b in self.comments]
+
+    def header(self, blk: _JBlock) -> str:
+        return self.masked[blk.hdr_start:blk.open].strip()
+
+    def doc_span(self, blk: _JBlock) -> "Optional[Tuple[int, int]]":
+        """The comment in the block's header span closest to its '{' — the
+        reference's prev-named-sibling docs node."""
+        i = bisect_right(self._ends, blk.open) - 1
+        if i >= 0 and self._starts[i] >= blk.hdr_start:
+            return self.comments[i]
+        return None
+
+    def decl_start(self, blk: _JBlock, doc_span: "Optional[Tuple[int, int]]") -> int:
+        """First code char of the declaration: after the doc comment (which
+        is hoisted), skipping whitespace; annotations stay part of it."""
+        lo = doc_span[1] if doc_span else blk.hdr_start
+        seg = self.masked[lo:blk.open]
+        return lo + len(seg) - len(seg.lstrip())
+
+
+def _java_fields(code: str, masked: str, lo: int, hi: int,
+                 spans: List[Tuple[int, int, bool]]) -> List[str]:
+    """Field/constant statements of a type body [lo, hi): the ';'-terminated
+    segments outside the member `spans` — (start, end, claims), in order.
+    A claiming span (method, nested type, static init) ends the statement
+    before it; a passthrough span (array initializer, arrow-function
+    property body) stays INSIDE its statement, its ';' splitting nothing.
+    Abstract/interface method signatures end with ';' and are picked up
+    here too — they are context, exactly like constants."""
+    fields: List[str] = []
+    cursor = i = lo
+    for start, end, claims in [*spans, (hi, hi, False)]:
+        j = masked.find(";", i, start)
+        while j != -1:
+            seg = code[cursor:j + 1].strip()
+            if seg:
+                fields.append(seg)
+            cursor = j + 1
+            j = masked.find(";", cursor, start)
+        i = end
+        if claims:
+            cursor = end
+    return fields
+
+
+def _type_context(bd: _BraceDoc, blk: _JBlock, members: List[tuple],
+                  ctor: Optional[str]) -> str:
+    """additional_context_no_docstring for one type: signature + " {",
+    fields/constants, static initializers, constructor, "}" —
+    _build_java_class_like_context (:1555-1630). The type's own doc
+    comment stays OUT (this is the no-docstring variant). `members` are
+    the type's (block, kind, name) children."""
+    code = bd.code
+    sig = code[bd.decl_start(blk, bd.doc_span(blk)):blk.open].strip()
+    # expr blocks (array initializers, arrow-function properties) are PART
+    # of a field statement; every other member claims its span
+    inner = _java_fields(code, bd.masked, blk.open + 1, blk.close, [
+        (m.open, m.close + 1, False) if kind == "expr" else (m.hdr_start, m.close + 1, True)
+        for m, kind, _ in members])
+    inner += [code[bd.decl_start(m, None):m.close + 1].strip()
+              for m, kind, _ in members if kind == "static_init"]
+    if ctor is None:
+        tm = _JAVA_TYPE_RE.search(sig)
+        ctor = tm.group(2) if tm else ""
+    inner += [code[bd.decl_start(m, bd.doc_span(m)):m.close + 1].strip()
+              for m, kind, name in members if kind == "method" and name == ctor]
+    body = "\n".join(p for p in inner if p.strip())
+    return (sig + " {" + ("\n\n" + body if body else "")).rstrip() + "\n}"
+
+
+class _TypeFrame:
+    """One type on the walk's stack: its classified members, the next one
+    to visit, whether it holds methods, its context and its chain's
+    (part-name prefix, joined contexts), each built at most once."""
+
+    __slots__ = ("blk", "name", "members", "pos", "had", "ctx", "chain")
+
+    def __init__(self, bd: _BraceDoc, blk: _JBlock, name: str):
+        self.blk, self.name, self.pos, self.had = blk, name, 0, False
+        self.members = [(m, *_java_classify(bd.header(m))) for m in blk.children]
+        self.ctx = self.chain = None
+
+
+def _chunk_rows_brace_tree(src: _Source, lang: _BraceLang) -> List[tuple]:
+    code, line_of = src.code, src.line_of
+    bd = _BraceDoc(code)
+    masked = bd.masked
+    imports, always = lang.imports(code, masked)
     rows: List[tuple] = []
     used: List[Tuple[int, int]] = []
-    used_import_keys: set = set()
+    used_keys: set = set()
+    prefix = ""
+    pkg = lang.package.search(masked) if lang.package else None
+    if pkg:
+        prefix = code[pkg.start():pkg.end()].strip() + "\n"
+        used.append((line_of(pkg.start()), line_of(pkg.end() - 1)))
 
-    def imports_block(keys: set) -> str:
-        txts = sorted({code[imports[k][0]:imports[k][1]].strip() for k in keys})
-        return ("\n".join(txts) + "\n") if txts else ""
+    def claim(blk: _JBlock) -> Tuple["Optional[Tuple[int, int]]", int]:
+        """Claims the block from its doc comment (hoisted into its chunk or
+        its members' contexts) or first declaration char — NOT from
+        hdr_start, which sits right after the previous ';' and would
+        swallow that line."""
+        span = bd.doc_span(blk)
+        decl = bd.decl_start(blk, span)
+        used.append((line_of(span[0] if span else decl), line_of(blk.close)))
+        return span, decl
 
-    def used_imports_for(text: str, ctx: str) -> set:
-        words = set(_javawords(text))
-        return {k for k in imports if k in words or (ctx and k in ctx)}
+    def chunk(blk: _JBlock, part: str, ctype: str, ctx: str = "") -> None:
+        span, decl = claim(blk)
+        words = set(_javawords(masked[decl:blk.close + 1]))
+        keys = {k for k in imports if k in words or (ctx and k in ctx)}
+        used_keys.update(keys)
+        imps = sorted(always | {code[imports[k][0]:imports[k][1]].strip() for k in keys})
+        rows.append((part, ctype, line_of(decl), line_of(blk.close), line_of(blk.open),
+                     code[span[0]:span[1]].strip() if span else "",
+                     "".join([prefix, ("\n".join(imps) + "\n") if imps else "",
+                              (ctx + "\n") if ctx else "", code[decl:blk.close + 1]])))
 
-    def emit_function(blk: "_JBlock", cls: "tuple | None", name: str) -> None:
-        doc, doc_span = _java_doc_comment(code, comments, blk.hdr_start, blk.open)
-        decl_start = _java_decl_start(code, masked, blk.hdr_start, blk.open, doc_span)
-        body = code[decl_start:blk.close + 1]
-        ctx = ""
-        part = name
-        if cls is not None:
-            cname, cblk = cls
-            ctx = _java_type_context(code, masked, cblk, "class", comments,
-                                     ctor_name="constructor")
-            part = f"{cname}.{name}"
-        uimp = used_imports_for(masked[decl_start:blk.close + 1], ctx)
-        used_import_keys.update(uimp)
-        content = "".join([
-            imports_block(uimp), (ctx + "\n") if ctx else "", body])
-        rows.append((part, "function", line_of(decl_start), line_of(blk.close),
-                     line_of(blk.open), doc, content))
-        lo = doc_span[0] if doc_span else decl_start
-        used.append((line_of(lo), line_of(blk.close)))
+    def walk(blk: _JBlock, name: str) -> bool:
+        """Chunks every method of the type and of the types nested in it;
+        True if there was one — then the whole type span is claimed (the
+        reference marks the parent class range used when context is
+        built, :586-592)."""
+        stack = [_TypeFrame(bd, blk, name)]
+        while True:
+            f = stack[-1]
+            if f.pos < len(f.members):
+                m, kind, mname = f.members[f.pos]
+                f.pos += 1
+                if kind == "method":
+                    if f.chain is None:
+                        for g in stack:
+                            if g.ctx is None:
+                                g.ctx = _type_context(bd, g.blk, g.members, lang.ctor)
+                        f.chain = (".".join(g.name for g in stack),
+                                   "\n".join(g.ctx for g in stack))
+                    chunk(m, f.chain[0] + "." + mname, "function", f.chain[1])
+                    f.had = True
+                elif kind in _TYPE_KINDS and lang.nested:
+                    stack.append(_TypeFrame(bd, m, mname))
+                continue
+            stack.pop()
+            if f.had:
+                claim(f.blk)
+            if not stack:
+                return f.had
+            stack[-1].had |= f.had
 
-    for blk in top:
-        hdr = masked[blk.hdr_start:blk.open].strip()
-        kind, name = _js_classify(hdr)
-        if kind == "class":
-            methods = [
-                (m, mn) for m in blk.children
-                for mk, mn in [_java_classify(masked[m.hdr_start:m.open].strip())]
-                if mk == "method"
-            ]
-            if methods:
-                for m, mname in methods:
-                    emit_function(m, (name, blk), mname)
-                _, dspan = _java_doc_comment(code, comments, blk.hdr_start, blk.open)
-                lo = dspan[0] if dspan else _java_decl_start(
-                    code, masked, blk.hdr_start, blk.open, dspan)
-                used.append((line_of(lo), line_of(blk.close)))
-            else:  # methodless class chunks whole
-                doc, dspan = _java_doc_comment(code, comments, blk.hdr_start, blk.open)
-                decl_start = _java_decl_start(code, masked, blk.hdr_start, blk.open, dspan)
-                body = code[decl_start:blk.close + 1]
-                uimp = used_imports_for(masked[decl_start:blk.close + 1], "")
-                used_import_keys.update(uimp)
-                rows.append((name, "class", line_of(decl_start), line_of(blk.close),
-                             line_of(blk.open), doc, imports_block(uimp) + body))
-                lo = dspan[0] if dspan else decl_start
-                used.append((line_of(lo), line_of(blk.close)))
+    for blk in _java_blocks(masked):
+        kind, name = lang.classify(bd.header(blk))
+        if kind in _TYPE_KINDS:
+            if not walk(blk, name):
+                chunk(blk, name, "class")  # methodless type chunks whole (:514-523)
         elif kind == "function":
-            emit_function(blk, None, name)
+            chunk(blk, name, "function")
 
-    for k in used_import_keys:
+    for k in used_keys:
         a, b = imports[k]
         used.append((line_of(a), line_of(b - 1)))
-    for a, b in comments:
+    for a, b in bd.comments:  # copyright comments dropped (:533-540)
         if any(w in code[a:b].lower() for w in _COPYRIGHT_WORDS):
             used.append((line_of(a), line_of(b - 1)))
-
-    covered = set()
-    for a, b in used:
-        covered.update(range(a, b + 1))
-    gap: List[int] = []
-    gaps: List[Tuple[int, int]] = []
-    for i in range(1, len(lines) + 1):
-        if i not in covered and lines[i - 1].strip():
-            gap.append(i)
-        elif gap:
-            gaps.append((gap[0], gap[-1]))
-            gap = []
-    if gap:
-        gaps.append((gap[0], gap[-1]))
-    for a, b in gaps:
-        rows.append(("", "preamble", a, b, a, "", _seg(lines, a, b)))
-    rows.sort(key=lambda r: (r[2], r[0]))
-    return rows
+    return _finish(src, rows, used)
 
 
 def chunk_code_document(doc_id: str, language: str, code: str,
@@ -833,14 +718,15 @@ def chunk_code_document(doc_id: str, language: str, code: str,
     A split piece's count is the sum of its line counts; only the HF
     counter, which is not additive across the newline, recounts the piece."""
     lang = (language or "").lower()
+    src = _Source(code or "")  # a null file is an empty one: no chunks
     if lang == "python":
-        rows = _chunk_rows_python(code)
+        rows = _chunk_rows_python(src)
     elif lang == "java":
-        rows = _chunk_rows_java(code)
+        rows = _chunk_rows_brace_tree(src, _JAVA)
     elif lang in ("javascript", "js", "typescript", "ts"):
-        rows = _chunk_rows_js(code)
+        rows = _chunk_rows_brace_tree(src, _JS)
     else:
-        rows = _chunk_rows_braces(code)
+        rows = _chunk_rows_braces(src)
     counter = _DocCounter()
     count = counter.count
     out: List[tuple] = []

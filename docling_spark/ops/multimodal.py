@@ -93,17 +93,13 @@ def _encode_netpbm(arr: np.ndarray) -> bytes:
 
 
 def _luma(arr: np.ndarray) -> float:
-    """Mean luma in [0,1]: ITU-R 601 weights for RGB, plain mean for gray."""
-    if arr.shape[2] == 3:
-        y = (0.299 * arr[:, :, 0] + 0.587 * arr[:, :, 1] + 0.114 * arr[:, :, 2])
-    else:
-        y = arr[:, :, 0].astype(np.float64)
-    return round(float(y.mean()) / 255.0, 6)
+    """Mean luma in [0,1] (`_gray_f64`'s weights)."""
+    return round(float(_gray_f64(arr).mean()) / 255.0, 6)
 
 
-def _decode_wav(payload: bytes) -> Optional[Tuple[float, int, float]]:
-    """RIFF/WAV PCM → (duration_s, sample_rate, rms in [0,1]); None if not
-    WAV. Pure stdlib (`wave`) + numpy."""
+def _decode_wav(payload: bytes) -> Optional[Tuple[np.ndarray, int, int]]:
+    """RIFF/WAV PCM → (float64 samples in [-1,1], sample_rate, n_frames);
+    None if not decodable. Pure stdlib (`wave`) + numpy."""
     if not payload.startswith(b"RIFF"):
         return None
     try:
@@ -120,15 +116,20 @@ def _decode_wav(payload: bytes) -> Optional[Tuple[float, int, float]]:
         samples = np.frombuffer(frames, dtype=np.int16).astype(np.float64) / 32768.0
     else:
         samples = (np.frombuffer(frames, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    dur = round(n / sr, 6)
+    return samples, sr, n
+
+
+def _wav_features(wav: Tuple[np.ndarray, int, int]) -> Tuple[float, int, float]:
+    """`_decode_wav`'s output → (duration_s, sample_rate, rms in [0,1])."""
+    samples, sr, n = wav
     rms = round(float(np.sqrt((samples ** 2).mean())) if len(samples) else 0.0, 6)
-    return dur, sr, rms
+    return round(n / sr, 6), sr, rms
 
 
-def _demux_y4m(payload: bytes) -> Optional[List[bytes]]:
-    """YUV4MPEG2 → list of raw frame byte blocks; None if not y4m. Header
-    line 'YUV4MPEG2 W<w> H<h> ...', then per frame 'FRAME...\\n' + w*h*3/2
-    bytes (4:2:0)."""
+def _demux_y4m(payload: bytes) -> Optional[Tuple[int, int, List[bytes]]]:
+    """YUV4MPEG2 → (width, height, raw frame byte blocks); None if not y4m.
+    Header line 'YUV4MPEG2 W<w> H<h> ...', then per frame 'FRAME...\\n' +
+    w*h*3/2 bytes (4:2:0)."""
     if not payload.startswith(b"YUV4MPEG2"):
         return None
     nl = payload.find(b"\n")
@@ -156,7 +157,7 @@ def _demux_y4m(payload: bytes) -> Optional[List[bytes]]:
             return None
         frames.append(payload[start:start + frame_size])
         pos = start + frame_size
-    return frames
+    return w, h, frames
 
 
 def _decode_image_stub(payload: bytes):
@@ -219,8 +220,9 @@ def frame_sample(df: DataFrame, every_n: int = 10, id_col: str = "media_id",
         b = payload or b""
         real = _demux_y4m(b)
         if real is not None:  # REAL demux (YUV4MPEG2)
-            return [(str(mid), fno, hashlib.sha256(real[fno]).hexdigest()[:16])
-                    for fno in range(0, len(real), every_n)]
+            frames = real[2]
+            return [(str(mid), fno, hashlib.sha256(frames[fno]).hexdigest()[:16])
+                    for fno in range(0, len(frames), every_n)]
         n_frames = 1 + (len(b) % 97)  # stub: a demuxer would count real frames
         return [(str(mid), fno, hashlib.sha256(b + fno.to_bytes(4, "big")).hexdigest()[:16])
                 for fno in range(0, n_frames, every_n)]
@@ -252,7 +254,7 @@ def audio_features(df: DataFrame, id_col: str = "media_id",
         b = payload or b""
         wav = _decode_wav(b)
         if wav is not None:  # REAL decode (RIFF/WAV PCM)
-            dur, sr, rms = wav
+            dur, sr, rms = _wav_features(wav)
             ok = True
         else:
             try:
@@ -518,49 +520,15 @@ def audio_fingerprints(df: DataFrame, frame: int = 1024, hop: int = 512,
 
     def row(mid, payload):
         b = payload or b""
-        decoded = _decode_wav_samples(b)
+        decoded = _decode_wav(b)
         if decoded is None:
             return [(str(mid), 0, _payload_digest64(b, b"afp") & 0xFFFF, False)]
-        samples, sr = decoded
+        samples, sr, _ = decoded
         fps = subfingerprints(samples, sr, frame, hop, n_bands, max_frames)
         return [(str(mid), t, fp, True) for t, fp in enumerate(fps)]
 
     return map_rows(df, row, (id_col, payload_col),
                     "media_id string, frame_no int, fp long, decoded boolean")
-
-
-def _decode_wav_samples(payload: bytes):
-    """RIFF/WAV PCM → (float64 samples in [-1,1], sample_rate); None if not
-    decodable. Same parsing rules as _decode_wav."""
-    if not payload.startswith(b"RIFF"):
-        return None
-    try:
-        with wave.open(io.BytesIO(payload)) as wf:
-            sr = wf.getframerate()
-            width = wf.getsampwidth()
-            frames = wf.readframes(wf.getnframes())
-    except Exception:
-        return None
-    if sr <= 0 or width not in (1, 2):
-        return None
-    if width == 2:
-        samples = np.frombuffer(frames, dtype=np.int16).astype(np.float64) / 32768.0
-    else:
-        samples = (np.frombuffer(frames, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    return samples, sr
-
-
-def _y4m_dims(payload: bytes):
-    nl = payload.find(b"\n")
-    if nl < 0:
-        return None
-    w = h = None
-    for tok in payload[:nl].split(b" ")[1:]:
-        if tok.startswith(b"W"):
-            w = int(tok[1:])
-        elif tok.startswith(b"H"):
-            h = int(tok[1:])
-    return (w, h) if w and h else None
 
 
 def video_frame_hashes(df: DataFrame, every_n: int = 5,
@@ -573,11 +541,10 @@ def video_frame_hashes(df: DataFrame, every_n: int = 5,
 
     def row(mid, payload):
         b = payload or b""
-        frames = _demux_y4m(b)
-        dims = _y4m_dims(b) if frames is not None else None
-        if frames is None or dims is None:
+        real = _demux_y4m(b)
+        if real is None:
             return [(str(mid), 0, _payload_digest64(b, b"vfh"), False)]
-        w, h = dims
+        w, h, frames = real
         out = []
         for i in range(0, len(frames), every_n):
             y = np.frombuffer(frames[i][: w * h], dtype=np.uint8)

@@ -2,11 +2,16 @@
 pin behind the committed fixture oracle) plus robustness and Spark wiring."""
 
 import ast
+import os
 
+import pyarrow.parquet as pq
 import pytest
 
+import docling_spark.operators.code_chunker as cc
 from docling_spark.operators.code_chunker import (
     chunk_code_document, code_chunk_sink, synth_code_rows)
+
+FIXTURE = os.path.join(os.path.dirname(__file__), "..", "fixtures", "code_chunks.parquet")
 
 PY = '''# Copyright 2026 Example Corp. All rights reserved.
 """Module docstring."""
@@ -136,6 +141,21 @@ def test_chunker_never_raises_fuzz():
     # pathological deep nesting (ast recursion guard path)
     deep = "(" * 300 + ")" * 300
     assert chunk_code_document("d", "python", deep)[0][3] == "preamble"
+
+
+def test_python_bare_cr_line_endings():
+    # `ast` ends a line at a bare '\r' but the chunker's lines split on
+    # '\n' only, so node line numbers can run past the document's end;
+    # those ranges clamp to the last line instead of failing the row
+    assert chunk_code_document("d", "python", "x = 1\ry = 2\ndef f():\n    return 1") == [
+        ("d", 0, "", "preamble", 1, 2, 1, "", "x = 1\ry = 2\ndef f():", 12),
+        ("d", 1, "f", "function", 3, 4, 3, "", "    return 1", 5),
+    ]
+    code = "def f():\r    return 1\r\rclass A:\r    def g(self):\r        pass\r"
+    assert chunk_code_document("d", "python", code) == [
+        ("d", 0, "f", "function", 1, 2, 1, "", code, 25),
+        ("d", 1, "A.g", "function", 5, 6, 5, "", "", 0),
+    ]
 
 
 def test_java_composition_chunker():
@@ -449,10 +469,23 @@ def _deep_java(depth):
             "}\n")
 
 
-@pytest.mark.parametrize("lang", ["java", "javascript"])
+def _nested_types(names):
+    return "".join(f"class {n} {{ " for n in names) + "void m() {} " + "} " * len(names)
+
+
+@pytest.mark.parametrize("lang", ["java", "javascript", "java_types"])
 def test_deep_nesting_chunks(lang):
     # a document nested deeper than Python's recursion limit is chunked, not
     # lost to a RecursionError; its methods chunk as at any depth
+    if lang == "java_types":
+        names = [f"C{i}" for i in range(DEEP)]
+        rows = chunk_code_document("d", "java", _nested_types(names))
+        # one method chunk under the context of every enclosing type, split
+        # under the token budget
+        assert {r[2:7] for r in rows} == {(".".join(names) + ".m", "function", 1, 1, 1)}
+        assert "\n".join(r[8] for r in rows) == (
+            "".join(f"class {n} {{\n}}\n" for n in names) + "void m() {}")
+        return
     if lang == "java":
         code = _deep_java(DEEP)
         want = {"Deep.nest", "Deep.two"}
@@ -477,3 +510,48 @@ def test_code_chunk_sink_deep_nesting_spark(spark):
                       for r in chunk_code_document(doc_id, lang, code))
     assert got == expected
     assert {r[2] for r in got if r[0] == "deep"} >= {"Deep.nest", "Deep.two"}
+
+
+@pytest.mark.parametrize("lang", ["java", "javascript"])
+def test_type_context_built_once_per_type(lang, monkeypatch):
+    # every method of a type shares its context (and its enclosing types'),
+    # built once per type, not once per method
+    built = []
+    real = cc._type_context
+
+    def counting(bd, blk, members, ctor):
+        built.append(blk.open)
+        return real(bd, blk, members, ctor)
+
+    monkeypatch.setattr(cc, "_type_context", counting)
+    if lang == "java":
+        methods = "".join(f"    int m{i}() {{ return {i}; }}\n" for i in range(300))
+        code = ("public class Big {\n" + methods
+                + "    static class Inner {\n" + methods + "    }\n}\n")
+        want_types = 2
+    else:
+        methods = "".join(f"    m{i}() {{ return {i}; }}\n" for i in range(300))
+        code = "class Big {\n" + methods + "}\n"
+        want_types = 1
+    rows = chunk_code_document("d", lang, code)
+    assert len([r for r in rows if r[3] == "function"]) == 300 * want_types
+    assert len(built) == len(set(built)) == want_types
+
+
+def test_code_chunk_fixture_pinned():
+    # the committed code_chunks oracle, without Spark
+    rows = [r for doc_id, lang, code in synth_code_rows(16, 7)
+            for r in chunk_code_document(doc_id, lang, code)]
+    want = [tuple(r.values()) for r in pq.read_table(FIXTURE).to_pylist()]
+    assert rows == want
+
+
+def test_code_chunk_sink_null_code_spark(spark):
+    # a null `code` is an empty file: no chunks, and the rows around it chunk
+    good = [("a", "java", _deep_java(1)), ("b", "python", PY)]
+    nulls = [(f"null-{lang}", lang, None) for lang in ("java", "javascript", "python", "c")]
+    df = spark.createDataFrame(good[:1] + nulls + good[1:],
+                               "doc_id string, language string, code string")
+    got = [tuple(r) for r in code_chunk_sink(df).orderBy("doc_id", "chunk_id").collect()]
+    assert got == [r for doc_id, lang, code in good
+                   for r in chunk_code_document(doc_id, lang, code)]

@@ -35,14 +35,13 @@ from docling_spark.ops.multimodal import (  # noqa: E402
     _decode_audio_stub,
     _decode_image_stub,
     _decode_wav,
-    _decode_wav_samples,
     _demux_y4m,
     _dhash64_from_gray,
     _gray_f64,
     _luma,
     _parse_netpbm,
     _payload_digest64,
-    _y4m_dims,
+    _wav_features,
     neardup_demo_media_rows,
     subfingerprints,
     synth_media_rows,
@@ -77,7 +76,7 @@ def audio_features_rows(media):
         b = bytes(payload)
         wav = _decode_wav(b)
         if wav is not None:
-            dur, sr, rms = wav
+            dur, sr, rms = _wav_features(wav)
             ok = True
         else:
             try:
@@ -94,8 +93,9 @@ def frame_sample_rows(media, every_n=10):
     rows = []
     for mid, _mtype, payload in media:
         b = bytes(payload)
-        frames = _demux_y4m(b)
-        if frames is not None:
+        demuxed = _demux_y4m(b)
+        if demuxed is not None:
+            frames = demuxed[2]
             for fno in range(0, len(frames), every_n):
                 rows.append((mid, fno,
                              hashlib.sha256(frames[fno]).hexdigest()[:16]))
@@ -124,15 +124,14 @@ def neardup_rows(media):
             _dhash64_from_gray(_gray_f64(parsed[3]))
             if parsed is not None else _payload_digest64(b, b"dhash")
         )
-        decoded = _decode_wav_samples(b)
+        decoded = _decode_wav(b)
         audio_fps[mid] = (
-            set(subfingerprints(*decoded)) if decoded is not None
+            set(subfingerprints(*decoded[:2])) if decoded is not None
             else {_payload_digest64(b, b"afp") & 0xFFFF}
         )
-        frames = _demux_y4m(b)
-        dims = _y4m_dims(b) if frames is not None else None
-        if frames is not None and dims is not None:
-            w, h = dims
+        demuxed = _demux_y4m(b)
+        if demuxed is not None:
+            w, h, frames = demuxed
             video_fps[mid] = {
                 _dhash64_from_gray(
                     np.frombuffer(frames[i][: w * h], dtype=np.uint8)
