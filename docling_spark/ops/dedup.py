@@ -181,12 +181,16 @@ def simhash_neardup_pairs(docs: DataFrame, id_col: str = "doc_id",
     `bits=128` switches to the two-long fingerprint (`simhash128`) with
     32-bit blocks at k=3 — the width knob the sf1 scale-step instrument
     recommends for low-entropy corpora (collision ratio ∝ 1/2^(bits/(k+1)))."""
+    sig, vcols = _simhash_sig(docs, id_col, text_col, bits)
+    return hamming_pairs(sig, id_col, vcols, bits, max_hamming)
+
+
+def _simhash_sig(docs: DataFrame, id_col: str, text_col: str, bits: int):
+    """(fingerprint frame, its value column(s)) for `bits`: the two-long
+    `simhash128` at 128, else the one-long `simhash`."""
     if bits == 128:
-        sig = simhash128(docs, id_col, text_col)
-        return hamming_pairs(sig, id_col, ["simhash_lo", "simhash_hi"],
-                             128, max_hamming)
-    sig = simhash(docs, id_col, text_col, bits)
-    return hamming_pairs(sig, id_col, "simhash", bits, max_hamming)
+        return simhash128(docs, id_col, text_col), ["simhash_lo", "simhash_hi"]
+    return simhash(docs, id_col, text_col, bits), "simhash"
 
 
 def simhash_block_stats(docs: DataFrame, id_col: str = "doc_id",
@@ -205,12 +209,7 @@ def simhash_block_stats(docs: DataFrame, id_col: str = "doc_id",
     while the ratio vs all pairs falls ~1/N in a healthy corpus. A
     candidates-per-doc figure that grows with N means the fingerprint is
     too narrow for the corpus size — widen `bits` before scaling up."""
-    if bits == 128:
-        sig = simhash128(docs, id_col, text_col)
-        vcols = ["simhash_lo", "simhash_hi"]
-    else:
-        sig = simhash(docs, id_col, text_col, bits)
-        vcols = "simhash"
+    sig, vcols = _simhash_sig(docs, id_col, text_col, bits)
     cand = hamming_pairs(sig, id_col, vcols, bits, max_hamming, verify=False)
     n_cand = cand.agg(F.count("*").cast("long").alias("n_block_candidate_pairs"))
     n_ver = (
@@ -563,12 +562,18 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         F.col(id_col),
         F.expr(f"transform({P.token_hashes_spark(text_col)}, h -> {ext})").alias("_eh"),
     )
+    return d.select(F.col(id_col), _simhash_fold("_eh", bits).alias("simhash"))
+
+
+def _simhash_fold(eh_col: str, bits: int = 64) -> F.Column:
+    """The bit-majority fold over an array of extended token hashes: bit j
+    is set when more tokens have it set than not."""
     terms = []
     for j in range(bits):
         mask_lit = P.simhash_bit_mask_lit(j)
         # vote for bit j: +1 if set in the extended token hash, -1 otherwise
         vote = F.expr(
-            f"aggregate(_eh, 0L, (acc, h) -> acc + "
+            f"aggregate({eh_col}, 0L, (acc, h) -> acc + "
             f"(CASE WHEN (h & {mask_lit}) != 0 THEN 1 ELSE -1 END))"
         )
         terms.append(
@@ -577,7 +582,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     total = terms[0]
     for t in terms[1:]:
         total = total + t
-    return d.select(F.col(id_col), total.cast("long").alias("simhash"))
+    return total.cast("long")
 
 
 def simhash128(docs: DataFrame, id_col: str = "doc_id",
@@ -604,25 +609,9 @@ def simhash128(docs: DataFrame, id_col: str = "doc_id",
         F.expr(f"transform(_th, h -> {ext0})").alias("_eh0"),
         F.expr(f"transform(_th, h -> {ext1})").alias("_eh1"),
     )
-
-    def fold(eh_col: str) -> F.Column:
-        terms = []
-        for j in range(64):
-            mask_lit = P.simhash_bit_mask_lit(j)
-            vote = F.expr(
-                f"aggregate({eh_col}, 0L, (acc, h) -> acc + "
-                f"(CASE WHEN (h & {mask_lit}) != 0 THEN 1 ELSE -1 END))"
-            )
-            terms.append(
-                F.when(vote > 0, F.lit(P.simhash_bit_mask(j))).otherwise(F.lit(0))
-            )
-        total = terms[0]
-        for t in terms[1:]:
-            total = total + t
-        return total.cast("long")
-
     return d.select(
-        F.col(id_col), fold("_eh0").alias("simhash_lo"), fold("_eh1").alias("simhash_hi")
+        F.col(id_col), _simhash_fold("_eh0").alias("simhash_lo"),
+        _simhash_fold("_eh1").alias("simhash_hi"),
     )
 
 

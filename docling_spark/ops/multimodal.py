@@ -112,6 +112,8 @@ def _decode_wav(payload: bytes) -> Optional[Tuple[np.ndarray, int, int]]:
         return None
     if sr <= 0 or width not in (1, 2):
         return None
+    # a data chunk cut mid-sample decodes its whole samples only
+    frames = frames[:len(frames) - len(frames) % width]
     if width == 2:
         samples = np.frombuffer(frames, dtype=np.int16).astype(np.float64) / 32768.0
     else:

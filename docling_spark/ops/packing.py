@@ -34,6 +34,7 @@ from __future__ import annotations
 from typing import Iterable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from docling_spark.ops import portable as P
@@ -90,10 +91,11 @@ def sequence_pack(docs: DataFrame, seq_len: int = 2048, sep_tokens: int = 1,
     for r in sorted(totals, key=lambda r: r["part_key"]):
         offsets[r["part_key"]] = base
         base += r["part_total"]
-    off_df = F.broadcast(spark.createDataFrame(
-        [(k, v) for k, v in offsets.items()] or [(0, 0)],
-        "part_key long, base long",
-    ))
+    # from Arrow, so the broadcast side plans as a local relation
+    off_df = F.broadcast(spark.createDataFrame(pa.table({
+        "part_key": pa.array(list(offsets), pa.int64()),
+        "base": pa.array(list(offsets.values()), pa.int64()),
+    })))
 
     start = F.col("base") + F.col("local_cum") - F.col("n_tokens") - F.lit(sep_tokens)
     # sequence indices via integer DIV, not floor(double /): IEEE division

@@ -1,15 +1,31 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>, read as double).
 
-- brute-force cosine top-k: the exact baseline. The query side is tiny →
-  broadcast; the corpus side streams through one narrow stage; top-k is a
-  per-query window. No full sort, no quadratic shuffle.
-- LSH-bucketed ANN (random hyperplanes / SRP): the scale path. Each vector
-  gets a `bits`-bit signature from sign(v·plane); candidates = same bucket
-  (optionally ±1-bit probes). At 100 TB the bucket join replaces the cross
-  product; recall tunes with bits/probes.
+- Exact cosine top-k (`cosine_topk`): the query side is tiny → broadcast;
+  the corpus streams through one narrow stage; top-k is a per-query window.
+  No full sort, no quadratic shuffle.
+- SRP LSH (`srp_signature`, `ann_bucketed_topk`, `embedding_neardup_pairs`):
+  each vector gets a `bits`-bit bucket from sign(v·plane), and a bucket
+  equi-join replaces the cross product; recall tunes with `bits`.
+- IVF (`ivf_assign`, `ann_ivf_topk`): each vector lives in its nearest
+  centroid's cell (seeded, spherical k-means or L2 k-means centroids) and
+  each query probes its `n_probe` nearest cells. From HIER_MIN_CELLS cells
+  on, top-1 assignment walks a two-level tree (`group_centroids`).
+- IVF-PQ (`ann_ivfpq_topk`): the corpus keeps only its cell and m PQ
+  sub-codes (of the cell residual by default); candidates rank by ADC.
+- SemDeDup (`semdedup`): pairwise cosine only within a cell, one kept
+  exemplar per duplicate component.
 
-All dot products are built-in higher-order functions (zip_with + aggregate),
-JVM-side — no Python in the hot path.
+One metric rule: "dot" picks the highest dot product, "l2" the lowest
+squared L2 distance, and ties go to the lowest cell. `_nearest` is the
+numpy side (the one Lloyd loop `_lloyd`, `group_centroids`,
+`residualize`); `_rule` is the Spark side (`_assign_cells`, both tree
+levels, `_argbest_agg`). Quantizers train on a bounded driver sample.
+
+Every dot product and distance is a strict left fold of built-in
+higher-order functions (zip_with + aggregate) that the DuckDB oracles
+mirror term for term. These run in the JVM, but Spark evaluates them
+interpreted (`CodegenFallback`), so norms are taken once per row, never
+per pair.
 """
 
 from __future__ import annotations
@@ -34,8 +50,48 @@ def _sqdist(a: str, b: str) -> F.Column:
     )
 
 
+def _rule(metric: str):
+    """The Spark side of the nearest-centroid rule: (score fold, ascending)
+    — squared L2 ascending for "l2", dot product descending otherwise; the
+    callers break ties to the lowest cell. `_nearest` is the numpy side."""
+    return (_sqdist, True) if metric == "l2" else (_dot, False)
+
+
 def _as_double(col: str) -> F.Column:
     return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
+
+
+def _norm(col: str) -> F.Column:
+    return F.sqrt(_dot(col, col))
+
+
+def _cosine(a: str, b: str, norm_a: str, norm_b: str) -> F.Column:
+    """cos(a, b) from per-row norms, rounded to 6 dp: every rank and
+    threshold compares the rounded value, so both engines decide alike."""
+    return F.round(_dot(a, b) / (F.col(norm_a) * F.col(norm_b)), 6)
+
+
+def _vectors(emb: DataFrame, id_col: str, vec_col: str,
+             norm: bool = False) -> DataFrame:
+    """(id, v[, vnorm]) — the vector as array<double>, with its norm taken
+    once per ROW when asked: higher-order functions evaluate interpreted,
+    so each per-pair norm saved is ~1/3 of a join's compute."""
+    base = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
+    return base.withColumn("vnorm", _norm("v")) if norm else base
+
+
+def _topk(scored: DataFrame, k: int, score_col: str,
+          ascending: bool) -> DataFrame:
+    """(query_id, neighbor_id, score, rank) — each query's first `k`
+    neighbours by `score_col`, ties to the lowest neighbor_id, through a
+    per-query window."""
+    order = F.col(score_col).asc() if ascending else F.col(score_col).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score_col, F.col("rank").cast("long"))
+    )
 
 
 def cosine_topk(emb: DataFrame, query_ids, k: int = 10,
@@ -44,12 +100,7 @@ def cosine_topk(emb: DataFrame, query_ids, k: int = 10,
 
     Returns (query_id, neighbor_id, cosine, rank) with deterministic
     tie-breaks (cosine desc, neighbor_id asc). Self-matches excluded."""
-    # norms precompute per ROW (not per pair): higher-order array functions
-    # fall back to interpreted evaluation, so each saved per-pair dot is ~1/3
-    # of the join's compute
-    base = emb.select(F.col(id_col), _as_double(vec_col).alias("v")).withColumn(
-        "vnorm", F.sqrt(_dot("v", "v"))
-    )
+    base = _vectors(emb, id_col, vec_col, norm=True)
     queries = base.filter(F.col(id_col).isin(list(query_ids))).select(
         F.col(id_col).alias("query_id"), F.col("v").alias("q"),
         F.col("vnorm").alias("qnorm"),
@@ -57,20 +108,11 @@ def cosine_topk(emb: DataFrame, query_ids, k: int = 10,
     joined = base.crossJoin(F.broadcast(queries)).filter(
         F.col(id_col) != F.col("query_id")
     )
-    cos = _dot("q", "v") / (F.col("qnorm") * F.col("vnorm"))
     scored = joined.select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cos, 6).alias("cosine"),
+        "query_id", F.col(id_col).alias("neighbor_id"),
+        _cosine("q", "v", "qnorm", "vnorm").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("long"))
-    )
+    return _topk(scored, k, "cosine", ascending=False)
 
 
 def srp_signature(emb: DataFrame, bits: int = 8, dim: int = 64, seed: int = 7,
@@ -81,7 +123,7 @@ def srp_signature(emb: DataFrame, bits: int = 8, dim: int = 64, seed: int = 7,
     on executors, deterministic across cluster sizes)."""
     rng = np.random.RandomState(seed)
     planes = rng.randn(bits, dim)
-    base = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
+    base = _vectors(emb, id_col, vec_col)
     bucket = F.lit(0).cast("long")
     for j in range(bits):
         lit = "array(" + ",".join(f"{x!r}D" for x in planes[j]) + ")"
@@ -125,32 +167,54 @@ def _ordered_sample_np(emb: DataFrame, n: int, id_col: str,
     across engines — the oracle builders read the same ordered prefix).
     A smaller sample of the same relation is always a PREFIX of a larger
     one, so one collect can feed several quantizers."""
-    rows = (
-        emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-        .orderBy(F.col(id_col))
-        .limit(n)
-        .collect()
-    )
+    rows = _vectors(emb, id_col, vec_col).orderBy(F.col(id_col)).limit(n).collect()
     return np.array([r["v"] for r in rows], dtype=np.float64)
 
 
+def _nearest(X: np.ndarray, cents: np.ndarray, metric: str) -> np.ndarray:
+    """The numpy side of the nearest-centroid rule: per row, the argmin of
+    the squared L2 distance for "l2", else the argmax of the dot product;
+    np.argmin/argmax take the lowest index on ties, as `_rule`'s callers
+    do."""
+    if metric == "l2":
+        return np.argmin(((X[:, None] - cents[None]) ** 2).sum(-1), axis=1)
+    return np.argmax(X @ cents.T, axis=1)
+
+
+def _lloyd(X: np.ndarray, k: int, iters: int, rng: np.random.RandomState,
+           metric: str) -> np.ndarray:
+    """The one deterministic Lloyd loop: `k` seeded initial rows, then per
+    round assign by `_nearest` and recenter each cell to its mean; an empty
+    cell re-seeds from a sample row drawn from `rng`, in cell order.
+    "dot" renormalizes the centroids after each round (spherical k-means
+    over unit-norm rows).
+
+    Members group by one STABLE sort, not a boolean mask (one pass over
+    the sample) per cell. A stable grouping keeps each cell's rows in their
+    original order, so .mean() sees the same array as a mask would and
+    rounds identically."""
+    n = len(X)
+    cents = X[rng.choice(n, size=k, replace=False)].copy()
+    for _ in range(iters):
+        assign = _nearest(X, cents, metric)
+        order = np.argsort(assign, kind="stable")
+        bounds = np.searchsorted(assign[order], np.arange(k + 1))
+        Xs = X[order]
+        for c in range(k):
+            lo, hi = bounds[c], bounds[c + 1]
+            cents[c] = Xs[lo:hi].mean(axis=0) if hi > lo else X[rng.randint(n)]
+        if metric == "dot":
+            cents = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
+    return cents
+
+
 def kmeans_lloyd(X: np.ndarray, n_cells: int, iters: int, seed: int) -> np.ndarray:
-    """The shared deterministic Lloyd loop (pure numpy) — also used by the
-    DuckDB oracle builder so both engines probe identical centroids."""
+    """Spherical k-means (pure numpy) over the unit-normalized rows — also
+    used by the DuckDB oracle builder so both engines probe identical
+    centroids."""
     X = X.astype(np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.RandomState(seed)
-    cents = X[rng.choice(len(X), size=n_cells, replace=False)].copy()
-    for _ in range(iters):
-        assign = np.argmax(X @ cents.T, axis=1)
-        for c in range(n_cells):
-            members = X[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-            else:  # deterministic re-seed for an empty cell
-                cents[c] = X[rng.randint(len(X))]
-        cents = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-    return cents
+    return _lloyd(X, n_cells, iters, np.random.RandomState(seed), "dot")
 
 
 def kmeans_lloyd_l2(X: np.ndarray, n_cells: int, iters: int, seed: int) -> np.ndarray:
@@ -162,19 +226,8 @@ def kmeans_lloyd_l2(X: np.ndarray, n_cells: int, iters: int, seed: int) -> np.nd
     is NOT the mean and subtracting it can inflate variance (measured on
     the synth corpus: spherical-residual recall@10 0.16 vs 0.28 raw,
     l2-residual 0.44 vs 0.42 raw at the same code budget)."""
-    X = X.astype(np.float64)
-    rng = np.random.RandomState(seed)
-    cents = X[rng.choice(len(X), size=n_cells, replace=False)].copy()
-    for _ in range(iters):
-        d = ((X[:, None] - cents[None]) ** 2).sum(-1)
-        assign = np.argmin(d, axis=1)
-        for c in range(n_cells):
-            members = X[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-            else:  # deterministic re-seed for an empty cell
-                cents[c] = X[rng.randint(len(X))]
-    return cents
+    return _lloyd(X.astype(np.float64), n_cells, iters,
+                  np.random.RandomState(seed), "l2")
 
 
 def train_centroids_l2(emb: DataFrame, n_cells: int = 8, dim: int = 64,
@@ -187,16 +240,20 @@ def train_centroids_l2(emb: DataFrame, n_cells: int = 8, dim: int = 64,
         _ordered_sample_np(emb, sample_n, id_col, vec_col), n_cells, iters, seed)
 
 
-def _centroid_df(spark, cents: np.ndarray) -> DataFrame:
-    """Centroids as a tiny broadcastable DataFrame (cell, c) — data, not
-    code: inlining them as column-expression literals blows the whole-stage
-    codegen source past 2 MB and costs seconds of JIT compile per query.
-    Built from Arrow, so it plans as a local relation, not a Python RDD."""
+def _centroid_df(spark, cents: np.ndarray,
+                 grp: "np.ndarray | None" = None) -> DataFrame:
+    """Centroids as a tiny broadcastable DataFrame (cell[, grp], c) — data,
+    not code: inlining them as column-expression literals blows the
+    whole-stage codegen source past 2 MB and costs seconds of JIT compile
+    per query. `grp` adds each cell's parent group (the fine level of the
+    two-level tree). Built from Arrow, so it plans as a local relation,
+    not a Python RDD."""
     cents = np.asarray(cents, dtype=np.float64)
-    return spark.createDataFrame(pa.table({
-        "cell": pa.array(np.arange(len(cents), dtype=np.int64)),
-        "c": pa.array(list(cents), pa.list_(pa.float64())),
-    }))
+    cols = {"cell": pa.array(np.arange(len(cents), dtype=np.int64))}
+    if grp is not None:
+        cols["grp"] = pa.array(np.asarray(grp, dtype=np.int64))
+    cols["c"] = pa.array(list(cents), pa.list_(pa.float64()))
+    return spark.createDataFrame(pa.table(cols))
 
 
 # fine-codebook size at which top-1 assignment switches to the two-level
@@ -209,9 +266,9 @@ def group_centroids(cents: np.ndarray, n_coarse: "int | None" = None,
                     seed: int = 0) -> "tuple[np.ndarray, np.ndarray]":
     """Driver-side second quantizer level: cluster the FINE centroids
     themselves into ~√n_cells coarse groups (same deterministic Lloyd
-    loops as the fine training — spherical for dot, plain for L2), then
+    loop as the fine training — spherical for dot, plain for L2), then
     deterministically parent every fine cell to its nearest coarse
-    centroid (np.argmax/argmin → lowest index on ties). Coarse groups
+    centroid (`_nearest` → lowest index on ties). Coarse groups
     that end up with no children are dropped and the survivors re-labeled
     densely in ascending original order, so a vector can never be routed
     to an empty group.
@@ -244,13 +301,9 @@ def group_centroids(cents: np.ndarray, n_coarse: "int | None" = None,
     if n_coarse is None:
         n_coarse = max(2, int(np.ceil(np.sqrt(C))))
     n_coarse = min(n_coarse, C)
-    if metric == "l2":
-        coarse = kmeans_lloyd_l2(cents, n_coarse, iters, seed)
-        d = ((cents[:, None] - coarse[None]) ** 2).sum(-1)
-        child_of = np.argmin(d, axis=1)
-    else:
-        coarse = kmeans_lloyd(cents, n_coarse, iters, seed)
-        child_of = np.argmax(cents @ coarse.T, axis=1)
+    train = kmeans_lloyd_l2 if metric == "l2" else kmeans_lloyd
+    coarse = train(cents, n_coarse, iters, seed)
+    child_of = _nearest(cents, coarse, metric)
     kept = np.unique(child_of)  # ascending original index → dense re-label
     remap = {int(g): i for i, g in enumerate(kept)}
     return coarse[kept], np.array([remap[int(g)] for g in child_of])
@@ -267,24 +320,13 @@ def _assign_cells_hier(emb: DataFrame, cents_np: np.ndarray, id_col: str,
     (id, v, cell, rn=1) — the flat path's schema."""
     spark = emb.sparkSession
     coarse, child_of = group_centroids(cents_np, metric=metric, seed=seed)
-    coarse_df = spark.createDataFrame(
-        [(g, [float(x) for x in c]) for g, c in enumerate(coarse)],
-        "grp long, gc array<double>")
-    fine_df = spark.createDataFrame(
-        [(i, int(child_of[i]), [float(x) for x in c])
-         for i, c in enumerate(cents_np)],
-        "cell long, grp long, c array<double>")
-    base = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    d1 = _sqdist("v", "gc") if metric == "l2" else _dot("v", "gc")
     routed = _argbest_agg(
-        base.crossJoin(F.broadcast(coarse_df))
-        .select(id_col, "v", F.col("grp").alias("cell"), d1.alias("d")),
+        _vectors(emb, id_col, vec_col).crossJoin(
+            F.broadcast(_centroid_df(spark, coarse))),
         id_col, metric,
     ).select(id_col, "v", F.col("cell").alias("grp"))
-    d2 = _sqdist("v", "c") if metric == "l2" else _dot("v", "c")
     return _argbest_agg(
-        routed.join(F.broadcast(fine_df), "grp")
-        .select(id_col, F.col("v"), "cell", d2.alias("d")),
+        routed.join(F.broadcast(_centroid_df(spark, cents_np, child_of)), "grp"),
         id_col, metric,
     )
 
@@ -294,12 +336,12 @@ def _assign_cells(emb: DataFrame, n_cells: int, dim: int, seed: int,
                   cents: DataFrame | None = None,
                   metric: str = "dot",
                   cents_np: "np.ndarray | None" = None) -> DataFrame:
-    """(vec_id, v, cell[, rn]) — rank centroids per vector by dot product
-    (desc, cell asc tie-break) or squared L2 (asc — metric="l2", for the
-    mean-centroid quantizer of the residual-PQ path) via a broadcast cross
-    join of the tiny centroid table; rn ≤ top_n kept. Pass a prebuilt
-    `cents` frame to share one centroid relation across multiple
-    assignment stages (one broadcast build instead of two).
+    """(vec_id, v, cell[, rn]) — rank centroids per vector by `_rule`: dot
+    product (desc) or, for metric="l2" (the mean-centroid quantizer of the
+    residual-PQ path), squared L2 (asc); ties to the lowest cell. A
+    broadcast cross join of the tiny centroid table; rn ≤ top_n kept. Pass
+    a prebuilt `cents` frame to share one centroid relation across
+    multiple assignment stages (one broadcast build instead of two).
 
     Top-1 assignment over ≥ HIER_MIN_CELLS centroids routes through the
     two-level coarse→children walk (`_assign_cells_hier`) when the numpy
@@ -312,42 +354,38 @@ def _assign_cells(emb: DataFrame, n_cells: int, dim: int, seed: int,
         return _assign_cells_hier(emb, cents_np, id_col, vec_col, metric, seed)
     if cents is None:
         cents = _centroid_df(emb.sparkSession, cents_np)
-    base = emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-    if metric == "l2":
-        scored = base.crossJoin(F.broadcast(cents)).withColumn("d", _sqdist("v", "c"))
-        w = Window.partitionBy(id_col).orderBy(F.col("d").asc(), F.col("cell").asc())
-    else:
-        scored = base.crossJoin(F.broadcast(cents)).withColumn("d", _dot("v", "c"))
-        w = Window.partitionBy(id_col).orderBy(F.col("d").desc(), F.col("cell").asc())
+    pairs = _vectors(emb, id_col, vec_col).crossJoin(F.broadcast(cents))
     if top_n == 1:
-        # argbest as a map-side-combinable aggregate instead of a window:
-        # the window form exchanges AND sorts all N×C scored rows; the agg
-        # shuffles at most one partial winner per (id, partition). Same
-        # selection: min/max of struct(d, cell, …) = best d, then lowest
-        # cell (negated for max), then v — never reached, cell is unique.
-        return _argbest_agg(scored, id_col, metric)
+        return _argbest_agg(pairs, id_col, metric)
+    score, asc = _rule(metric)
+    d = F.col("d").asc() if asc else F.col("d").desc()
+    w = Window.partitionBy(id_col).orderBy(d, F.col("cell").asc())
     return (
-        scored.withColumn("rn", F.row_number().over(w))
+        pairs.withColumn("d", score("v", "c"))
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= top_n)
         .select(F.col(id_col), "v", "cell", "rn")
     )
 
 
-def _argbest_agg(scored: DataFrame, id_col: str, metric: str) -> DataFrame:
-    """(id, v, cell, rn=1) from (id, v, cell, d) — per-id argbest via one
-    hash aggregate. Tie-break matches the window form: best d, then lowest
-    cell (struct comparison; for the max/dot case cell enters negated so
-    the max still prefers the LOWEST cell)."""
-    if metric == "l2":
-        w = F.min(F.struct(F.col("d"), F.col("cell"), F.col("v")))
-        pick = scored.groupBy(id_col).agg(w.alias("w")).select(
-            F.col(id_col), F.col("w.v").alias("v"), F.col("w.cell").alias("cell"))
-    else:
-        w = F.max(F.struct(F.col("d"), (-F.col("cell")).alias("nc"), F.col("v")))
-        pick = scored.groupBy(id_col).agg(w.alias("w")).select(
-            F.col(id_col), F.col("w.v").alias("v"),
-            (-F.col("w.nc")).alias("cell"))
-    return pick.withColumn("rn", F.lit(1))
+def _argbest_agg(pairs: DataFrame, id_col: str, metric: str) -> DataFrame:
+    """(id, v, cell, rn=1) from (id, v, cell, c) pairs — per-id nearest
+    cell by `_rule` as one hash aggregate instead of a window: the window
+    form exchanges AND sorts all N×C scored rows; the agg shuffles at most
+    one partial winner per (id, partition). Same selection: min/max of
+    struct(d, cell, v) = best d, then lowest cell (negated for max), then
+    v — never reached, cell is unique."""
+    score, asc = _rule(metric)
+    cell = F.col("cell") if asc else -F.col("cell")
+    best = (F.min if asc else F.max)(
+        F.struct(F.col("d"), cell.alias("sc"), F.col("v")))
+    picked = F.col("w.sc") if asc else -F.col("w.sc")
+    return (
+        pairs.withColumn("d", score("v", "c"))
+        .groupBy(id_col).agg(best.alias("w"))
+        .select(F.col(id_col), F.col("w.v").alias("v"), picked.alias("cell"),
+                F.lit(1).alias("rn"))
+    )
 
 
 def ivf_assign(emb: DataFrame, n_cells: int = 8, dim: int = 64, seed: int = 11,
@@ -389,23 +427,16 @@ def ann_ivf_topk(emb: DataFrame, query_ids, k: int = 10, n_cells: int = 8,
     # unaliased corpus["cell"] == q_probed["cell"] makes Spark log
     # "trivially true equals predicate" and fall back to its self-join
     # disambiguation heuristic — correct today but version-fragile.
-    corpus = corpus.withColumn("vnorm", F.sqrt(_dot("v", "v"))).alias("c")
-    q_probed = q_probed.withColumn("qnorm", F.sqrt(_dot("q", "q"))).alias("q")
+    corpus = corpus.withColumn("vnorm", _norm("v")).alias("c")
+    q_probed = q_probed.withColumn("qnorm", _norm("q")).alias("q")
     joined = corpus.join(
         F.broadcast(q_probed), F.col("c.cell") == F.col("q.cell")
     ).filter(F.col(id_col) != F.col("query_id"))
-    cos = _dot("q", "v") / (F.col("qnorm") * F.col("vnorm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    scored = joined.select(
+        "query_id", F.col(id_col).alias("neighbor_id"),
+        _cosine("q", "v", "qnorm", "vnorm").alias("cosine"),
     )
-    return (
-        joined.select(
-            "query_id", F.col(id_col).alias("neighbor_id"), F.round(cos, 6).alias("cosine")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("long"))
-    )
+    return _topk(scored, k, "cosine", ascending=False)
 
 
 def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.35,
@@ -423,25 +454,18 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.35,
     is (1 - θ/π)^bits, high precisely for near-duplicate (small-angle)
     pairs. Deterministic: seeded hyperplanes, id_a < id_b ordering."""
     sig = srp_signature(emb, bits, dim, seed, id_col, vec_col)
-    base = (
-        emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-        .withColumn("vnorm", F.sqrt(_dot("v", "v")))  # per row, pre-join
-        .join(sig, id_col)
-    )
+    base = _vectors(emb, id_col, vec_col, norm=True).join(sig, id_col)
     a, b = base.alias("a"), base.alias("b")
     joined = a.join(
         b,
         (F.col("a.bucket") == F.col("b.bucket"))
         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
     )
-    cos = F.expr(
-        "aggregate(zip_with(a.v, b.v, (x, y) -> x * y), 0D, (s, v) -> s + v)"
-    ) / (F.col("a.vnorm") * F.col("b.vnorm"))
     return (
         joined.select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(cos, 6).alias("cosine"),
+            _cosine("a.v", "b.v", "a.vnorm", "b.vnorm").alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -455,11 +479,7 @@ def ann_bucketed_topk(emb: DataFrame, query_ids, k: int = 10, bits: int = 8,
     The equi-join on bucket replaces the cross join of the exact path — at
     N vectors and 2^bits buckets the candidate set shrinks ~2^bits×."""
     sig = srp_signature(emb, bits, dim, seed, id_col, vec_col)
-    base = (
-        emb.select(F.col(id_col), _as_double(vec_col).alias("v"))
-        .withColumn("vnorm", F.sqrt(_dot("v", "v")))
-        .join(sig, id_col)
-    )
+    base = _vectors(emb, id_col, vec_col, norm=True).join(sig, id_col)
     queries = base.filter(F.col(id_col).isin(list(query_ids))).select(
         F.col(id_col).alias("query_id"),
         F.col("v").alias("q"),
@@ -470,18 +490,11 @@ def ann_bucketed_topk(emb: DataFrame, query_ids, k: int = 10, bits: int = 8,
         F.broadcast(queries),
         (F.col("bucket") == F.col("qbucket")) & (F.col(id_col) != F.col("query_id")),
     )
-    cos = _dot("q", "v") / (F.col("qnorm") * F.col("vnorm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    scored = joined.select(
+        "query_id", F.col(id_col).alias("neighbor_id"),
+        _cosine("q", "v", "qnorm", "vnorm").alias("cosine"),
     )
-    return (
-        joined.select(
-            "query_id", F.col(id_col).alias("neighbor_id"), F.round(cos, 6).alias("cosine")
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("long"))
-    )
+    return _topk(scored, k, "cosine", ascending=False)
 
 
 # ---------------------------------------------------------------------------
@@ -514,48 +527,22 @@ def _dlit(x: float) -> str:
 
 
 def pq_lloyd(X: np.ndarray, m: int, k: int, iters: int, seed: int) -> np.ndarray:
-    """Plain-L2 Lloyd per subspace over the sample → (m, k, dim//m)
-    codebooks. Deterministic (seeded init, empty cells re-seeded from the
-    sample); shared with the DuckDB oracle builder."""
+    """Plain-L2 Lloyd (`_lloyd`) per subspace over the sample → (m, k,
+    dim//m) codebooks, all subspaces drawing from one seeded generator.
+    Shared with the DuckDB oracle builder."""
     X = X.astype(np.float64)
-    n, dim = X.shape
-    sub = dim // m
+    sub = X.shape[1] // m
     rng = np.random.RandomState(seed)
-    books = np.empty((m, k, sub), dtype=np.float64)
-    for j in range(m):
-        S = X[:, j * sub:(j + 1) * sub]
-        cents = S[rng.choice(n, size=k, replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((S[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
-            # group by STABLE sort instead of k boolean masks (the Python
-            # mask loop dominated training wall). Bit-exactness: a stable
-            # grouping preserves each member set's original row order, so
-            # .mean() sees the identical array and rounds identically.
-            order = np.argsort(assign, kind="stable")
-            bounds = np.searchsorted(assign[order], np.arange(k + 1))
-            Ss = S[order]
-            for c in range(k):
-                lo, hi = bounds[c], bounds[c + 1]
-                if hi > lo:
-                    cents[c] = Ss[lo:hi].mean(axis=0)
-                else:
-                    cents[c] = S[rng.randint(n)]
-        books[j] = cents
-    return books
+    return np.stack([_lloyd(X[:, j * sub:(j + 1) * sub], k, iters, rng, "l2")
+                     for j in range(m)])
 
 
 def residualize(X: np.ndarray, cents: np.ndarray,
                 metric: str = "l2") -> np.ndarray:
-    """r = x − centroid(cell) with the same assignment rule as
-    `_assign_cells` (min L2 / max dot, lowest cell on ties — np.argmin/
-    argmax pick the first extremum). Shared with the DuckDB oracle
+    """r = x − centroid(cell), the cell chosen by `_nearest` — the rule
+    `_assign_cells` applies in Spark. Shared with the DuckDB oracle
     builder."""
-    if metric == "l2":
-        assign = np.argmin(((X[:, None] - cents[None]) ** 2).sum(-1), axis=1)
-    else:
-        assign = np.argmax(X @ cents.T, axis=1)
-    return X - cents[assign]
+    return X - cents[_nearest(X, cents, metric)]
 
 
 def train_pq_codebooks(emb: DataFrame, m: int = 4, nbits: int = 4,
@@ -737,31 +724,25 @@ def ann_ivfpq_topk(emb: DataFrame, query_ids, k: int = 10, n_cells: int = 8,
         emb, n_cells, dim, seed, id_col, vec_col, top_n=1, cents=cents,
         metric=metric,
     ).select(F.col(id_col), "v", "cell")
-    assign = _assign_cells(
+    q_probed = _assign_cells(
         emb.filter(F.col(id_col).isin(list(query_ids))), n_cells, dim, seed,
         id_col, vec_col, top_n=n_probe, cents=cents, metric=metric,
-    )
-    code_vec = "v"
+    ).select(F.col(id_col).alias("query_id"), F.col("v").alias("q"), "cell")
+    code_vec, adc_q = "v", "q"
     if residual:
-        # re-center against the OWN cell's centroid (broadcast join, then
-        # an elementwise zip_with — no fold, so both engines subtract in
-        # identical IEEE order)
-        corpus = corpus.join(F.broadcast(cents), "cell").withColumn(
-            "rv", F.expr("zip_with(v, c, (a, b) -> a - b)")
-        ).drop("c")
-        code_vec = "rv"
+        # re-center each side against its (probed) cell's centroid: a
+        # broadcast join, then an elementwise zip_with — no fold, so both
+        # engines subtract in identical IEEE order
+        def recenter(df: DataFrame, vec: str) -> DataFrame:
+            return df.join(F.broadcast(cents), "cell").withColumn(
+                f"r{vec}", F.expr(f"zip_with({vec}, c, (a, b) -> a - b)")
+            ).drop("c")
+
+        corpus, q_probed = recenter(corpus, "v"), recenter(q_probed, "q")
+        code_vec, adc_q = "rv", "rq"
     codes = pq_codes(
         corpus, codebooks, id_col, vec_col=code_vec, keep=["cell"]
     ).alias("c")
-    q_probed = assign.select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("q"), "cell"
-    )
-    adc_q = "q"
-    if residual:
-        q_probed = q_probed.join(F.broadcast(cents), "cell").withColumn(
-            "rq", F.expr("zip_with(q, c, (a, b) -> a - b)")
-        ).drop("c")
-        adc_q = "rq"
     q_probed = q_probed.alias("q")
     joined = codes.join(
         F.broadcast(q_probed), F.col("c.cell") == F.col("q.cell")
@@ -770,14 +751,7 @@ def ann_ivfpq_topk(emb: DataFrame, query_ids, k: int = 10, n_cells: int = 8,
     scored = joined.select(
         "query_id", F.col(id_col).alias("neighbor_id"), F.round(adc, 6).alias("adc")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc", F.col("rank").cast("long"))
-    )
+    return _topk(scored, k, "adc", ascending=True)
 
 
 def semdedup(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
@@ -816,9 +790,8 @@ def semdedup(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     cents_np = centroids if centroids is not None else _centroids(n_cells, dim, seed)
     cents_df = _centroid_df(spark, cents_np)
     if assigned is not None:
-        assigned = emb.select(
-            F.col(id_col), _as_double(vec_col).alias("v")
-        ).join(assigned.select(id_col, "cell"), id_col)
+        assigned = _vectors(emb, id_col, vec_col).join(
+            assigned.select(id_col, "cell"), id_col)
     else:
         assigned = _assign_cells(emb, n_cells, dim, seed, id_col, vec_col,
                                  cents=cents_df, cents_np=cents_np)
@@ -829,7 +802,7 @@ def semdedup(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
             # per-row norm BEFORE the self-join: higher-order fns evaluate
             # interpreted, so 3 folds/pair would dominate (the same lesson
             # embedding_neardup_pairs documents) — 1 fold/pair instead
-            F.sqrt(_dot("v", "v")).alias("vnorm"),
+            _norm("v").alias("vnorm"),
             F.round(_dot("v", "c") / F.sqrt(_dot("v", "v") * _dot("c", "c")), 6)
             .alias("cent_cos"),
         )
@@ -839,13 +812,10 @@ def semdedup(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
                     F.col("v").alias("va"), F.col("vnorm").alias("na"))
     b = base.select(F.col(id_col).alias("id_b"), "cell",
                     F.col("v").alias("vb"), F.col("vnorm").alias("nb"))
-    cos = F.round(
-        F.expr("aggregate(zip_with(va, vb, (x, y) -> x * y), 0D, (s, v) -> s + v)")
-        / (F.col("na") * F.col("nb")), 6)
     pairs = (
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cos)
+        .withColumn("cosine", _cosine("va", "vb", "na", "nb"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b")
     )

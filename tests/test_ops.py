@@ -474,6 +474,17 @@ def test_multimodal_real_decoders(spark):
     assert parsed is not None and parsed[0] == 1 and parsed[1] == 1
 
 
+def test_decode_wav_cut_mid_sample():
+    # a 16-bit data chunk cut at an odd byte decodes its whole samples,
+    # exactly like the cut one byte earlier
+    from docling_spark.ops.multimodal import _decode_wav, synth_wav
+
+    wav = synth_wav(np.random.RandomState(0), sr=8000, duration_s=0.5)
+    odd, even = _decode_wav(wav[:-1]), _decode_wav(wav[:-2])
+    assert len(even[0]) == 3_999
+    assert np.array_equal(odd[0], even[0]) and odd[1:] == even[1:]
+
+
 def test_dup_components_star_matches_driver(spark, monkeypatch):
     # the driver union-find and the star contraction (forced by a pair
     # bound of 0) must produce identical components on an arbitrary mixed
