@@ -44,6 +44,16 @@ DataFrame ends the chain: `select`, `join`, `filter`, `observe` and
 (`cache()`/`persist()` return the same object) is read from its cache
 instead of recomputed. Every batch function is per row or per document, so
 chaining does not change the output.
+
+**Filtering below a chain.** Every map emits each output row under its
+input row's `doc_id` (enrich and the span stages do; a map that renames or
+rewrites `doc_id` must not be chained under a filter). So a filter that
+keeps or drops rows by `doc_id` alone commutes with the chain:
+`filter_below(df, f)` applies `f` to the chain's input and runs the chain's
+batch functions over what it keeps, and the result is still a chain. That
+is how `neardup_curation` anti-joins its losers below `enrich`, and the
+chunker then chains on: the losers are never enriched or chunked. It
+applies only to an unpersisted chain whose input has a `doc_id` column.
 """
 
 from __future__ import annotations
@@ -60,7 +70,7 @@ DocFn = Callable[[object, List[tuple]], Sequence[tuple]]
 RowFn = Callable[..., Sequence[tuple]]
 BatchFn = Callable[[pa.RecordBatch], pa.RecordBatch]
 
-# attribute a `map_batches` output DataFrame carries: (input, batch functions)
+# attribute a `map_batches` output DataFrame carries: (input, batch functions, schema)
 _CHAIN = "_docmap_chain"
 
 
@@ -176,14 +186,34 @@ def map_batches(df, batch_fn: BatchFn, schema):
     and then its own in the same `mapInArrow` over the earlier input: one
     Python worker per task instead of one per map. Every batch function is
     per row, so the output is the same."""
+    chain = _live_chain(df)
+    src, fns = (chain[0], chain[1]) if chain is not None else (df, ())
+    return _chain(src, fns + (batch_fn,), schema)
+
+
+def filter_below(df, f):
+    """`f` (DataFrame → DataFrame that keeps or drops rows by `doc_id`
+    alone) applied below `df`'s map chain: the chain's batch functions run
+    again over `f(chain input)`, and the result is still a chain. None when
+    `df` is not an unpersisted `map_batches` output or its chain's input has
+    no `doc_id`; the caller then applies `f` to `df` itself. Exact because
+    every map emits each output row under its input row's `doc_id`."""
+    chain = _live_chain(df)
+    if chain is None or "doc_id" not in chain[0].columns:
+        return None
+    return _chain(f(chain[0]), chain[1], chain[2])
+
+
+def _live_chain(df):
+    """`df`'s (input, batch functions, schema) when it is an unpersisted
+    `map_batches` output, else None."""
     from pyspark import StorageLevel
 
     chain = df.__dict__.get(_CHAIN)
-    if chain is not None and df.storageLevel == StorageLevel.NONE:
-        src, fns = chain[0], chain[1] + (batch_fn,)
-    else:
-        src, fns = df, (batch_fn,)
+    return chain if chain is not None and df.storageLevel == StorageLevel.NONE else None
 
+
+def _chain(src, fns, schema):
     def gen(batches):
         for rb in batches:
             for fn in fns:
@@ -191,7 +221,7 @@ def map_batches(df, batch_fn: BatchFn, schema):
             yield rb
 
     out = src.mapInArrow(gen, schema=schema)
-    out.__dict__[_CHAIN] = (src, fns)
+    out.__dict__[_CHAIN] = (src, fns, schema)
     return out
 
 

@@ -828,7 +828,12 @@ def render_azure(payload: str, indent: "int | None" = None) -> str:
     json.dumps(ensure_ascii=False, indent=indent) byte-for-byte."""
     import json as _json
 
-    d = _az_dict(_json.loads(payload) if isinstance(payload, str) else payload)
+    if isinstance(payload, str):
+        try:
+            payload = _json.loads(payload)
+        except (ValueError, RecursionError):  # truncated, or nested past the parser's stack
+            payload = None
+    d = _az_dict(payload)
     pages = _az_dict(d.get("pages"))
     texts = _az_list(d.get("texts"))
     tables = _az_list(d.get("tables"))

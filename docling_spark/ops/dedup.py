@@ -28,7 +28,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from docling_spark.docmap import arrow_schema, map_batches
+from docling_spark.docmap import arrow_schema, filter_below, map_batches
 from docling_spark.ops import portable as P
 
 # Default LSH geometry, shared with the DuckDB oracles. MinHash runs over
@@ -494,16 +494,29 @@ def neardup_curation(docs: DataFrame, pairs: DataFrame,
     to the corpus), then one left ANTI-join of the corpus against the
     non-representative members. Under `dup_components`' driver bound the
     components are a local relation of known size, so the loser side is
-    broadcast and the corpus is not shuffled at all. `algorithm` accepts
-    only "auto" and is kept for existing callers. Returns the curated frame
-    with the input columns unchanged."""
+    broadcast and the corpus is not shuffled at all. When `docs` is an
+    unpersisted per-document map chain (`enrich(read)`) keyed by `doc_id`,
+    the anti-join sits below the chain's maps (`docmap.filter_below`): the
+    losers are never mapped, and a later map (the chunker) chains on, so the
+    whole job is one Python map. `algorithm` accepts only "auto" and is kept
+    for existing callers. Returns the curated frame with the input columns,
+    `id_col` first as a USING join puts it."""
     if algorithm != "auto":
         raise ValueError(f'algorithm must be "auto", got {algorithm!r}')
     comps = dup_components(pairs, id_a=id_a, id_b=id_b)
     losers = comps.filter(F.col("doc_id") != F.col("component_id")).select(
         F.col("doc_id").alias(id_col)
     )
-    return docs.join(losers, id_col, "left_anti")
+
+    def anti(df: DataFrame) -> DataFrame:
+        return df.join(losers, id_col, "left_anti")
+
+    kept = None
+    # the chain keeps its own column order, which is the join's only when
+    # the id already leads
+    if id_col == "doc_id" and docs.columns[0] == id_col:
+        kept = filter_below(docs, anti)
+    return anti(docs) if kept is None else kept
 
 
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",

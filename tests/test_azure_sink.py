@@ -217,3 +217,20 @@ def test_azure_sink_spark_matches_render_azure(spark):
     assert out.columns == ["doc_id", "azure"]
     got = {r["doc_id"]: r["azure"] for r in out.collect()}
     assert got == {d: render_azure(p) for d, p in payloads}
+
+
+def test_azure_sink_renders_unparsable_payload_empty(spark):
+    # a payload json.loads rejects (nested past its recursion limit, or cut
+    # short) renders as the empty layout, like a null one, and the rows
+    # around it are unchanged
+    from docling_spark.operators.serialize import azure_sink, render_azure
+
+    good = json.dumps(_group_chain(2))
+    payloads = [("good1", good), ("deep", "[" * 2000 + "]" * 2000),
+                ("cut", good[: len(good) // 2]), ("good2", good)]
+    df = spark.createDataFrame(payloads, "doc_id string, payload string")
+    got = {r["doc_id"]: r["azure"] for r in azure_sink(df).collect()}
+    assert len(got) == 4
+    assert got["good1"] == got["good2"] == render_azure(good)
+    assert json.loads(got["good1"])["paragraphs"]
+    assert got["deep"] == got["cut"] == render_azure(None)

@@ -175,3 +175,27 @@ def test_chained_maps_equal_separate_maps(spark, corpus_path):
     assert len(separate[2]) > 60  # several chunks per document
     assert any(r["mh_0"] is not None for r in chained[1])
     assert chained == separate
+
+
+def test_curation_below_chain_equals_curation_of_checkpoint(spark, corpus_path):
+    """neardup_curation over the chained extract → enrich (anti-join below
+    the maps) gives the same rows, columns and column order as over the
+    localCheckpointed enrich output, and so do the chunks of each."""
+    from docling_spark.operators.enrich import enrich
+    from docling_spark.operators.hybrid_chunker import hybrid_chunk_sink
+    from docling_spark.ops.dedup import neardup_curation
+    from docling_spark.pipeline import extract
+
+    ids = sorted(r[0] for r in spark.read.parquet(corpus_path).select("doc_id").collect())
+    pairs = spark.createDataFrame([(ids[0], ids[1]), (ids[1], ids[2]), (ids[7], ids[30])],
+                                  "id_a string, id_b string")
+
+    def run(cut):
+        kept = neardup_curation(cut(enrich(extract(spark.read.parquet(corpus_path)))), pairs)
+        chunks = hybrid_chunk_sink(kept)
+        return kept.columns, kept.collect(), chunks.columns, chunks.collect()
+
+    below = run(lambda df: df)
+    above = run(lambda df: df.localCheckpoint())
+    assert len(below[1]) == 57 and len(below[3]) > 57
+    assert below == above

@@ -324,3 +324,55 @@ def test_map_chain_ends_at_cache_checkpoint_and_join(spark):
     joined = enriched.join(enriched.select("doc_id"), "doc_id")
     plan = _plan(markdown_sink(joined))
     assert plan.count("MapInArrow") == 3, plan  # enrich on each side, then markdown
+
+
+def _loser_pairs(spark):
+    return spark.createDataFrame([("d1", "d2")], "id_a string, id_b string")
+
+
+def test_curation_filters_below_map_chain(spark):
+    """neardup_curation over an unpersisted map chain anti-joins the losers
+    below the chain's maps (docmap.filter_below), so the chunker chains on:
+    scan → broadcast LeftAnti → one MapInArrow, no shuffle."""
+    from docling_spark.operators.enrich import enrich
+    from docling_spark.operators.hybrid_chunker import hybrid_chunk_sink
+    from docling_spark.ops.dedup import neardup_curation
+
+    plan = _plan(hybrid_chunk_sink(neardup_curation(enrich(_span_docs(spark)),
+                                                    _loser_pairs(spark))))
+    assert plan.count("MapInArrow") == 1, plan
+    above, below = plan.split("BroadcastHashJoin", 1)
+    assert "MapInArrow" in above and "LeftAnti" in below.split("\n")[0], plan
+    assert "Exchange hashpartitioning" not in plan
+
+
+def test_curation_keeps_join_above_other_inputs(spark):
+    """A plain frame, a persisted chain, a chain whose input has no doc_id
+    and an id_col other than doc_id keep the anti-join on top of the input,
+    maps and all."""
+    from docling_spark.docmap import map_rows
+    from docling_spark.operators.enrich import enrich
+    from docling_spark.ops.dedup import neardup_curation
+
+    def same(*vals):
+        return [vals]
+
+    rows = spark.createDataFrame([("u1", "d1", "x"), ("u2", "d2", "y")],
+                                 "uid string, doc_id string, text string")
+    cached = enrich(_span_docs(spark)).cache()
+    cases = {
+        "plain": (_span_docs(spark), "doc_id", 0),
+        "persisted": (cached, "doc_id", 0),
+        "no_doc_id_input": (map_rows(rows.select(F.col("doc_id").alias("key"), "text"), same,
+                                     ("key", "text"), "doc_id string, text string"), "doc_id", 1),
+        "uid": (map_rows(rows, same, ("uid", "doc_id"), "uid string, doc_id string, text string"),
+                "uid", 1),
+    }
+    try:
+        for name, (df, id_col, maps) in cases.items():
+            plan = _plan(neardup_curation(df, _loser_pairs(spark), id_col=id_col))
+            above, below = plan.split("BroadcastHashJoin", 1)
+            assert "MapInArrow" not in above, (name, plan)
+            assert below.split("InMemoryTableScan")[0].count("MapInArrow") == maps, (name, plan)
+    finally:
+        cached.unpersist()
